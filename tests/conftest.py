@@ -15,8 +15,9 @@ PARITY_SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
 @pytest.fixture(scope="session")
 def spark():
     from tstables_spark import get_spark
+    from tstables_spark.session import DEFAULT_CPUS
 
-    s = get_spark("tstables_spark_tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    s = get_spark("tstables_spark_tests", cpus=DEFAULT_CPUS)
     yield s
 
 

@@ -410,12 +410,16 @@ def test_r9_new_queries_plan_shapes(spark, sf_dir):
     assert re.search(r"partial_", p)
 
 
-def test_r12_pagerank_and_doulion(spark, sf_dir):
+def test_r12_pagerank_and_doulion(spark, sf_dir, monkeypatch):
     """Round-12 scale contracts: (a) the DOULION triangle estimator's
     tolerance gate holds at fixture scale and is non-vacuous; (b) the
-    reworked pagerank iteration broadcasts the O(nodes) rank relation
+    distributed pagerank iteration (forced: sf0.01 is under the
+    single-task kernel bound) broadcasts the O(nodes) rank relation
     into the edge scan — the edge side must never hash-Exchange (the
     r11 100x OOM was exactly that per-iteration edge shuffle)."""
+    import tstables_spark.plans.analytics as A
+
+    monkeypatch.setattr(A, "_PR_KERNEL_HALF_EDGES_MAX", 0)
     row = QUERIES["graph_triangles_gate"](spark, sf_dir).collect()[0]
     assert row["n_triangles"] > 0  # non-vacuous at sf0.01
     assert row["within_tol"], row
@@ -433,14 +437,18 @@ def test_r12_pagerank_and_doulion(spark, sf_dir):
 def test_r12_big_graph_paths_identical(spark, sf_dir, monkeypatch):
     """The big-graph physical strategies (dense and wide axes both
     forced by dropping the two knobs to 1) must compute EXACTLY the
-    small-path answers: pagerank's streamed bucketed-edges +
+    small-path answers, and pagerank's pin+broadcast path exactly the
+    single-task kernel's: pagerank's streamed bucketed-edges +
     shuffled-rank iteration, and the DOULION estimator's streamed
     scratch-table pins. Also pins the big plan shape — iterations
     shuffle-hash with zero edge-side Exchange (ranks exchange INTO
     the bucket layout), no broadcast of the rank relation anywhere."""
     import tstables_spark.plans.analytics as A
 
+    pr_kernel = {tuple(r) for r in A.graph_pagerank(spark, sf_dir).collect()}
+    monkeypatch.setattr(A, "_PR_KERNEL_HALF_EDGES_MAX", 0)
     pr_small = {tuple(r) for r in A.graph_pagerank(spark, sf_dir).collect()}
+    assert pr_small == pr_kernel
     tri_small = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
     monkeypatch.setattr(A, "_PR_BROADCAST_NODES_MAX", 1)
     monkeypatch.setattr(A, "_EDGE_PIN_PAIRS_MAX", 1)
@@ -452,6 +460,127 @@ def test_r12_big_graph_paths_identical(spark, sf_dir, monkeypatch):
     assert {
         tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()
     } == tri_small
+
+
+def test_pagerank_single_task_kernel_is_lazy(spark, sf_dir):
+    """Under the kernel bound graph_pagerank builds one lazy plan: the
+    call submits at most the parquet-schema job (counted through a job
+    group on the status tracker), and the executed plan runs the
+    MapInPandas kernel with no checkpoint scan anywhere."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = "pagerank_construct_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, "graph_pagerank construction")
+    try:
+        df = QUERIES["graph_pagerank"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus in order: once a
+    # later job is visible, every job of the construction is too
+    probe = "pagerank_probe_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(probe, "listener drain")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(probe):
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in p
+    assert "Scan ExistingRDD" not in p
+
+
+def _pagerank_reference(edges):
+    """Python-int loop twin of the oracle's rounds: {node: pr12}."""
+    nodes = sorted({x for e in edges for x in e})
+    n = len(nodes)
+    deg = dict.fromkeys(nodes, 0)
+    for u, v in edges:
+        deg[u] += 1
+        deg[v] += 1
+    pr = dict.fromkeys(nodes, 10**12 // n)
+    for _ in range(3):
+        c = {x: pr[x] * 10**6 // deg[x] for x in nodes}
+        s = dict.fromkeys(nodes, 0)
+        for u, v in edges:
+            s[v] += c[u]
+            s[u] += c[v]
+        pr = {x: 150_000_000_000 // n + 85 * (s[x] // 10**6) // 100 for x in nodes}
+    return pr
+
+
+def test_pagerank_one_task_edge_cases(spark):
+    """The single-task kernel on synthetic half-edge frames: an empty
+    graph yields no rows and no error; a 3-node path graph gives the
+    hand-computed ranks; ids beyond 2^40 and a random graph match the
+    Python-int reference."""
+    import random
+
+    from tstables_spark.plans.analytics import pagerank_one_task
+
+    def run(edges):
+        df = spark.createDataFrame(edges, "u long, v long")
+        return {r.node: (r.degree, r.pr12) for r in pagerank_one_task(df).collect()}
+
+    assert run([]) == {}
+    # round 1 by hand: pr12 = 10^12 div 3 = 333333333333; the ends get
+    # 5*10^10 + 85*166666666666 div 100 = 191666666666, the middle
+    # 5*10^10 + 85*666666666666 div 100 = 616666666666
+    path = {1: (1, 209729166666), 2: (2, 580541666666), 3: (1, 209729166666)}
+    assert run([(1, 2), (2, 3)]) == path
+    big = 1 << 40
+    assert run([(big + 1, big + 2), (big + 2, big + 3)]) == {
+        big + k: v for k, v in path.items()
+    }
+    rng = random.Random(7)
+    ids = [rng.randrange(1 << 62) for _ in range(60)]
+    edges = sorted({tuple(sorted(rng.sample(ids, 2))) for _ in range(400)})
+    want = _pagerank_reference(edges)
+    got = run(edges)
+    assert {k: pr for k, (_, pr) in got.items()} == want
+
+
+def test_pagerank_footer_gate_and_measured_fallback(spark, sf_dir, tmp_path, monkeypatch):
+    """The kernel gate reads user_id min/max and row counts from the
+    events footers (file_stats) and runs no statistics job; a file
+    written without statistics falls back to the measured
+    _graph_scale_stats and still computes the same ranks."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    import tstables_spark.plans.analytics as A
+    from tstables_spark.plans._staging import file_stats
+    from tstables_spark.plans.tables import load
+
+    src = os.path.join(sf_dir, "events.parquet")
+    st = file_stats(load(spark, sf_dir, "events"), "user_id")
+    t = pq.read_table(src)
+    assert st.bytes == os.path.getsize(src) and st.rows == t.num_rows
+    assert (st.lo, st.hi) == (t["user_id"].to_pandas().min(), t["user_id"].to_pandas().max())
+
+    measured = []
+    real = A._graph_scale_stats
+
+    def counted(*args, **kwargs):
+        measured.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(A, "_graph_scale_stats", counted)
+    want = {tuple(r) for r in A.graph_pagerank(spark, sf_dir).collect()}
+    assert measured == []
+
+    pq.write_table(t, str(tmp_path / "events.parquet"), write_statistics=False)
+    assert file_stats(load(spark, str(tmp_path), "events"), "user_id").lo is None
+    df = A.graph_pagerank(spark, str(tmp_path))
+    assert measured == [1]
+    assert "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+    assert {tuple(r) for r in df.collect()} == want
 
 
 def test_r17_census_big_path_broadcast_gate(spark, sf_dir, monkeypatch):

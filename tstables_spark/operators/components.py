@@ -176,9 +176,12 @@ def connected_components(
         # partitioning match that keeps rounds exchange-free.
         stream = sym
         if bcast_rounds and i > 0:
+            # the pointer leg reads labels under its own alias, so the
+            # join below does not rely on Spark's self-join attribute
+            # deduplication to tell it from the labels build side
             stream = sym.union(
-                labels.select(
-                    F.col("component").alias("a"), F.col("node").alias("b")
+                labels.alias("ptr").select(
+                    F.col("ptr.component").alias("a"), F.col("ptr.node").alias("b")
                 )
             )
         nbr = (

@@ -7,6 +7,9 @@ staged catalog tables register a best-effort DROP — so repeated
 3-scale sweeps inside one session overwrite or reuse instead of
 accumulating orphan mkdtemp dirs and catalog entries.
 
+The free statistics the size gates read (``file_stats``: input file
+sizes and Parquet footers, no Spark job) live here too.
+
 Kept in a private helper (not a plans module) so importing it never
 registers queries.
 """
@@ -17,6 +20,7 @@ import atexit
 import shutil
 import tempfile
 import threading
+from typing import Any, NamedTuple
 
 _APP_ROOTS: dict[str, str] = {}
 
@@ -416,3 +420,61 @@ def wide_initial_partitions(spark):
             )
         },
     )
+
+
+class FileStats(NamedTuple):
+    """Free statistics of a file-backed frame (see ``file_stats``)."""
+
+    bytes: int
+    rows: int
+    lo: Any  # min of the requested column over every row group, or None
+    hi: Any  # max of it, or None
+
+
+def file_stats(df, column: str | None = None) -> FileStats | None:
+    """Summed sizes of ``df.inputFiles()``, their Parquet footer row
+    count and, for ``column``, the min/max over every non-empty row
+    group — read in this process from file metadata only: no Spark job,
+    no data page. The statistics describe the files under ``df``, not
+    ``df`` itself, so they bound any frame derived from them by
+    projection or filter.
+
+    ``lo``/``hi`` are None when the column is absent from a file or a
+    row group lacks min/max statistics (a writer with statistics off);
+    the whole result is None when a file cannot be read as Parquet
+    through pyarrow's filesystems, so callers fall back to a measured
+    statistic instead of trusting a partial one."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    size, rows, lo, hi = 0, 0, None, None
+    ranged = column is not None
+    try:
+        for uri in df.inputFiles():
+            fs, path = pafs.FileSystem.from_uri(uri)
+            size += fs.get_file_info(path).size
+            with fs.open_input_file(path) as f:
+                md = pq.ParquetFile(f).metadata
+            rows += md.num_rows
+            if not ranged:
+                continue
+            names = md.schema.names
+            if column not in names:
+                ranged = False
+                continue
+            i = names.index(column)
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                st = rg.column(i).statistics
+                if st is None or not st.has_min_max:
+                    ranged = False
+                    break
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+    except (OSError, ValueError):  # pyarrow's IO / ArrowInvalid errors
+        return None
+    if not ranged:
+        lo = hi = None
+    return FileStats(size, rows, lo, hi)

@@ -1066,7 +1066,7 @@ _CENSUS_PACK_ID_MAX = 1 << 31
 _EDGE_STAGE_PAIRS_MIN = 1_000_000
 
 # Big-graph bucketed edge tables, staged once per (applicationId,
-# sf_dir) — see graph_pagerank's scale note.
+# sf_dir) — see _pagerank_distributed.
 _PR_EDGES_STAGED: dict = {}
 
 
@@ -1091,102 +1091,152 @@ def _graph_scale_stats(b0: DataFrame, cap: int) -> tuple[int, int]:
     return n, int(pairs or 0)
 
 
+# Half-edge bound of the single-task PageRank kernel: above it the
+# distributed iteration runs. Sized by the kernel's Python worker,
+# whose peak RSS (VmHWM) was 557 MiB at 4M synthetic half edges over
+# 150k nodes and 231 MiB at 1M (numpy 1.26, Spark 4.1.2, 4-core x86
+# VM) — about 100 B per half edge over a 130 MiB base, which stays a
+# small fraction of a 15 GB host next to the engine's 8g JVM heap.
+_PR_KERNEL_HALF_EDGES_MAX = 4_000_000
+
+
+def _half_edge_bound(ev: DataFrame, cap: int) -> int | None:
+    """Upper bound on the capped co-occurrence graph's half edges from
+    the events files' footers (no Spark job): every edge joins two ids
+    of the user_id range, and every membership row pairs with at most
+    ``cap - 1`` others of its bucket, each pair counted from both ends.
+    None when the footers lack user_id min/max statistics."""
+    from tstables_spark.plans._staging import file_stats
+
+    st = file_stats(ev, "user_id")
+    if st is None or st.lo is None:
+        return None
+    span = st.hi - st.lo + 1
+    return min(span * (span - 1) // 2, st.rows * (cap - 1) // 2)
+
+
+def pagerank_one_task(edges: DataFrame) -> DataFrame:
+    """``graph_pagerank``'s integer rounds over the half-edge list
+    ``edges(u, v)`` (distinct, u < v) in ONE task: the list is
+    repartitioned to a single partition and a numpy kernel runs every
+    round on it. Returns ``(node, degree, pr12)``, no rows for an empty
+    list. Node ids are mapped to dense indices with ``np.unique``, so
+    any int64 id works; the scatter-add is an int64 ``np.add.at``, so
+    every sum is exact and order-independent."""
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        us, vs = [], []
+        for b in batches:
+            us.append(b["u"].to_numpy(np.int64))
+            vs.append(b["v"].to_numpy(np.int64))
+        m = sum(len(u) for u in us)
+        if m == 0:
+            return
+        nodes, idx, degree = np.unique(
+            np.concatenate(us + vs), return_inverse=True, return_counts=True
+        )
+        del us, vs
+        u, v = idx[:m], idx[m:]
+        n = len(nodes)
+        degree = degree.astype(np.int64)
+        pr12 = np.full(n, 10**12 // n, dtype=np.int64)
+        for _ in range(3):
+            c18 = pr12 * 1_000_000 // degree
+            s18 = np.zeros(n, dtype=np.int64)
+            np.add.at(s18, v, c18[u])
+            np.add.at(s18, u, c18[v])
+            pr12 = 150_000_000_000 // n + 85 * (s18 // 1_000_000) // 100
+        yield pd.DataFrame({"node": nodes, "degree": degree, "pr12": pr12})
+
+    return edges.select("u", "v").repartition(1).mapInPandas(
+        kernel, "node long, degree long, pr12 long"
+    )
+
+
 @query("graph_pagerank", oracle=_pagerank_oracle())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, 3 iterations) over the capped user
-    co-occurrence graph — the influence/centrality score behind spam
-    farms, seed-user selection, and crawl frontier prioritization, and
-    the engine's demonstration that ITERATIVE algorithms hash-match a
-    SQL oracle when the iteration contains NO float at all: ranks are
-    scale-12 fixed-point BIGINTs (the int-micros discipline of
-    _exact.py, at rank scale), contributions are computed at scale 18
-    by exact integer multiply-then-floor-divide (pr12·10⁶ div degree —
-    bounded by 10¹⁸ since Σpr = 1, so no int64 overflow), summed as
-    BIGINTs (order-independent), and the damping step is again integer
-    (85·(s18 div 10⁶) div 100). The earlier double→DECIMAL(38,18)
-    design was vulnerable to the engines' differing double→decimal
-    conversions (Spark via shortest decimal string, DuckDB numeric —
-    ±1 at the 18th digit per term, which a high-degree node's sum can
-    push across a rounding boundary); integers cannot diverge. Only
-    the final report divides (one exact IEEE op, pr12 < 2⁵³) and
-    rounds at 6dp.
+    co-occurrence graph (``cooccurrence_edges``, cap 256).
 
-    Scale shape (r12 rework — the 8g-box fix): the edge derivation is
-    graph_degree_dist's (DISTINCT memberships -> capped self-join ->
-    DISTINCT edges), materialized ONCE with an eager serialized
-    localCheckpoint of the HALF edge list (u < v; the r11 100x sweep
-    OOM'd pinning 2|E|); both directions derive lazily from the pin.
-    The r11 form still paid one edge-sized SHUFFLE per iteration (the
-    src-keyed sort-merge join of 2|E| message rows against the rank
-    relation) plus a per-iteration 2|E| re-scan to rebuild deg — the
-    per-iteration state SCALE.md measured OOMing the 8g box at 100x
-    (~1.2B directed rows). Now the O(nodes) relations are the only
-    shuffled/pinned state: deg is computed once and pinned (O(nodes)),
-    ranks are eagerly checkpointed each round (O(nodes), also the
-    lineage cut), and the physical strategy is picked on TWO cheap
-    collected statistics (the AQE spirit; every path computes
-    identical integer ranks) because a graph can blow up on two
-    INDEPENDENT axes — nodes (wide) and edges (dense); the measured
-    100x fixture is dense: 150k nodes x 541M capped pair mass:
+    Integer contract: ranks are scale-12 fixed-point BIGINTs and every
+    step is an integer floor division, exactly as the oracle writes
+    them — ``pr12 = 10¹² div n``; per round ``c18 = pr12·10⁶ div
+    degree`` per source node, ``s18`` = the BIGINT sum of ``c18`` over
+    each node's neighbours, ``pr12 = 1.5·10¹¹ div n + 85·(s18 div 10⁶)
+    div 100``. No float enters the iteration (c18 ≤ 10¹⁸, so no int64
+    overflow), so every strategy and the oracle produce identical
+    integers; only the final report divides once (exact in IEEE, as
+    pr12 < 2⁵³) and rounds at 6 dp, in Spark. Every node has degree ≥ 1, so there is no dangling mass.
 
-    - EDGE layout, picked on the capped pair-mass bound (one
-      O(buckets) aggregate): under _EDGE_PIN_PAIRS_MAX the half-edge
-      list pins via serialized localCheckpoint (the fast fixture
-      path); above it the pin itself is the OOM — checkpoint
-      materialization holds one serialized per-task block in heap
-      simultaneously (~10 GB at 100x; the r11 GCLocker signature,
-      re-measured r12 three ways) — so the DIRECTED edge list is
-      instead staged ONCE per (app, sf) as a bucketed-by-src scratch
-      table, STREAMED from the derivation into files (a constant-
-      memory local sort + write per task; the join_bucketed
-      discipline). deg then comes off the bucketed scan with zero
-      exchange, and nothing edge-sized ever shuffles, pins, or sits
-      on the heap again.
-    - RANK join, picked on the node count: broadcast under
-      _PR_BROADCAST_NODES_MAX (MBs where the r11 shuffle was tens of
-      GB; the fixture and bench path at every scale measured), else a
-      SHUFFLE-HASH join that exchanges ONLY the O(nodes) rank
-      relation into the bucket layout (per-task build map = one rank
-      bucket), with the O(nodes) deg/rank pins dropped to DISK_ONLY —
-      at wide-graph scale four memory-first O(nodes) pins per run
-      accumulate in heap storage faster than the async ContextCleaner
-      reaps dead generations.
+    Strategies, picked without a Spark job when the events footers
+    carry user_id statistics:
 
-    The dst-keyed sum is map-side combined (partial aggregation,
-    spill-safe) in both paths. Every node in the edge set has degree
-    >= 1, so no dangling-mass term is needed; isolated users (no
-    co-occurrence) are out of scope by construction. The n_nodes
-    collect is a 1-row contract-bounded aggregate (the repo's collect
-    discipline)."""
+    - single task, when the footer bound on half edges
+      ``min(C(user_id max − min + 1, 2), rows·(cap−1)/2)`` is at most
+      _PR_KERNEL_HALF_EDGES_MAX (4M; the kernel's Python worker peaked
+      at 557 MiB RSS there): the raw memberships feed
+      ``cooccurrence_edges`` and ``pagerank_one_task`` runs all rounds
+      in one numpy kernel. The query stays lazy (no construction job
+      beyond the parquet schema read) and executes as one scan, three
+      exchanges and the kernel task. The bound is 11k at sf0.01 and
+      1.1M at sf0.1; the 100x fixture (150k users, 10M rows) is far
+      above it.
+    - distributed, above it. Two measured 1-row statistics
+      (``_graph_scale_stats``) steer two independent axes. Edge
+      layout: under _EDGE_PIN_PAIRS_MAX capped pair mass the half-edge
+      list is a serialized localCheckpoint; above it the directed list
+      is staged once per (app, sf_dir) as a table bucketed by src, so
+      deg and every round's join read it with no edge-side exchange.
+      Rank join: under _PR_BROADCAST_NODES_MAX nodes the per-node
+      contribution relation is broadcast; above it it shuffle-hash
+      joins into the bucket layout and the O(nodes) pins go DISK_ONLY.
+      Each round pins its ranks (lineage cut), so construction runs
+      one job per round plus the pins and statistics.
+
+    Footers without user_id statistics fall back to the measured pair
+    mass of ``_graph_scale_stats`` as the half-edge bound."""
     ev = load(spark, sf_dir, "events")
-    b0 = ev.select(
+    mem = ev.select(
         "user_id", F.expr(epoch_floor_div("unix_micros(ts)", 600000000)).alias("bucket")
-    ).distinct()
-    # Strategy knobs BEFORE any edge-sized materialization (cheap
-    # 1-row aggregates; flipping to the big path slightly early is
-    # harmless, flipping late is an OOM): node count picks the rank
-    # join (broadcast vs shuffled), pair mass picks the edge layout
-    # (checkpoint pin vs streamed bucketed table) — INDEPENDENT
-    # constraints: the measured 100x fixture is 150k nodes x 541M
-    # capped pair mass (dense, not wide), so it broadcasts ranks AND
-    # streams edges.
-    n_est, pair_est = _graph_scale_stats(b0, cap=256)
+    )
+    b0 = mem.distinct()
+    stats = None
+    half_edges = _half_edge_bound(ev, cap=256)
+    if half_edges is None:
+        stats = _graph_scale_stats(b0, cap=256)
+        half_edges = stats[1]
+    if half_edges <= _PR_KERNEL_HALF_EDGES_MAX:
+        ranks = pagerank_one_task(cooccurrence_edges(mem, cap=256))
+    else:
+        stats = stats or _graph_scale_stats(b0, cap=256)
+        ranks = _pagerank_distributed(spark, sf_dir, b0, *stats)
+    return ranks.select(
+        F.col("node").alias("user_id"),
+        "degree",
+        F.round(F.col("pr12") / F.lit(1000000000000.0), 6).alias("pagerank"),
+    )
+
+
+def _pagerank_distributed(
+    spark: SparkSession, sf_dir: str, b0: DataFrame, n_est: int, pair_est: int
+) -> DataFrame:
+    """graph_pagerank's distributed strategies over distinct memberships
+    ``b0`` with their measured ``_graph_scale_stats``; returns
+    ``(node, degree, pr12)``."""
     big_nodes = n_est > _PR_BROADCAST_NODES_MAX
     big_edges = pair_est > _EDGE_PIN_PAIRS_MAX
     edges = cooccurrence_edges(b0, cap=256)
     if big_edges:
-        # Stage the directed edge list bucketed by src — STREAMED from
-        # the derivation into files, never pinned: a corpus-sized
-        # localCheckpoint builds per-task serialized blocks (64 MB G1
-        # humongous chunks) whose concurrent unroll is exactly the 8g
-        # GCLocker death SCALE.md r11/r12 measured; a bucketed write is
-        # a constant-memory local sort + stream per task. Every
-        # iteration's join then exchanges only the O(nodes) rank side
-        # into this layout — see the scale note. Staged ONCE per
-        # (app, sf) like _nsw_staged_index: the relation is a pure
-        # function of the input, repeated invocations re-walk the
-        # staged files (the steady state the staging exists for), and
-        # re-writing GBs per run exhausted the sweep box's disk.
+        # Stage the directed edge list bucketed by src, streamed into
+        # files rather than pinned: a corpus-sized localCheckpoint holds
+        # one serialized block per task in heap at once (the 8g OOM in
+        # SCALE.md), a bucketed write is a constant-memory sort + stream
+        # per task. Staged once per (app, sf_dir): the relation is a
+        # pure function of the input, and re-writing GBs per call
+        # exhausts disk.
         key = (spark.sparkContext.applicationId, sf_dir)
         tag = _PR_EDGES_STAGED.get(key)
         if tag is None:
@@ -1220,14 +1270,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             eh.select(F.col("v").alias("src"), F.col("u").alias("dst"))
         )
     # deg is O(nodes): pin once instead of re-deriving it from a 2|E|
-    # scan+shuffle inside every iteration's join leg. In the big-edge
-    # branch the agg comes off the bucketed scan with ZERO exchange
-    # (the scan already satisfies the clustering). The storage level
-    # honors the big_nodes knob like the per-iteration rank pins: a
-    # wide-but-sparse graph (nodes above the broadcast bound, pair
-    # mass under the pin bound) keeps O(nodes) pins DISK_ONLY — a
-    # memory-first pin is exactly the accumulation pattern the scale
-    # note above says OOMs (ADVICE r12).
+    # scan + shuffle in every round's join. On the bucketed layout the
+    # aggregate has no exchange. Wide graphs keep O(nodes) pins
+    # DISK_ONLY: memory-first pins accumulate in heap faster than the
+    # ContextCleaner reaps dead generations.
     deg = (
         de.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -1243,26 +1289,16 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", "degree", F.expr(f"1000000000000L div {n}L").alias("pr12")
     )
     for _ in range(3):
-        # O(nodes) eager pin: cuts the iteration lineage AND feeds the
-        # rank side of the join below from materialized rows. At
-        # big-node scale the pins go DISK_ONLY: each O(nodes) pin is
-        # ~hundreds of MB serialized and the iteration makes four per
-        # run — memory-first pins accumulate in heap storage faster
-        # than the async ContextCleaner reaps dead generations
-        # (measured OOM shape, SCALE.md r12); a disk-only pin bounds
-        # heap residency at zero for a ~100 ms re-read per consumer.
+        # O(nodes) eager pin: cuts the iteration lineage and feeds the
+        # rank side of the join from materialized rows.
         rk = ranks.localCheckpoint(
             eager=True,
             storageLevel=StorageLevel.DISK_ONLY
             if big_nodes
             else StorageLevel.MEMORY_AND_DISK,
         )
-        # Per-SRC contribution precompute (r18, §2.3): pr12·10⁶ div
-        # degree depends only on the src node, so evaluate it ONCE per
-        # node on the O(nodes) side instead of once per directed edge
-        # (2|E| 64-bit mul+divs per iteration at 100x), and ship the
-        # narrower (node, c18) relation into the join — same integer
-        # per edge row, bit-identical sums.
+        # c18 depends only on the src node: evaluate it once per node
+        # on the O(nodes) side, not once per directed edge.
         rks = rk.select("node", F.expr("pr12 * 1000000L div degree").alias("c18"))
         rkj = rks.hint("shuffle_hash") if big_nodes else F.broadcast(rks)
         contrib = de.join(rkj, de["src"] == rkj["node"]).select("dst", "c18")
@@ -1276,11 +1312,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"150000000000L div {n}L + 85L * (s18 div 1000000L) div 100L"
             ).alias("pr12"),
         )
-    return ranks.select(
-        F.col("node").alias("user_id"),
-        "degree",
-        F.round(F.col("pr12") / F.lit(1000000000000.0), 6).alias("pagerank"),
-    )
+    return ranks
 
 
 @query(

@@ -490,8 +490,8 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Above this SCAN-ESTIMATED corpus size (compressed parquet bytes from
-# the file index — a driver-side statistic, NO job) lm_kn_score
+# Above this corpus size (summed compressed sizes of the input files,
+# _staging.file_stats — file metadata only, NO job) lm_kn_score
 # stream-pins its bigram-type relation into a scratch table so the
 # model branches read materialized rows instead of re-deriving the
 # type aggregate (a corpus scan each). Below it the aggregate stays
@@ -602,12 +602,15 @@ def lm_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     task ~1.1 s, strictly fewer jobs.
 
     Scale knob (§3.1): above _KN_PIN_BYTES_MIN of compressed corpus
-    (a FREE driver-side file-index statistic — no gate job) the type
+    (summed input file sizes from file metadata — no gate job; a
+    corpus whose files pyarrow cannot read stays in-plan) the type
     relation stream-pins into a scratch table, cutting the nb branch's
     corpus re-scan and giving the windows/scoring join real stats;
     both paths are constant-memory, so the cheap heuristic can only
     miss perf, not memory."""
     from pyspark.sql.window import Window
+
+    from tstables_spark.plans._staging import file_stats, stream_pin
 
     d = load(spark, sf_dir, "documents")
     toks = F.split(F.lower("text"), " ")
@@ -621,13 +624,10 @@ def lm_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = base.select("doc_id", F.explode(grams).alias("g")).select(
         "doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2")
     )
-    corpus_bytes = int(
-        d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
+    st = file_stats(d)
+    corpus_bytes = st.bytes if st is not None else 0
     bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     if corpus_bytes > _KN_PIN_BYTES_MIN:
-        from tstables_spark.plans._staging import stream_pin
-
         bg = stream_pin(bg, "kn_bg", cache_key=(sf_dir,))
     w1w = Window.partitionBy("w1")
     w2w = Window.partitionBy("w2")
