@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -237,6 +238,50 @@ def _group_task_times(spark, groups_of: dict) -> dict:
         return {}
 
 
+# A task-time diff is only meaningful between like runs: a baseline at
+# another sf, core count or rep count moves every query for reasons no
+# plan change explains (r18 committed an sf0.001 baseline and the next
+# sf0.1 run flagged 23 queries up to x32). These keys must all match.
+BASELINE_KEYS = ("sf", "cpus", "reps")
+# Only a run at this sf replaces the committed BENCH_TASKTIME.json.
+BASELINE_SF = 0.1
+
+
+def _git_sha() -> str | None:
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True, text=True, check=True
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return out.stdout.strip() or None
+
+
+def _task_flags(prev: dict, stamp: dict, tasktimes: dict) -> tuple[list, dict, str]:
+    """Queries whose summed task runtime moved >1.3x in either direction
+    against ``prev`` (the committed artifact) — task moved = plan or
+    kernel changed; wall alone moving = box. Sub-second noise is exempt
+    (|delta| must exceed 0.5 s). Returns (flags, prev task secs, "match"),
+    or ([], {}, "mismatch") when ``prev`` differs from ``stamp`` on any
+    of BASELINE_KEYS (or is missing)."""
+    if any(prev.get(k) != stamp[k] for k in BASELINE_KEYS):
+        return [], {}, "mismatch"
+    prev_tasks = {
+        n: v.get("task")
+        for n, v in prev.get("queries", {}).items()
+        if isinstance(v, dict) and v.get("task") is not None
+    }
+    flags = []
+    for n, cur in sorted(tasktimes.items()):
+        p = prev_tasks.get(n)
+        if not p or "task" not in cur:
+            continue
+        ratio = cur["task"] / p
+        if abs(cur["task"] - p) > 0.5 and (ratio > 1.3 or ratio < 1 / 1.3):
+            flags.append(f"{n}:x{ratio:.2f}")
+    return flags, prev_tasks, "match"
+
+
 def main() -> None:
     # Pre-Spark baseline gate (see LOAD_GATE): wait for a quiet box,
     # bounded, BEFORE the JVM exists so the reading is co-tenant only.
@@ -333,66 +378,60 @@ def main() -> None:
     except OSError:
         loadavg = None
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Round-over-round task-time diff (r15 verdict #6): the committed
-    # BENCH_TASKTIME.json is the PREVIOUS round's artifact until this
-    # run overwrites it — read it first and flag queries whose summed
-    # task runtime moved >1.3x in either direction (task moved = plan
-    # or kernel changed; wall alone moving = box). Sub-second noise is
-    # exempted (|delta| must exceed 0.5 s). The flag list rides the
-    # one-line metric (compact "name:xR.RR" strings, capped at 8 so
-    # the 2000-char tail rule holds); full prev/cur detail lands in
-    # the rewritten BENCH_TASKTIME.json.
-    prev_tasks: dict = {}
+    # Round-over-round task-time diff (r15 verdict #6) against the
+    # committed BENCH_TASKTIME.json, only when it was recorded at the
+    # same sf / cores / reps (see BASELINE_KEYS). The flag list rides
+    # the one-line metric (compact "name:xR.RR" strings, capped at 8 so
+    # the 2000-char tail rule holds); full prev/cur detail lands in the
+    # artifact.
+    stamp = {
+        "sf": sf_val,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "reps": BENCH_REPS,
+        "git_sha": _git_sha(),
+    }
     try:
         with open(TASKTIME_OUT) as f:
-            prev_tasks = {
-                n: v.get("task")
-                for n, v in json.load(f).get("queries", {}).items()
-                if isinstance(v, dict) and v.get("task") is not None
-            }
+            prev = json.load(f)
     except (OSError, ValueError):
-        prev_tasks = {}
-    task_flags = []
-    for n, cur in sorted(tasktimes.items()):
-        prev = prev_tasks.get(n)
-        if not prev or "task" not in cur:
-            continue
-        ratio = cur["task"] / prev
-        if abs(cur["task"] - prev) > 0.5 and (ratio > 1.3 or ratio < 1 / 1.3):
-            task_flags.append(f"{n}:x{ratio:.2f}")
+        prev = {}
+    task_flags, prev_tasks, baseline_status = _task_flags(prev, stamp, tasktimes)
     # Per-query task/cpu detail: committed file, referenced from the
-    # one-line metric (it cannot ride the line — see TASKTIME_OUT).
-    try:
-        with open(TASKTIME_OUT, "w") as f:
-            json.dump(
-                {
-                    "sf": sf_val,
-                    "reps": BENCH_REPS,
-                    "loadavg": loadavg,
-                    "load_gate": {
-                        "gate": LOAD_GATE,
-                        "baseline": baseline,
-                        "waited_sec": waited,
-                        "retried": retried,
-                        "load_at_loop": loads,
+    # one-line metric (it cannot ride the line — see TASKTIME_OUT). Only
+    # a BASELINE_SF run replaces it, so a quick low-sf run can never
+    # become the next run's baseline.
+    if sf_val == BASELINE_SF:
+        try:
+            with open(TASKTIME_OUT, "w") as f:
+                json.dump(
+                    {
+                        **stamp,
+                        "baseline": baseline_status,
+                        "loadavg": loadavg,
+                        "load_gate": {
+                            "gate": LOAD_GATE,
+                            "baseline": baseline,
+                            "waited_sec": waited,
+                            "retried": retried,
+                            "load_at_loop": loads,
+                        },
+                        "era_canary_sec": era_canary,
+                        "task_flags": task_flags,
+                        "prev_task_sec": {
+                            n: prev_tasks.get(n) for n in sorted(tasktimes)
+                        },
+                        "queries": {
+                            n: {"wall": timings[n], **tasktimes.get(n, {})}
+                            for n in timings
+                        },
                     },
-                    "era_canary_sec": era_canary,
-                    "task_flags": task_flags,
-                    "prev_task_sec": {
-                        n: prev_tasks.get(n) for n in sorted(tasktimes)
-                    },
-                    "queries": {
-                        n: {"wall": timings[n], **tasktimes.get(n, {})}
-                        for n in timings
-                    },
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-            f.write("\n")
-    except OSError:
-        pass
+                    f,
+                    indent=1,
+                    sort_keys=True,
+                )
+                f.write("\n")
+        except OSError:
+            pass
     print(
         json.dumps(
             {

@@ -1,0 +1,23 @@
+"""bench.py's task-time diff compares only like runs (same sf, cores, reps)."""
+
+from __future__ import annotations
+
+import bench
+
+
+def test_task_flags_only_against_matching_baseline():
+    stamp = {"sf": 0.1, "cpus": 4, "reps": 3, "git_sha": "b"}
+    prev = {
+        "sf": 0.1, "cpus": 4, "reps": 3, "git_sha": "a",
+        "queries": {"q_slow": {"task": 2.0}, "q_same": {"task": 2.0}, "q_tiny": {"task": 0.1}},
+    }
+    cur = {"q_slow": {"task": 4.0}, "q_same": {"task": 2.2}, "q_tiny": {"task": 0.4}}
+    flags, prev_tasks, status = bench._task_flags(prev, stamp, cur)
+    assert (flags, status) == (["q_slow:x2.00"], "match")
+    assert prev_tasks["q_slow"] == 2.0
+    # any differing key (or a baseline without the stamp) -> no diff at all
+    for key, other in (("sf", 0.001), ("cpus", 32), ("reps", 1)):
+        assert bench._task_flags({**prev, key: other}, stamp, cur) == ([], {}, "mismatch")
+    legacy = {k: v for k, v in prev.items() if k != "cpus"}
+    assert bench._task_flags(legacy, stamp, cur) == ([], {}, "mismatch")
+    assert bench._task_flags({}, stamp, cur) == ([], {}, "mismatch")

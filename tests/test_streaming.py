@@ -185,27 +185,39 @@ def test_compact_single_partition(spark):
 
 
 def test_compact_refuses_leftover_precompact(spark):
+    """A per-day ``__precompact`` marker from a crashed swap aborts the
+    compaction before ANY day is swapped, and the temp tree is removed."""
+    import pytest
+
     work = tempfile.mkdtemp(prefix="ts_compact2_")
     src, sink, ckpt = (os.path.join(work, d) for d in ("src", "sink", "ckpt"))
     _make_source_files(spark, src)
-    stream_src = spark.readStream.schema("ts timestamp, value double").parquet(src)
+    stream_src = spark.readStream.schema("ts timestamp, value double").option(
+        "maxFilesPerTrigger", "1"
+    ).parquet(src)
     ingest_stream(stream_src, sink, ckpt, watermark="1 hour", available_now=True).awaitTermination(120)
 
-    os.makedirs(sink + "__precompact", exist_ok=True)
+    def files_per_day():
+        return {
+            day: len(glob.glob(os.path.join(sink, day, "*.parquet")))
+            for day in ("date=2024-05-01", "date=2024-05-02")
+        }
+
+    before_files = files_per_day()
+    assert all(n > 1 for n in before_files.values())  # a swap would show
     before = spark.read.parquet(sink).count()
-    try:
+    os.makedirs(os.path.join(sink, "date=2024-05-01__precompact"))
+    with pytest.raises(IOError, match="leftover"):
         compact_series(spark, sink, files_per_day=1)
-        assert False, "expected IOError on leftover __precompact"
-    except Exception:
-        pass
-    # original data untouched by the aborted run
+    # no day was swapped and no rows were lost
+    assert files_per_day() == before_files
     assert spark.read.parquet(sink).count() == before
+    assert not glob.glob(os.path.join(work, "*__compacting"))
 
 
 def test_compact_preserves_series_meta(spark, tmp_path):
-    """Whole-table compaction must carry _ts_meta.json across the swap:
-    the series stays openable (r3 fix — the rewrite tree used to drop
-    the catalog file)."""
+    """Whole-table compaction leaves the root's _ts_meta.json alone:
+    the series stays openable with its schema and codec."""
     from datetime import datetime, timedelta, timezone
 
     from pyspark.sql import types as T
@@ -374,6 +386,37 @@ def test_compact_includes_batch_appends_on_streamed_table(spark, tmp_path):
     got = spark.read.parquet(sink)
     assert got.count() == 25, "compaction dropped batch-appended rows"
     assert got.agg(F.max("v")).collect()[0][0] == 104.0
+
+
+def test_upsert_includes_batch_appends_on_streamed_table(spark, tmp_path):
+    """upsert on a series written by both the streaming sink and batch
+    appends must not trust the sink log in its read: the swap would
+    otherwise delete the batch-appended rows of the days it rewrites."""
+    from datetime import datetime, timedelta, timezone
+
+    from pyspark.sql import types as T
+
+    from tstables_spark.tstable import TimeSeriesTable
+
+    t0 = datetime(2024, 9, 1, tzinfo=timezone.utc)
+    schema = T.StructType(
+        [T.StructField("ts", T.TimestampType()), T.StructField("v", T.DoubleType())]
+    )
+    t = TimeSeriesTable.create(spark, str(tmp_path), "s", schema)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(t0 + timedelta(minutes=i), float(i)) for i in range(20)], schema
+    ).write.parquet(src)
+    ingest_stream(
+        spark.readStream.schema(schema).parquet(src), t.path, str(tmp_path / "ckpt")
+    ).awaitTermination()
+    t.append(spark.createDataFrame(
+        [(t0 + timedelta(minutes=100 + i), float(100 + i)) for i in range(5)], schema
+    ))
+    t.upsert(spark.createDataFrame([(t0, -1.0)], schema))
+    got = t.to_df()
+    assert got.count() == 25, "upsert dropped batch-appended rows"
+    assert got.agg(F.sum("v")).collect()[0][0] == sum(range(1, 20)) - 1.0 + sum(range(100, 105))
 
 
 def test_v_pattern_multi_batch_exactly_once():

@@ -422,21 +422,41 @@ def test_upsert_rejects_map_columns(spark, root):
 def test_written_files_carry_ts_statistics(spark, root):
     """Engine-written parquet must use INT64 timestamps WITH row-group
     min/max stats — Spark's default INT96 encoding writes none, which
-    silently voids read_range's footer-skipping contract."""
+    silently voids read_range's footer-skipping contract. Upsert and
+    compaction must hold this even on a session whose conf is INT96
+    (e.g. an out-of-band compaction job that never opened the table)."""
     import glob
 
     import pyarrow.parquet as pq
 
+    from tstables_spark.streaming.ingest import compact_series
+
+    def assert_ts_stats():
+        files = glob.glob(os.path.join(root, "stats_series", "date=*", "*.parquet"))
+        assert files
+        for f in files:
+            md = pq.read_metadata(f)
+            ci = md.schema.names.index("ts")
+            assert md.row_group(0).column(ci).physical_type != "INT96"
+            st = md.row_group(0).column(ci).statistics
+            assert st is not None and st.has_min_max, f"no ts stats in {f}"
+
+    conf = "spark.sql.parquet.outputTimestampType"
+    start = datetime(2024, 3, 1, tzinfo=UTC)
     ts = TimeSeriesTable.create(spark, root, "stats_series", SCHEMA)
-    ts.append(_ticks(spark, datetime(2024, 3, 1, tzinfo=UTC), 48))
-    files = glob.glob(os.path.join(root, "stats_series", "date=*", "*.parquet"))
-    assert files
-    for f in files:
-        md = pq.read_metadata(f)
-        ci = md.schema.names.index("ts")
-        assert md.row_group(0).column(ci).physical_type != "INT96"
-        st = md.row_group(0).column(ci).statistics
-        assert st is not None and st.has_min_max, f"no ts stats in {f}"
+    ts.append(_ticks(spark, start, 48))
+    assert_ts_stats()
+    prior = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "INT96")
+        ts.upsert(_ticks(spark, start, 6))
+        assert_ts_stats()
+        spark.conf.set(conf, "INT96")
+        compact_series(spark, ts.path)
+        assert_ts_stats()
+    finally:
+        spark.conf.set(conf, prior)
+    assert ts.to_df().count() == 48
 
 
 def test_purge_before_drops_whole_days(spark, root):
@@ -656,9 +676,10 @@ def test_upsert_cross_date_identity_keeps_both_rows(spark, tmp_path):
 
 
 def test_compact_preserves_versions_and_codec(spark, tmp_path):
-    """Whole-table compaction must carry the _ts_versions registry
-    (version numbering may not restart) and must rewrite with the
-    series' persisted codec, not a hardcoded default."""
+    """Whole-table compaction must leave the root's _ts_meta.json and
+    _ts_versions registry in place (version numbering may not restart),
+    must rewrite with the series' persisted codec, not a hardcoded
+    default, and neither it nor upsert may leave a temp or backup dir."""
     from datetime import datetime, timedelta, timezone
     import glob
 
@@ -674,7 +695,10 @@ def test_compact_preserves_versions_and_codec(spark, tmp_path):
     tbl = TimeSeriesTable.create(spark, str(tmp_path), "c", df.schema, compression="gzip")
     tbl.append(df)
     v1 = tbl.snapshot()
+    meta_inode = os.stat(f"{tbl.path}/_ts_meta.json").st_ino
     compact_series(spark, tbl.path)  # default compression=None -> meta codec
+    # root metadata is left in place (never copied or re-created)
+    assert os.stat(f"{tbl.path}/_ts_meta.json").st_ino == meta_inode
     # version registry survived: next snapshot continues numbering
     v2 = tbl.snapshot()
     assert (v1, v2) == (1, 2)
@@ -688,3 +712,13 @@ def test_compact_preserves_versions_and_codec(spark, tmp_path):
     files = glob.glob(f"{tbl.path}/date=*/*.parquet")
     assert files and all(".gz.parquet" in f for f in files), files
     assert tbl.read_version(v2).count() == 50
+    tbl.upsert(df.where("v < 5").withColumn("v", F.col("v") + 100.0))
+    # neither rewrite leaves a temp dir or a swap backup behind
+    left = [
+        n for n in os.listdir(tmp_path) + os.listdir(tbl.path)
+        if any(m in n for m in ("__compacting", "__upserting", "__precompact"))
+    ]
+    assert left == []
+    got = tbl.read_range(t0, t0 + timedelta(minutes=49))
+    assert got.count() == 50
+    assert got.agg(F.sum("v")).collect()[0][0] == sum(range(50)) + 500.0

@@ -15,7 +15,7 @@ Scale shape per Lloyd round:
   make centroids — and therefore next-round assignments — run-to-run
   unstable; decimal sums are order-independent, so the whole iteration
   is reproducible on any cluster layout (same property the exactness
-  helpers in plans/_exact.py exploit).
+  helpers in tstables_spark/_exact.py exploit).
 
 Iteration count is a fixed small constant (Lloyd converges fast and
 training-data bucketing doesn't need the optimum); each round is two

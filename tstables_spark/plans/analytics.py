@@ -20,7 +20,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tstables_spark.plans._exact import exact_sum, sql_sum
+from tstables_spark._exact import exact_sum, sql_sum
 from tstables_spark.plans.registry import query
 from tstables_spark.plans._portable_sql import epoch_floor_div
 from tstables_spark.plans.tables import load

@@ -23,8 +23,8 @@ from tstables_spark.operators.similarity import (
     knn_graph,
     lsh_topk,
 )
-from tstables_spark.plans._exact import exact_sum as _exact_sum
-from tstables_spark.plans._exact import sql_sum as _sql_sum
+from tstables_spark._exact import exact_sum as _exact_sum
+from tstables_spark._exact import sql_sum as _sql_sum
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 
@@ -342,7 +342,7 @@ def embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift monitor between snapshots) needs. posexplode -> ONE
     dim-keyed aggregate: 64 partial rows per map task cross the
     shuffle, not the exploded scalars. Sums ride the decimal-exact
-    helpers (plans/_exact.py) so the cross-engine hash holds; mean and
+    helpers (tstables_spark/_exact.py) so the cross-engine hash holds; mean and
     variance are then composed with the SAME IEEE expression tree in
     both engines (identical operands -> identical doubles)."""
     emb = load(spark, sf_dir, "embeddings")

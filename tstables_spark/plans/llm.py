@@ -1514,7 +1514,7 @@ def doc_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized intermediate, one hash agg."""
     from pyspark.sql import Window as W
 
-    from tstables_spark.plans._exact import exact_sum
+    from tstables_spark._exact import exact_sum
 
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(

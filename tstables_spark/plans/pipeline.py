@@ -357,7 +357,7 @@ def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid vector, one row per (label, dimension):
     posexplode + grouped mean. The sum runs in DECIMAL(30,6) (the
-    plans/_exact.py trick) so it is order-independent and bit-identical
+    tstables_spark/_exact.py trick) so it is order-independent and bit-identical
     across engines despite Spark's partial-aggregate tree. Flat
     (label, pos, value) output rather than an array column: centroids
     feed the IVF coarse quantizer as a broadcast table, and flat rows

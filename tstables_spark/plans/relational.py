@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from tstables_spark.plans._exact import (
+from tstables_spark._exact import (
     exact_sum,
     exact_sum_distinct,
     sql_sum,

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tstables_spark.operators.groupmap import grouped_apply_in_pandas
-from tstables_spark.plans._exact import sql_sum
+from tstables_spark._exact import sql_sum
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 

@@ -29,7 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tstables_spark.plans._exact import sql_sum
+from tstables_spark._exact import sql_sum
 from tstables_spark.plans._portable_sql import (
     _KMV_K,
     _cms_cells,

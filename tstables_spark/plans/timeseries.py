@@ -17,7 +17,7 @@ from pyspark.sql import Window as W
 from tstables_spark.operators.asof import asof_join
 from tstables_spark.operators.rangejoin import banded_range_join
 from tstables_spark.operators.resample import resample_m4, resample_ohlc
-from tstables_spark.plans._exact import exact_sum, exact_wsum, sql_sum, sql_wsum
+from tstables_spark._exact import exact_sum, exact_wsum, sql_sum, sql_wsum
 from tstables_spark.plans._portable_sql import epoch_floor_div
 from tstables_spark.plans._staging import register_staged_table, scratch_dir
 from tstables_spark.plans.registry import query
@@ -130,8 +130,8 @@ def ts_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two files per day partition — the small-file state a micro-batched
     stream leaves behind), run the OPTIMIZE-style rewrite
     (streaming/ingest.py::compact_series — coalesces each day to one
-    ts-sorted file via a single (date, bucket) shuffle, swaps it in
-    with checked renames), then read a range back. The ORACLE is the
+    ts-sorted file via a single date shuffle, swaps each day in with
+    checked renames), then read a range back. The ORACLE is the
     plain range select on the fixture: the hash match proves compaction
     is lossless and the layout contract (pruned, inclusive range reads)
     survives the rewrite."""
@@ -1130,7 +1130,7 @@ def ts_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (value as price, the JSON props field ``k`` as size:
     exercises semi-structured extraction in the same pass). One partial
     +final hash aggregate; the price*volume sums use the decimal trick
-    (plans/_exact.py) so the final double division is bit-identical
+    (tstables_spark/_exact.py) so the final double division is bit-identical
     cross-engine. Zero-volume buckets are dropped (no 0/0)."""
     ev = load(spark, sf_dir, "events")
     vol = F.get_json_object("props", "$.k").cast("long")
@@ -1201,7 +1201,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score over each user's trailing 20 values — the
     standard streaming anomaly detector. Mean and variance come from
-    DECIMAL window sums (plans/_exact.py) divided as doubles, so both
+    DECIMAL window sums (tstables_spark/_exact.py) divided as doubles, so both
     engines compute bit-identical moments in any partition order; the
     E[x²]−µ² variance can round to a hair below zero on constant
     stretches, which the vv>0 guard maps to null identically on both
@@ -2496,7 +2496,7 @@ def ts_tick_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max-of-struct — open/close need no second window pass, and the
     bar agg reuses the window's (event_type) partitioning, so the sort
     output feeds the hash agg with NO extra exchange. Σ|value| rides
-    the decimal-exact sum (plans/_exact.py)."""
+    the decimal-exact sum (tstables_spark/_exact.py)."""
     ev = load(spark, sf_dir, "events")
     bars = ev.select(
         "event_type",

@@ -19,9 +19,20 @@ out-of-band — with the stream STOPPED or between availableNow runs
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from tstables_spark.tstable import (
+    _META_FILE,
+    DATE_COL,
+    _drop_sink_log,
+    _fs_exists,
+    _fs_read_text,
+    rewrite_days,
+)
 
 
 def ingest_stream(
@@ -69,65 +80,6 @@ def ingest_stream(
     return writer.start()
 
 
-def _checked_rename(fs, src, dst) -> None:
-    """fs.rename reports failure by RETURNING false (not raising) — e.g.
-    renaming onto an existing path, which RawLocalFileSystem 'handles' by
-    nesting the source inside the destination. Raise so a failed swap can
-    never cascade into deleting the original data."""
-    if not fs.rename(src, dst):
-        raise IOError(f"rename failed: {src} -> {dst}")
-
-
-def swap_date_partitions(spark: SparkSession, path: str, tmp: str, date_strs: list[str]) -> None:
-    """Swap rewritten ``date=`` dirs from ``tmp`` into ``path``, one
-    partition at a time, with the crash-safe rename protocol: the live
-    dir is first renamed to ``__precompact`` (a leftover one from a
-    crashed run aborts before any destructive step), the rewritten dir
-    renamed in, then the backup dropped. Also removes the streaming
-    sink's ``_spark_metadata`` commit log — it enumerates pre-rewrite
-    files, and a reader that trusts it would look for files the rewrite
-    replaced. MUST run with the writing stream stopped (or between
-    availableNow runs): a still-active FileStreamSink would recreate the
-    log at its next micro-batch listing ONLY that batch's files, after
-    which batch readers silently see a near-empty table."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    # Validate EVERY date's leftover marker before the first destructive
-    # step — a leftover found halfway through would otherwise abort after
-    # some days were already swapped and the commit log deleted.
-    for d in date_strs:
-        jold = hpath(f"{path}/date={d}__precompact")
-        if fs.exists(jold):
-            raise IOError(
-                f"leftover {path}/date={d}__precompact from a crashed "
-                "compaction; resolve it manually before re-running"
-            )
-    fs.delete(hpath(f"{path}/_spark_metadata"), True)
-    for d in date_strs:
-        part, tpart = f"{path}/date={d}", f"{tmp}/date={d}"
-        jpart, jtpart = hpath(part), hpath(tpart)
-        jold = hpath(part + "__precompact")
-        if not fs.exists(jtpart):
-            continue  # no rows for this date — nothing to swap
-        if fs.exists(jpart):
-            _checked_rename(fs, jpart, jold)
-        try:
-            _checked_rename(fs, jtpart, jpart)
-        except Exception:
-            # BEST-EFFORT roll back: put the live dir back so the
-            # partition never vanishes from the table — but never let a
-            # failing rollback mask the original error (a reoccupied
-            # destination would make the rollback rename fail too).
-            try:
-                if fs.exists(jold) and not fs.exists(jpart):
-                    fs.rename(jold, jpart)
-            except Exception:
-                pass
-            raise
-        fs.delete(jold, True)
-
-
 def compact_series(
     spark: SparkSession,
     path: str,
@@ -136,47 +88,34 @@ def compact_series(
     compression: str | None = None,
 ) -> None:
     """OPTIMIZE-style rewrite: coalesce each date partition's micro-batch
-    files down to ``files_per_day`` and restore the in-file ts sort.
+    files down to ``files_per_day`` ts-sorted files.
 
-    The shuffle key is (date, hash-bucket of ts): each (day, bucket)
-    pair lands wholly in one task, so every day produces at most
-    ``files_per_day`` sorted files regardless of day count — and the
-    rewrite parallelizes across days x buckets on a cluster.
+    ``dates=None`` compacts every day; ``dates=[...]`` only those days
+    (partition pruning keeps the read to them) — the cheap form to run
+    frequently on the hot days a stream is appending to. Both forms go
+    through ``tstable.rewrite_days``: the days are rewritten to
+    ``path + "__compacting"`` and swapped in one ``date=`` dir at a time,
+    so the series path never goes missing and a reader sees at most one
+    day missing between that day's two renames. Root files
+    (``_ts_meta.json``, ``_ts_versions/``) are not touched. A leftover
+    ``date=…__precompact`` marker from a crashed run for any rewritten
+    day aborts before the first rename.
 
-    ``dates=None`` compacts the whole table: the compacted tree is
-    written to the side and swapped in with two renames. Readers in the
-    brief window between them see a missing path — the documented gap
-    that motivates a transactional table format at 100 TB. Every rename's
-    boolean return is checked (Hadoop fs.rename reports failure by
-    returning false), and a leftover ``__precompact`` dir from a crashed
-    prior run aborts the swap before any destructive step.
-
-    ``dates=[...]`` compacts only those date partitions (partition
-    pruning keeps the read to just them) and swaps each ``date=`` dir
-    individually — the cheap path to run frequently on the hot days a
-    stream is appending to, with a per-partition (not whole-table)
-    reader-visible window.
-
-    Either way the streaming file-sink's ``_spark_metadata`` commit log
-    is dropped: it enumerates the pre-compaction files, and a reader
-    that trusts it would look for files the rewrite replaced. After the
-    first compaction the table is a plain parquet tree (batch readers
-    list the directory; the stream's own exactly-once bookkeeping lives
-    in its checkpoint, not the sink log) — the same trade a table-format
-    OPTIMIZE makes explicit. RUN WITH THE WRITING STREAM STOPPED (or
-    between availableNow runs): an active sink would recreate the log
-    listing only post-compaction batches, silently hiding every other
-    file from batch readers.
+    The streaming file-sink's ``_spark_metadata`` commit log is dropped:
+    it enumerates the pre-compaction files, and ``spark.read.parquet``
+    TRUSTS it when present — the rewrite's own read would skip
+    batch-appended files and the swap would then delete them. After the
+    first compaction the table is a plain parquet tree (the stream's
+    exactly-once bookkeeping lives in its checkpoint, not the sink log).
+    RUN WITH THE WRITING STREAM STOPPED (or between availableNow runs):
+    an active sink would recreate the log listing only post-compaction
+    batches, silently hiding every other file from batch readers.
 
     A9 knobs: ``compression=None`` (default) uses the codec persisted in
-    the series' ``_ts_meta.json`` (falling back to zstd for a bare
-    parquet tree), and the series' ``max_records_per_file`` cap is
-    applied to the rewrite — a compaction must not silently change the
-    storage contract ``create()`` promised."""
-    import json as _json
-
-    from tstables_spark.tstable import _META_FILE, _fs_exists, _fs_read_text
-
+    the series' ``_ts_meta.json`` (zstd for a bare parquet tree), and the
+    series' ``max_records_per_file`` cap is applied to the rewrite — a
+    compaction must not silently change the storage contract ``create()``
+    promised."""
     meta_codec, max_rpf = "zstd", None
     mpath = f"{path}/{_META_FILE}"
     # A bare parquet tree simply has no meta file; if the meta EXISTS,
@@ -184,78 +123,12 @@ def compact_series(
     # zstd/uncapped would be exactly the storage-contract change this
     # lookup exists to prevent.
     if _fs_exists(spark, mpath):
-        meta = _json.loads(_fs_read_text(spark, mpath))
+        meta = json.loads(_fs_read_text(spark, mpath))
         meta_codec = meta.get("compression", "zstd")
         max_rpf = meta.get("max_records_per_file")
     codec = compression if compression is not None else meta_codec
-    jvm0 = spark._jvm
-    hpath0 = jvm0.org.apache.hadoop.fs.Path
-    fs0 = hpath0(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    # Drop a streaming sink's _spark_metadata BEFORE the read, not just
-    # at swap time: spark.read.parquet TRUSTS the sink log when present
-    # and would list only log-registered files — batch-appended files
-    # would be excluded from the rewrite and then deleted with the old
-    # tree. (The stream must be stopped anyway — see above.)
-    fs0.delete(hpath0(f"{path}/_spark_metadata"), True)
+    _drop_sink_log(spark, path)
     df = spark.read.parquet(path)
     if dates is not None:
-        date_strs = [str(d) for d in dates]
-        df = df.where(F.col("date").cast("string").isin(date_strs))
-    tmp = path + "__compacting"
-    writer = (
-        df.repartition(F.col("date"), F.pmod(F.xxhash64("ts"), F.lit(files_per_day)))
-        .sortWithinPartitions("date", "ts")
-        .write.mode("overwrite")
-        .option("compression", codec)  # A9: series codec (from meta)
-        .partitionBy("date")
-    )
-    if max_rpf:
-        writer = writer.option("maxRecordsPerFile", str(max_rpf))
-    writer.parquet(tmp)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    jpath = hpath(path)
-    jtmp = hpath(tmp)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        if dates is not None:
-            swap_date_partitions(spark, path, tmp, date_strs)
-        else:
-            jold = hpath(path + "__precompact")
-            if fs.exists(jold):
-                raise IOError(
-                    f"leftover {path}__precompact from a crashed compaction; "
-                    "resolve it manually before re-running"
-                )
-            # A TimeSeriesTable series keeps its schema in _ts_meta.json
-            # at the root; the rewritten tree must carry it across the
-            # swap or the series becomes unopenable (data would survive,
-            # the catalog entry would not).
-            # ... and the _ts_versions snapshot registry: dropping it
-            # would RESTART version numbering, so a stale version handle
-            # could later silently alias a different snapshot. (The
-            # manifests' files are rewritten by this compaction, so the
-            # carried versions correctly fail read_version's
-            # missing-files check instead of lying.)
-            for entry in ("_ts_meta.json", "_ts_versions"):
-                jsrc = hpath(f"{path}/{entry}")
-                if fs.exists(jsrc):
-                    jvm.org.apache.hadoop.fs.FileUtil.copy(
-                        fs, jsrc, fs, hpath(f"{tmp}/{entry}"), False,
-                        spark._jsc.hadoopConfiguration(),
-                    )
-            _checked_rename(fs, jpath, jold)
-            try:
-                _checked_rename(fs, jtmp, jpath)
-            except Exception:
-                # best-effort roll back, keep original visible; never
-                # mask the original error with a rollback failure
-                try:
-                    if not fs.exists(jpath):
-                        fs.rename(jold, jpath)
-                except Exception:
-                    pass
-                raise
-            fs.delete(jold, True)
-    finally:
-        fs.delete(jtmp, True)
+        df = df.where(F.col(DATE_COL).cast("string").isin([str(d) for d in dates]))
+    rewrite_days(spark, path, df, "__compacting", codec, max_rpf, files_per_day)

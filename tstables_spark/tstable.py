@@ -172,17 +172,18 @@ def _fs_claim_new(spark: SparkSession, path: str) -> bool:
         raise
 
 
-def _fs_rename_checked(spark: SparkSession, src: str, dst: str) -> None:
-    """Non-overwriting rename; Hadoop reports failure by returning false,
-    so raise instead of letting a failed swap cascade. HDFS enforces the
-    no-overwrite itself; LocalFileSystem's rename silently replaces an
-    existing file, so an explicit exists-guard runs first (best-effort —
-    a true CAS needs a transactional table format)."""
-    fs, jsrc, jvm = _jfs(spark, src)
-    jdst = jvm.org.apache.hadoop.fs.Path(dst)
-    if fs.exists(jdst):
+def _rename_checked(fs, src, dst) -> None:
+    """Non-overwriting rename of Hadoop Path ``src`` to ``dst`` on ``fs``.
+
+    Hadoop reports a failed rename by RETURNING false, so raise instead
+    of letting a failed swap cascade into deleting live data. HDFS
+    refuses to overwrite by itself; LocalFileSystem silently replaces an
+    existing file and nests a directory source inside an existing
+    directory, so an explicit exists-guard runs first (best-effort — a
+    true CAS needs a transactional table format)."""
+    if fs.exists(dst):
         raise IOError(f"rename failed, destination exists: {src} -> {dst}")
-    if not fs.rename(jsrc, jdst):
+    if not fs.rename(src, dst):
         raise IOError(f"rename failed: {src} -> {dst}")
 
 
@@ -204,6 +205,118 @@ def _fs_rename_overwrite(spark: SparkSession, src: str, dst: str) -> None:
     opts = gw.new_array(Rename, 1)
     opts[0] = Rename.OVERWRITE
     fc.rename(jsrc, jdst, opts)
+
+
+# -- the one write path: layout writer + per-day swap -----------------------
+
+def _drop_sink_log(spark: SparkSession, path: str) -> None:
+    """Remove a streaming file sink's ``_spark_metadata`` log under
+    ``path``. ``spark.read.parquet`` TRUSTS the log when present and lists
+    only the files it registered, so a rewrite must drop it BEFORE its
+    read (else batch-appended files are left out of the rewrite and then
+    deleted by the swap) and again at swap time (the log lists files the
+    swap replaces)."""
+    fs, _, jvm = _jfs(spark, path)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_spark_metadata"), True)
+
+
+def _write_days(
+    df: DataFrame, path: str, mode: str, codec: str, max_rpf: int | None, files_per_day: int
+) -> None:
+    """Write ``df`` (series columns plus ``date``) in the store's layout:
+    one ``date=`` dir per UTC day, rows sorted by ``ts`` inside every file.
+
+    The shuffle key is ``date`` (each day's rows land in one task, so one
+    file per day per write), or ``(date, pmod(xxhash64(ts), n))`` when
+    ``files_per_day = n > 1`` so one heavy day spreads over n writer
+    tasks — the layout contract is only "sorted by ts within each file",
+    which any file count satisfies. ``codec`` / ``max_rpf`` are the
+    series' A9 knobs (parquet codec, rows-per-file cap)."""
+    # Spark's default INT96 timestamps carry NO row-group min/max, which
+    # would void read_range's footer skipping. Set here, not only in
+    # TimeSeriesTable.__init__, so an out-of-band compaction on a session
+    # that never opened the table still writes skippable files.
+    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    key = [F.col(DATE_COL)]
+    if files_per_day > 1:
+        key.append(F.pmod(F.xxhash64(TS_COL), F.lit(files_per_day)))
+    # Sort by (date, ts), not just ts: the dynamic-partition writer
+    # requires task rows ordered by the partition column and inserts its
+    # own UNSTABLE sort on `date` when they are not — which silently
+    # destroys the in-file ts order. Sorting by the full prefix satisfies
+    # the writer's requirement so no extra sort runs.
+    writer = (
+        df.repartition(*key)
+        .sortWithinPartitions(DATE_COL, TS_COL)
+        .write.mode(mode)
+        .partitionBy(DATE_COL)
+        .option("compression", codec)
+    )
+    if max_rpf:
+        writer = writer.option("maxRecordsPerFile", str(max_rpf))
+    writer.parquet(path)
+
+
+def rewrite_days(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    suffix: str,
+    codec: str,
+    max_rpf: int | None,
+    files_per_day: int = 1,
+) -> None:
+    """Replace the day partitions ``df`` holds, one day at a time.
+
+    ``df`` is written with ``_write_days`` to ``path + suffix``; every
+    ``date=`` dir that write produced is then swapped in: the live dir is
+    renamed to ``date=…__precompact``, the rewritten dir renamed in, the
+    backup dropped. Days the rewrite did not produce and the root's own
+    files (``_ts_meta.json``, ``_ts_versions/``) are never touched, so the
+    series path never goes missing; a reader sees at most one day missing
+    between that day's two renames. The temp dir is removed in every case.
+
+    A ``__precompact`` marker left by a crashed run for ANY of the days
+    aborts before the first rename. A failed rename-in puts the live dir
+    back (best-effort; never masking the original error). The streaming
+    sink's log is dropped before the swap (``_drop_sink_log``; callers
+    drop it before building ``df`` too). MUST run with any writing stream
+    stopped (or between availableNow runs): an active FileStreamSink
+    would recreate the log listing only its next batch, hiding every
+    other file from readers."""
+    tmp = path + suffix
+    fs, _, jvm = _jfs(spark, path)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    try:
+        _write_days(df, tmp, "overwrite", codec, max_rpf, files_per_day)
+        days = sorted(n for n in _fs_list_names(spark, tmp) if n.startswith(f"{DATE_COL}="))
+        for d in days:
+            if fs.exists(hpath(f"{path}/{d}__precompact")):
+                raise IOError(
+                    f"leftover {path}/{d}__precompact from a crashed rewrite; "
+                    "resolve it manually before re-running"
+                )
+        _drop_sink_log(spark, path)
+        for d in days:
+            live, new, old = (hpath(f"{path}/{d}"), hpath(f"{tmp}/{d}"),
+                              hpath(f"{path}/{d}__precompact"))
+            if fs.exists(live):
+                _rename_checked(fs, live, old)
+            try:
+                _rename_checked(fs, new, live)
+            except Exception:
+                # BEST-EFFORT roll back so the day never vanishes from the
+                # table — but never let a failing rollback (e.g. a
+                # reoccupied destination) mask the original error.
+                try:
+                    if fs.exists(old) and not fs.exists(live):
+                        fs.rename(old, live)
+                except Exception:
+                    pass
+                raise
+            fs.delete(old, True)
+    finally:
+        fs.delete(hpath(tmp), True)
 
 
 class TimeSeriesTable:
@@ -329,24 +442,15 @@ class TimeSeriesTable:
         Reference behavior (``TsTable.append``): convert the pandas
         DatetimeIndex to int64 ms, verify the batch starts at-or-after the
         current max timestamp, group rows by UTC day, append each group to
-        its day table. Spark-first translation: derive ``date``,
-        repartition by it (each day's rows land in one task → one file per
-        day per batch), sort by ``ts`` within partitions so Parquet
-        row-group stats are tight, and append via dynamic partition
-        overwrite-free ``mode("append")``.
-
-        At 100 TB the same plan holds: the repartition is a single shuffle
-        keyed on the (low-cardinality, time-ordered) date, and each
-        executor writes only the partitions it owns. For heavy single-day
-        backfills pass ``files_per_day > 1``: the shuffle key becomes
-        (date, ts-hash-bucket) so one day's rows spread over N writer
-        tasks — the layout contract is only "sorted by ts within each
-        file", which any file count satisfies.
+        its day table. Spark-first translation: derive ``date`` and
+        ``mode("append")`` the batch through ``_write_days`` — one shuffle
+        keyed on the (low-cardinality, time-ordered) date, so each day's
+        rows land in one task → one ts-sorted file per day per batch, and
+        each executor writes only the partitions it owns. For heavy
+        single-day backfills pass ``files_per_day > 1``: the key gains a
+        ts-hash bucket so one day's rows spread over N writer tasks.
         """
-        got = {f.name: f.dataType for f in df.schema.fields}
-        want = {f.name: f.dataType for f in self.schema.fields}
-        if got != want:
-            raise TimeSeriesTableError(f"schema mismatch: got {got}, want {want}")
+        self._check_schema(df)
         # ONE validation job for both checks (null timestamps + batch
         # min) instead of separate count and min jobs: an expensive
         # upstream plan is evaluated twice total (validate + write), not
@@ -371,29 +475,10 @@ class TimeSeriesTable:
                     raise TimeSeriesTableError(
                         f"append-only order violated: batch min {new_min} < current max {cur}"
                     )
-        dated = df.withColumn(DATE_COL, F.to_date(F.col(TS_COL)))
-        if files_per_day > 1:
-            dated = dated.repartition(
-                F.col(DATE_COL), F.pmod(F.xxhash64(TS_COL), F.lit(files_per_day))
-            )
-        else:
-            dated = dated.repartition(DATE_COL)
-        # Sort by (date, ts), not just ts: the dynamic-partition
-        # writer requires task rows ordered by the partition column
-        # and inserts its own UNSTABLE sort on `date` when they are
-        # not — which silently destroys the in-file ts order the
-        # whole layout contract rests on. Sorting by the full prefix
-        # satisfies the writer's requirement so no extra sort runs.
-        writer = (
-            dated.sortWithinPartitions(DATE_COL, TS_COL)
-            .write.mode("append")
-            .partitionBy(DATE_COL)
-            # A9 knobs from create(): per-series codec + file-size cap
-            .option("compression", self.compression)
+        _write_days(
+            df.withColumn(DATE_COL, F.to_date(F.col(TS_COL))), self.path, "append",
+            self.compression, self.max_records_per_file, files_per_day,
         )
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
-        writer.parquet(self.path)
 
     # -- A3+: upsert (late-data correction merge) ---------------------------
     def upsert(self, df: DataFrame, keys: list[str] | None = None) -> None:
@@ -410,9 +495,9 @@ class TimeSeriesTable:
         just those days are read back partition-pruned, and old+new are
         combined with a partial-agg ``max(struct(__src, ...))`` keyed on
         identity (batch wins over table; ties within a side resolve by
-        the row's own ordering — deterministic). The merged days are
-        rewritten to the side and swapped in with the same crash-safe
-        per-partition rename protocol as ``compact_series``. Cost is
+        the row's own ordering — deterministic). ``rewrite_days`` writes
+        the merged days to the side and swaps them in one day at a time
+        (the protocol ``compact_series`` uses too). Cost is
         O(touched days' data), not O(table) — at 100 TB a day's
         correction never rewrites years of history.
 
@@ -423,16 +508,19 @@ class TimeSeriesTable:
         silently collapsed away, even when both days happen to be in the
         touched set. Corrections that genuinely re-time a row across
         days are a delete+insert.
+
+        On a series a streaming file sink also writes to, the sink's
+        ``_spark_metadata`` log is dropped before the read (see
+        ``_drop_sink_log``): run with that stream stopped, as for
+        ``compact_series``.
         """
-        got = {f.name: f.dataType for f in df.schema.fields}
-        want = {f.name: f.dataType for f in self.schema.fields}
-        if got != want:
-            raise TimeSeriesTableError(f"schema mismatch: got {got}, want {want}")
+        self._check_schema(df)
+        cols = self.schema.fieldNames()
         keys = list(keys) if keys else [TS_COL]
-        unknown = [k for k in keys if k not in want]
+        unknown = [k for k in keys if k not in cols]
         if unknown:
             raise TimeSeriesTableError(f"upsert keys not in schema: {unknown}")
-        reserved = {"__src", "__m"} & set(want)
+        reserved = {"__src", "__m"} & set(cols)
         if reserved:
             raise TimeSeriesTableError(
                 f"upsert reserves column names {sorted(reserved)}; rename them in the schema"
@@ -447,7 +535,6 @@ class TimeSeriesTable:
                 f"upsert cannot merge non-orderable (map-typed) columns: {unorderable}"
             )
 
-        cols = [f.name for f in self.schema.fields]
         value_cols = [c for c in cols if c not in keys]
         dated_new = df.withColumn(DATE_COL, F.to_date(F.col(TS_COL)))
         # One job does double duty: the distinct-dates collect also
@@ -459,6 +546,7 @@ class TimeSeriesTable:
             return
         date_strs = sorted(str(d) for d in dates)
 
+        _drop_sink_log(self.spark, self.path)
         existing = self._df().where(F.col(DATE_COL).cast("string").isin(date_strs))
         tagged_old = existing.select(*cols, DATE_COL).withColumn("__src", F.lit(0))
         tagged_new = dated_new.select(*cols, DATE_COL).withColumn("__src", F.lit(1))
@@ -476,27 +564,10 @@ class TimeSeriesTable:
             .select(*cols, DATE_COL)
         )
 
-        tmp = self.path + "__upserting"
-        writer = (
-            merged.repartition(DATE_COL)
-            .sortWithinPartitions(DATE_COL, TS_COL)
-            .write.mode("overwrite")
-            .partitionBy(DATE_COL)
-            .option("compression", self.compression)
+        rewrite_days(
+            self.spark, self.path, merged, "__upserting",
+            self.compression, self.max_records_per_file,
         )
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
-        writer.parquet(tmp)
-
-        from tstables_spark.streaming.ingest import swap_date_partitions
-
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        fs = hpath(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        try:
-            swap_date_partitions(self.spark, self.path, tmp, date_strs)
-        finally:
-            fs.delete(hpath(tmp), True)
 
     # -- A2+: schema evolution ----------------------------------------------
     def evolve(self, new_schema: T.StructType) -> None:
@@ -555,7 +626,13 @@ class TimeSeriesTable:
         _fs_rename_overwrite(self.spark, tmp, meta_path)
         self.schema = new_schema
 
-    # -- internal: read with pruning ---------------------------------------
+    # -- internal: schema gate, read with pruning -------------------------
+    def _check_schema(self, df: DataFrame) -> None:
+        got = {f.name: f.dataType for f in df.schema.fields}
+        want = {f.name: f.dataType for f in self.schema.fields}
+        if got != want:
+            raise TimeSeriesTableError(f"schema mismatch: got {got}, want {want}")
+
     def _df(self) -> DataFrame:
         try:
             return self.spark.read.schema(
@@ -716,18 +793,8 @@ class TimeSeriesTable:
         API so the same code works on HDFS/S3 on a real cluster."""
         from datetime import date as _date
 
-        try:
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            names = [s.getPath().getName() for s in fs.listStatus(jpath)]
-        except Exception:
-            try:
-                names = os.listdir(self.path)
-            except OSError:
-                return []
         out = []
-        for n in names:
+        for n in _fs_list_names(self.spark, self.path):
             if n.startswith(f"{DATE_COL}="):
                 try:
                     out.append(_date.fromisoformat(n.split("=", 1)[1]))
@@ -786,13 +853,12 @@ class TimeSeriesTable:
             cutoff = _as_utc(cutoff).date()
         if not isinstance(cutoff, _date):
             raise TimeSeriesTableError(f"cutoff must be a date/datetime, got {type(cutoff)}")
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        fs = hpath(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, _, jvm = _jfs(self.spark, self.path)
         purged = []
         for d in self._partition_dates():
             if d < cutoff:
-                fs.delete(hpath(os.path.join(self.path, f"{DATE_COL}={d}")), True)
+                day = os.path.join(self.path, f"{DATE_COL}={d}")
+                fs.delete(jvm.org.apache.hadoop.fs.Path(day), True)
                 purged.append(d)
         return purged
 
@@ -816,28 +882,35 @@ class TimeSeriesTable:
         compaction/purge/upsert delete files, so older snapshots
         spanning rewritten days become unreadable — the standard
         vacuum trade every snapshotting table format makes."""
-        # Qualify the root exactly as read_version does: listFiles
-        # returns Hadoop-normalized URIs, so substring-matching the raw
-        # self.path spelling (e.g. file:///x vs file:/x) would reject
-        # every file and silently record an EMPTY manifest.
-        manifest = []
-        fs, jroot, _ = _jfs(self.spark, self.path)
-        base = fs.makeQualified(jroot).toString().rstrip("/") + "/"
-        it = fs.listFiles(jroot, True)
-        while it.hasNext():
-            p = it.next().getPath().toString()
-            rel = p[len(base):] if p.startswith(base) else p
-            if rel.startswith(f"{DATE_COL}=") and rel.endswith(".parquet"):
-                manifest.append(rel)
+        manifest = [
+            rel for rel in self._live_files()
+            if rel.startswith(f"{DATE_COL}=") and rel.endswith(".parquet")
+        ]
         _fs_mkdirs(self.spark, self._versions_dir())
         existing = self.versions()
         v = (existing[-1] + 1) if existing else 1
         tmp = os.path.join(self._versions_dir(), f"v{v}.json.tmp")
         _fs_write_text(self.spark, tmp, json.dumps({"version": v, "files": sorted(manifest)}))
-        _fs_rename_checked(
-            self.spark, tmp, os.path.join(self._versions_dir(), f"v{v}.json")
-        )
+        final = os.path.join(self._versions_dir(), f"v{v}.json")
+        fs, jtmp, jvm = _jfs(self.spark, tmp)
+        _rename_checked(fs, jtmp, jvm.org.apache.hadoop.fs.Path(final))
         return v
+
+    def _live_files(self) -> set[str]:
+        """Every file under the series root, relative to it — ONE
+        recursive listing (metadata only). The root is qualified through
+        the FileSystem first: listFiles returns Hadoop-normalized URIs, so
+        prefix-matching the raw ``self.path`` spelling (e.g. file:///x vs
+        file:/x) would match nothing."""
+        fs, jroot, _ = _jfs(self.spark, self.path)
+        base = fs.makeQualified(jroot).toString().rstrip("/") + "/"
+        live = set()
+        it = fs.listFiles(jroot, True)
+        while it.hasNext():
+            p = it.next().getPath().toString()
+            if p.startswith(base):
+                live.add(p[len(base):])
+        return live
 
     def versions(self) -> list[int]:
         """Recorded snapshot versions, ascending."""
@@ -864,22 +937,10 @@ class TimeSeriesTable:
         files = json.loads(_fs_read_text(self.spark, vpath))["files"]
         if not files:
             return self.spark.createDataFrame([], self.schema)
-        # ONE recursive listing (the same sweep snapshot() does) instead
-        # of a per-file exists probe — O(files) sequential RPCs against a
-        # remote store would add seconds of pure metadata latency.
-        # Qualify the root through the FileSystem first (the
-        # _fs_rename_overwrite pattern): listFiles returns fully
-        # qualified URIs in Hadoop's normalized spelling, so a root
-        # given as e.g. file:///tmp (vs the normalized file:/tmp) would
-        # never prefix-match and every file would look missing.
-        live = set()
-        fs, jroot, _ = _jfs(self.spark, self.path)
-        base = fs.makeQualified(jroot).toString().rstrip("/") + "/"
-        it = fs.listFiles(jroot, True)
-        while it.hasNext():
-            pth = it.next().getPath().toString()
-            if pth.startswith(base):
-                live.add(pth[len(base):])
+        # ONE recursive listing instead of a per-file exists probe —
+        # O(files) sequential RPCs against a remote store would add
+        # seconds of pure metadata latency.
+        live = self._live_files()
         missing = [rel for rel in files if rel not in live]
         if missing:
             raise TimeSeriesTableError(
