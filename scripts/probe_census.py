@@ -70,7 +70,7 @@ def main() -> None:
     # phase 1: sampled-edge pin (derive + stage the scratch table)
     se = timed(
         "se_pin",
-        lambda: A._edge_pin(
+        lambda: A.pin(
             A._doulion_sample(A.cooccurrence_edges(b0, cap=256), CUT),
             True,
             "doulion_se",
@@ -101,7 +101,7 @@ def main() -> None:
         )
     )
     oe = timed(
-        "oe_pin", lambda: A._edge_pin(oe0, True, "census_oe", cache_key=ck)
+        "oe_pin", lambda: A.pin(oe0, True, "census_oe", cache_key=ck)
     )
 
     # phase 3: wedge expansion alone (current self-join shape), noop sink

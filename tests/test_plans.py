@@ -618,7 +618,7 @@ def test_r13_doulion_cut_validation_and_pin_cache(spark, sf_dir, monkeypatch):
     instead of silently mis-sampling — only 2-char lowercase hex is a
     sound lexicographic md5-prefix cut; (b) the big-path streamed
     scratch pins are staged ONCE per (app, sf_dir, cut) and reused on
-    repeat invocations (the _PR_EDGES_STAGED discipline) — repeated
+    repeat invocations (``_staging.staged`` entries) — repeated
     bench runs at 100x must not re-write edge-sized tables per run."""
     import pytest as _pytest
 
@@ -633,13 +633,13 @@ def test_r13_doulion_cut_validation_and_pin_cache(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(A, "_EDGE_PIN_PAIRS_MAX", 1)
     first = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
     staged_after_first = {
-        k: v for k, v in _STREAM_PINNED.items() if k[2] == (sf_dir, "c0")
+        k: v for k, v in _STREAM_PINNED.items() if k[2][0] == (sf_dir, "c0")
     }
     assert len(staged_after_first) == 2  # doulion_se + census_oe
     second = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
     assert second == first
     assert {
-        k: v for k, v in _STREAM_PINNED.items() if k[2] == (sf_dir, "c0")
+        k: v for k, v in _STREAM_PINNED.items() if k[2][0] == (sf_dir, "c0")
     } == staged_after_first  # reused, not re-staged
 
 
@@ -862,7 +862,7 @@ def test_stream_pin_lru_eviction_restages(spark, sf_dir, monkeypatch):
     ev = load(spark, sf_dir, "events").select("user_id").limit(5)
     t1 = _staging.stream_pin(ev, "lru_a", cache_key=("k1",))
     key1 = next(k for k in _staging._STREAM_PINNED if k[1] == "lru_a")
-    tag1, dir1 = _staging._STREAM_PINNED[key1]
+    tag1, dir1, _ = _staging._STREAM_PINNED[key1]
     want = t1.count()
     _staging.stream_pin(ev, "lru_b", cache_key=("k2",))
     _staging.stream_pin(ev, "lru_c", cache_key=("k3",))
@@ -986,6 +986,54 @@ def test_stream_pin_concurrent_stage_keeps_winner(spark, sf_dir, monkeypatch):
     assert spark.catalog.tableExists(winner[0])
     # loser's scratch dir was reclaimed (winner's still on disk)
     assert os.path.exists(winner[1])
+
+
+def test_staged_fixture_lru_eviction(spark, sf_dir, monkeypatch):
+    """Staged fixtures share the stream pins' bounded registry. With the
+    cap at 1, staging scan_json's source evicts scan_csv's (its dir is
+    removed); the next scan_csv stages again and gives the same value
+    hash. A fixture touched inside an open hold_stream_pins scope keeps
+    its entry and catalog tables through a forced eviction, and loses
+    both to the first insert after the scope closes."""
+    import gc
+    import os
+
+    import pandas as pd
+
+    from tests.parity import canonicalize
+    from tstables_spark.plans import _staging
+    from tstables_spark.plans import relational as R
+
+    def value_hash(name):
+        pdf = QUERIES[name](spark, sf_dir).toPandas()
+        gc.collect()  # the frame is gone: its registry refs are released
+        return int(pd.util.hash_pandas_object(canonicalize(pdf), index=False).sum())
+
+    def entry(prefix):
+        key = (spark.sparkContext.applicationId, prefix, (sf_dir,))
+        return _staging._STREAM_PINNED.get(key)
+
+    monkeypatch.setattr(_staging, "_STREAM_PINNED_CAP", 1)
+    want = value_hash("scan_csv")
+    csv = entry("src_csv")
+    assert csv is not None and os.path.isdir(csv.dir)
+    value_hash("scan_json")
+    assert entry("src_csv") is None and not os.path.exists(csv.dir)
+    assert entry("src_json") is not None
+    assert value_hash("scan_csv") == want
+    assert entry("src_csv").dir != csv.dir  # staged again, fresh dir
+
+    with _staging.hold_stream_pins():
+        tag = R._bucketed_tables(spark, sf_dir)
+        bucketed = entry("bucketed")
+        assert bucketed.tables == (f"orders_{tag}", f"lineitem_{tag}")
+        value_hash("scan_json")  # an insert over the cap
+        assert entry("bucketed") == bucketed
+        assert all(spark.catalog.tableExists(t) for t in bucketed.tables)
+        assert spark.table(f"orders_{tag}").count() > 0
+    value_hash("scan_csv")
+    assert entry("bucketed") is None and not os.path.exists(bucketed.dir)
+    assert not any(spark.catalog.tableExists(t) for t in bucketed.tables)
 
 
 def test_aqe_trade_inverted(spark, sf_dir):

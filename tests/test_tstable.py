@@ -722,3 +722,51 @@ def test_compact_preserves_versions_and_codec(spark, tmp_path):
     got = tbl.read_range(t0, t0 + timedelta(minutes=49))
     assert got.count() == 50
     assert got.agg(F.sum("v")).collect()[0][0] == sum(range(50)) + 500.0
+
+
+def _jobs_run(spark, fn):
+    """(fn's result, number of Spark jobs fn submitted), counted through
+    a job group on the status tracker."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = "tstable_probe_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, "probe jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus in order: once a
+    # later job is visible, every job of the probe is too
+    drain = "tstable_drain_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(drain, "listener drain")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(drain):
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_day_walk_probe_job_counts(spark, root):
+    """min_dt / max_dt probe exactly their edge day (1 job each);
+    read_at before the last day's first row probes that day, finds
+    nothing, then hits the day before (2 jobs). Writes never leave an
+    empty date= dir, so 2 is the bound for any instant inside the
+    table's span."""
+    t0 = datetime(2024, 3, 1, 9, tzinfo=UTC)
+    ts = TimeSeriesTable.create(spark, root, "walk", SCHEMA)
+    ts.append(_ticks(spark, t0, 3, step_s=86400))  # one tick on each of 3 days
+
+    got, jobs = _jobs_run(spark, ts.min_dt)
+    assert (got, jobs) == (t0, 1)
+    got, jobs = _jobs_run(spark, ts.max_dt)
+    assert (got, jobs) == (t0 + timedelta(days=2), 1)
+    at = t0 + timedelta(days=2, hours=-1)  # last day, before its first row
+    df, jobs = _jobs_run(spark, lambda: ts.read_at(at))
+    assert jobs <= 2
+    assert [r.ts for r in df.collect()] == [datetime(2024, 3, 2, 9)]

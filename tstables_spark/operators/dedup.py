@@ -344,7 +344,7 @@ def minhash_lsh_pairs(
 
     ``cache_key``: optional identity of ``docs`` (e.g. the sf_dir) —
     lets the big-corpus path reuse its streamed scratch tables across
-    invocations (the _PR_EDGES_STAGED discipline; see _MINHASH_PIN_ROWS_MAX)."""
+    invocations (``_staging.staged`` entries; see _MINHASH_PIN_ROWS_MAX)."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     # Physical-strategy knob BEFORE any data-sized materialization (the
@@ -356,17 +356,12 @@ def minhash_lsh_pairs(
     # cache_key, the big verdict is implied and the estimate scan (a
     # full docs pass) is skipped — the repeat-invocation path the cache
     # exists for must not re-scan the corpus just to re-derive `big`.
-    big = False
-    if cache_key is not None:
-        from tstables_spark.plans._staging import _STREAM_PINNED
+    from tstables_spark.plans._staging import is_pinned, pin
 
-        app = docs.sparkSession.sparkContext.applicationId
-        # full _STREAM_PINNED key shape: (app, prefix, cache_key,
-        # bucket_by, num_buckets) — these pins are unbucketed
-        big = all(
-            (app, p, cache_key + extra, None, None) in _STREAM_PINNED
-            for p, extra in (("mh_sh", (n,)), ("mh_sig", (n, num_hashes)))
-        )
+    big = cache_key is not None and all(
+        is_pinned(docs.sparkSession, p, cache_key + extra)
+        for p, extra in (("mh_sh", (n,)), ("mh_sig", (n, num_hashes)))
+    )
     if not big:
         sh_rows_est = docs.agg(
             F.sum(
@@ -378,14 +373,8 @@ def minhash_lsh_pairs(
         big = (sh_rows_est or 0) > _MINHASH_PIN_ROWS_MAX
 
     def _pin(df: DataFrame, prefix: str, key_extra: tuple) -> DataFrame:
-        if not big:
-            return df.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-        from tstables_spark.plans._staging import stream_pin
-
         ck = None if cache_key is None else cache_key + key_extra
-        return stream_pin(df, prefix, cache_key=ck)
+        return pin(df, big, prefix, cache_key=ck)
 
     # Materialize the shingle set ONCE — as 60-bit portable fingerprints,
     # not strings. Three branches read it (the signature aggregate and
@@ -415,8 +404,6 @@ def minhash_lsh_pairs(
     # _MINHASH_PIN_ROWS_MAX even the serialized pin rides the heap
     # envelope (the r12 63-76 s GC-luck cluster) — _pin streams it
     # into a scratch table instead.
-    from pyspark import StorageLevel
-
     sh = _pin(
         shingles(docs, n, with_size=True).select(
             "doc_id", "n_sh", portable_hash60("shingle").alias("h")

@@ -1,11 +1,24 @@
-"""Per-application scratch space for staged fixtures and sinks.
+"""Per-application scratch space and the one stage-once registry.
 
-Every staged layout the plans create (bucketed as-of tables, stream
-source dirs, streaming checkpoints, sink outputs) lives under ONE
-per-application temp root that is removed at interpreter exit, and
-staged catalog tables register a best-effort DROP — so repeated
-3-scale sweeps inside one session overwrite or reuse instead of
-accumulating orphan mkdtemp dirs and catalog entries.
+Every layout the plans stage lives under ONE per-application temp root
+(``scratch_dir``), removed at interpreter exit.
+
+Every relation staged once per application and re-read afterwards goes
+through ``staged``: bucketed join inputs, presorted and epoch as-of
+tables, the NSW index, stream source dirs and streamed pins. It is one
+registry, keyed by (applicationId, prefix, key):
+
+- bounded: LRU beyond ``_STREAM_PINNED_CAP`` entries. Eviction DROPs
+  the entry's catalog tables and removes its dir; an evicted entry is
+  staged again on its next use.
+- in-use guarded: ``hold_stream_pins`` refcounts exempt an entry from
+  eviction. The query registry holds them from plan construction
+  through the returned frame's lifetime.
+- race-checked: of two concurrent builds of one key the first wins;
+  the loser's tables and dir are dropped.
+
+``pin`` and ``stream_pin``, the checkpoint-or-stream materialization,
+are callers of it.
 
 The free statistics the size gates read (``file_stats``: input file
 sizes and Parquet footers, no Spark job) live here too.
@@ -83,33 +96,38 @@ def dynamic_partition_overwrite(spark):
     return _cm()
 
 
-# Streamed scratch tables reused across invocations, keyed by
-# (applicationId, prefix, caller-supplied identity). A pinned relation
-# that is a pure function of its inputs should be staged ONCE per app —
-# best-of-N bench repetition at 100x otherwise re-writes corpus-sized
-# tables every run and exhausts the sweep box's disk (the staging
-# root's rmtree only fires at interpreter exit).
-#
-# LRU-bounded (r14 verdict #5): a long-lived session running the full
+# The stage-once registry (module docstring): full_key -> _Entry.
+# LRU-bounded because a long-lived session running the full query
 # registry accumulates one catalog table + one JVM filesource-relation
-# cache entry (file listing + schema, heap-resident) per staged pin —
-# the r14 full-registry sf0.1 sweep OOM'd a 1 GB vanilla driver after
-# ~200 queries of exactly this. Evicting drops the catalog entry
-# (which invalidates the JVM relation cache) and reclaims the scratch
-# bytes; an evicted pin that is consulted again is simply restaged —
-# it is a pure function of its inputs by the cache_key contract.
-# Values are (table_tag, scratch_dir). Insertion order == recency
-# (dict preserves order; hits re-insert).
+# cache entry (file listing + schema, heap-resident) per staged
+# relation — unbounded, that OOM'd a 1 GB vanilla driver after ~200
+# queries of an sf0.1 sweep. Evicting drops the entry's catalog tables
+# (which invalidates the JVM relation cache) and reclaims its scratch
+# bytes. Insertion order == recency (dict preserves order; hits
+# re-insert).
 _STREAM_PINNED: dict = {}
 _STREAM_PINNED_CAP = 48
 _STREAM_PINNED_LOCK = threading.Lock()
-# In-use refcounts (r15 verdict #7): full_key -> count of live
-# hold_stream_pins scopes that touched the pin. Guarded by
-# _STREAM_PINNED_LOCK. Eviction skips keys with refs > 0, so a plan
-# constructed over the LRU tail cannot lose its files to a concurrent
-# insert while its query scope is open.
+# In-use refcounts: full_key -> count of live hold_stream_pins scopes
+# that touched the entry. Guarded by _STREAM_PINNED_LOCK. Eviction
+# skips keys with refs > 0, so a plan constructed over the LRU tail
+# cannot lose its files to a concurrent insert while its query scope
+# is open.
 _STREAM_PINNED_REFS: dict = {}
 _PIN_SCOPES = threading.local()
+# Per-thread stack of the table lists of in-flight builds:
+# register_staged_table appends to the innermost one, so an entry knows
+# every catalog table its build created.
+_BUILDS = threading.local()
+
+
+class _Entry(NamedTuple):
+    """A registry entry: what the build returned, the scratch dir it
+    wrote under, and the catalog tables it registered."""
+
+    value: Any
+    dir: str
+    tables: tuple
 
 
 def _note_pin_use(full_key) -> None:
@@ -136,11 +154,11 @@ class _PinScope:
     """Handle yielded by ``hold_stream_pins``: ``transfer_to(df)`` moves
     the scope's refcounts onto ``df``'s LIFETIME (released by a weakref
     finalizer when the frame is garbage-collected) instead of at scope
-    exit. This is what extends the eviction immunity past plan
-    CONSTRUCTION to the frame's later EXECUTION (r16 advice: a
-    concurrent foreachBatch thread staging >cap pins between the query
-    fn returning and the driver's collect could otherwise evict a pin
-    the plan still scans)."""
+    exit. This extends the eviction immunity past plan CONSTRUCTION to
+    the frame's later EXECUTION: a concurrent foreachBatch thread
+    staging >cap entries between the query fn returning and the
+    driver's collect could otherwise evict a table the plan still
+    scans."""
 
     def __init__(self, held: list):
         self.held = held
@@ -157,17 +175,17 @@ class _PinScope:
 
 
 def hold_stream_pins():
-    """Context manager: every staged pin touched by THIS THREAD inside
-    the scope is refcounted and immune to LRU eviction until the scope
-    exits — or, when the yielded scope's ``transfer_to(df)`` is called,
-    until ``df`` is garbage-collected. The registry wrapper brackets
-    each query's plan construction with it AND transfers the refs to
-    the returned frame, so a pin a plan scans stays eviction-immune
-    through the driver's execution of that frame for as long as the
-    caller holds it (it must, to execute it). A frame held forever
-    holds its pins' refs forever — bounded by live DataFrames, the
-    caller's working set. Reentrant (nested scopes each hold their own
-    touches)."""
+    """Context manager: every registry entry touched by THIS THREAD
+    inside the scope is refcounted and immune to LRU eviction until the
+    scope exits — or, when the yielded scope's ``transfer_to(df)`` is
+    called, until ``df`` is garbage-collected. The registry wrapper
+    brackets each query's plan construction with it AND transfers the
+    refs to the returned frame, so an entry a plan scans stays
+    eviction-immune through the driver's execution of that frame for
+    as long as the caller holds it (it must, to execute it). A frame
+    held forever holds its entries' refs forever — bounded by live
+    DataFrames, the caller's working set. Reentrant (nested scopes
+    each hold their own touches)."""
     from contextlib import contextmanager
 
     @contextmanager
@@ -188,33 +206,99 @@ def hold_stream_pins():
     return _cm()
 
 
-def _evict_stream_pins(spark, cap: int) -> None:
-    """Drop least-recently-used staged pins beyond ``cap``, skipping
-    in-use pins (refcount > 0 — a held pin may transiently push the
-    registry over cap; it is reclaimed on the next insert after its
-    scope closes). Caller must NOT hold ``_STREAM_PINNED_LOCK``: the
-    victims are popped under the lock, but the catalog DROP and the
-    rmtree run AFTER release so concurrent pin lookups never stall
-    behind metastore calls (r15 advice). Best-effort on the catalog
-    side (the metastore may belong to a finished app); the bytes go
-    with the rmtree regardless."""
+def _drop_tables(spark, tables) -> None:
+    """Best-effort DROP: the metastore may belong to a finished app, or
+    the JVM gateway may already be down at exit."""
+    for t in tables:
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        except Exception:
+            pass
+
+
+def _drop_entry(spark, entry: _Entry) -> None:
+    """DROP the entry's catalog tables and remove its scratch dir."""
+    _drop_tables(spark, entry.tables)
+    shutil.rmtree(entry.dir, ignore_errors=True)
+
+
+def _evict_stream_pins(spark, cap: int, keep=None) -> None:
+    """Drop least-recently-used entries beyond ``cap``, skipping
+    ``keep`` and in-use entries (refcount > 0 — a held entry may
+    transiently push the registry over cap; it is reclaimed on the next
+    insert after its scope closes). Caller must NOT hold
+    ``_STREAM_PINNED_LOCK``: the victims are popped under the lock, but
+    the catalog DROP and the rmtree run after release so concurrent
+    lookups never stall behind metastore calls."""
     victims: list = []
     with _STREAM_PINNED_LOCK:
         overflow = len(_STREAM_PINNED) - cap
-        if overflow > 0:
-            for key in list(_STREAM_PINNED):
-                if overflow <= 0:
-                    break
-                if _STREAM_PINNED_REFS.get(key, 0) > 0:
-                    continue
-                victims.append(_STREAM_PINNED.pop(key))
-                overflow -= 1
-    for tag, d in victims:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {tag}")
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
+        for key in list(_STREAM_PINNED):
+            if overflow <= 0:
+                break
+            if key == keep or _STREAM_PINNED_REFS.get(key, 0) > 0:
+                continue
+            victims.append(_STREAM_PINNED.pop(key))
+            overflow -= 1
+    for entry in victims:
+        _drop_entry(spark, entry)
+
+
+def staged(spark, prefix: str, key, build):
+    """Stage a relation once per ``(applicationId, prefix, key)`` and
+    return what ``build`` returned for it: a table tag, a path, or any
+    other value that names the staged files.
+
+    On a miss ``build(tag, d)`` runs outside the lock with a fresh
+    ``tag`` (``prefix`` + a uuid suffix, a valid identifier for the
+    catalog tables it creates) and a fresh ``d = scratch_dir(spark,
+    prefix + "_")`` to write under; it must register every catalog
+    table it creates with ``register_staged_table``. Two threads may
+    build the same key at once: the re-check under the lock keeps the
+    first winner and drops the loser's tables and dir. Every entry is
+    refcounted by ``hold_stream_pins`` and LRU-evicted beyond
+    ``_STREAM_PINNED_CAP``; eviction drops its tables and dir.
+
+    ``key=None`` stages fresh and unregistered — a per-call relation
+    whose tables are dropped at interpreter exit."""
+    import uuid
+
+    full_key = (spark.sparkContext.applicationId, prefix, key)
+    if key is not None:
+        with _STREAM_PINNED_LOCK:
+            hit = _STREAM_PINNED.pop(full_key, None)
+            if hit is not None:
+                _STREAM_PINNED[full_key] = hit  # re-insert: refresh recency
+                _note_pin_use(full_key)
+                return hit.value
+    tag = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    d = scratch_dir(spark, prefix + "_")
+    tables: list = []
+    builds = _BUILDS.__dict__.setdefault("stack", [])
+    builds.append(tables)
+    try:
+        value = build(tag, d)
+    finally:
+        builds.pop()
+    if key is None:
+        return value
+    entry = _Entry(value, d, tuple(tables))
+    with _STREAM_PINNED_LOCK:
+        winner = _STREAM_PINNED.pop(full_key, None)
+        _STREAM_PINNED[full_key] = winner or entry
+        _note_pin_use(full_key)
+    if winner is not None:
+        _drop_entry(spark, entry)
+        return winner.value
+    _evict_stream_pins(spark, _STREAM_PINNED_CAP, keep=full_key)
+    return value
+
+
+def is_pinned(spark, prefix: str, cache_key: tuple) -> bool:
+    """Whether an unbucketed ``stream_pin(df, prefix, cache_key)`` would
+    hit the registry now (a probe: touches neither recency nor refs)."""
+    key = (spark.sparkContext.applicationId, prefix, (cache_key, None, None))
+    return key in _STREAM_PINNED
 
 
 def stream_pin(
@@ -227,98 +311,71 @@ def stream_pin(
     """Materialize a multiply-consumed CORPUS-SIZED relation by
     STREAMING it into a scratch parquet table, the big-graph
     alternative to a localCheckpoint pin: checkpoint materialization
-    holds one serialized per-task block in heap simultaneously (64 MB
-    G1-humongous chunks — the 8g GCLocker OOM SCALE.md r12 measured),
-    while a file write streams at constant memory and consumers
-    re-scan files. ``cache_key``: a tuple identifying the relation as
-    a pure function of its inputs (sf_dir + knobs) — when given, the
-    staged table is reused per (applicationId, prefix, cache_key).
-    ``bucket_by``/``num_buckets``: optionally bucket the staged table
-    so key-clustered consumers (a groupBy or shuffle-hash join on the
-    bucket key) read it with ZERO exchange — the graph_pagerank edge
-    layout, available to any caller."""
-    import uuid
-
+    holds one serialized per-task block in heap simultaneously (the 8g
+    GCLocker OOM SCALE.md r12 measured), while a file write streams at
+    constant memory and consumers re-scan files. ``cache_key``: a
+    tuple identifying the relation as a pure function of its inputs —
+    when given, the table is a ``staged`` entry. ``bucket_by`` /
+    ``num_buckets``: optionally bucket the staged table so
+    key-clustered consumers (a groupBy or shuffle-hash join on the
+    bucket key) read it with ZERO exchange."""
     spark = df.sparkSession
     nb = None
     if bucket_by is not None:
         nb = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    full_key = None
-    if cache_key is not None:
-        # the layout knobs are part of the relation's identity: a
-        # cached UNBUCKETED table silently returned to a caller
-        # expecting the bucketed zero-exchange scan regains the full
-        # corpus-sized shuffle with no error (review r13)
-        full_key = (
-            spark.sparkContext.applicationId, prefix, cache_key, bucket_by, nb
+    # the layout knobs are part of the relation's identity: a cached
+    # UNBUCKETED table returned to a caller expecting the bucketed
+    # zero-exchange scan would regain the full shuffle with no error
+    key = None if cache_key is None else (cache_key, bucket_by, nb)
+
+    def build(tag: str, d: str) -> str:
+        w = df.write
+        if bucket_by is not None:
+            # repartition on the bucket key first: without it a T-task
+            # upstream writes up to T x nb files — every later scan
+            # then pays the listing and the per-bucket multi-file merge
+            w = df.repartition(nb, bucket_by).write.bucketBy(nb, bucket_by)
+        w.option("path", d + "/d").mode("overwrite").saveAsTable(tag)
+        register_staged_table(spark, tag)
+        return tag
+
+    return spark.table(staged(spark, prefix, key, build))
+
+
+def pin(
+    df,
+    big: bool,
+    prefix: str,
+    cache_key: tuple | None = None,
+    bucket_by: str | None = None,
+):
+    """Materialize a multiply-consumed relation: a serialized
+    ``MEMORY_AND_DISK`` localCheckpoint when it is small (fast,
+    memory-first), a ``stream_pin`` scratch table when ``big`` (no
+    corpus-sized checkpoint blocks on the heap; reused per
+    ``cache_key``, bucketed by ``bucket_by``)."""
+    if not big:
+        from pyspark import StorageLevel
+
+        return df.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
         )
-        with _STREAM_PINNED_LOCK:
-            hit = _STREAM_PINNED.get(full_key)
-            if hit is not None:
-                # re-insert to refresh recency (dict order == LRU order)
-                _STREAM_PINNED.pop(full_key)
-                _STREAM_PINNED[full_key] = hit
-                _note_pin_use(full_key)
-                return spark.table(hit[0])
-    tag = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    if bucket_by is not None:
-        # repartition on the bucket key first (the stage_asof_epoch_
-        # layout discipline): without it a T-task upstream writes up
-        # to T x nb files — every later scan then pays the listing
-        # and the per-bucket multi-file merge
-        df = df.repartition(nb, bucket_by)
-    w = df.write
-    if bucket_by is not None:
-        w = w.bucketBy(nb, bucket_by)
-    d = scratch_dir(spark, prefix + "_")
-    (
-        w.option("path", d + "/d")
-        .mode("overwrite")
-        .saveAsTable(tag)
-    )
-    register_staged_table(spark, tag)
-    if full_key is not None:
-        # The miss path is check-then-stage with the lock released
-        # during the corpus-sized write, so two foreachBatch threads
-        # can stage the same full_key concurrently. Re-check under the
-        # lock: if another thread already landed the key, ITS entry
-        # stays tracked and this thread's freshly staged table/dir is
-        # dropped (outside the lock) — a blind overwrite would orphan
-        # the winner's catalog table from the LRU forever (r15 advice).
-        with _STREAM_PINNED_LOCK:
-            winner = _STREAM_PINNED.get(full_key)
-            if winner is not None:
-                _STREAM_PINNED.pop(full_key)
-                _STREAM_PINNED[full_key] = winner  # refresh recency
-            else:
-                _STREAM_PINNED[full_key] = (tag, d)
-            _note_pin_use(full_key)
-        if winner is not None:
-            try:
-                spark.sql(f"DROP TABLE IF EXISTS {tag}")
-            except Exception:
-                pass
-            shutil.rmtree(d, ignore_errors=True)
-            return spark.table(winner[0])
-        _evict_stream_pins(spark, _STREAM_PINNED_CAP)
-    return spark.table(tag)
+    return stream_pin(df, prefix, cache_key=cache_key, bucket_by=bucket_by)
 
 
 def register_staged_table(spark, table: str) -> None:
-    """Best-effort DROP of a staged catalog table at interpreter exit.
+    """Record ``table`` as created by the innermost in-flight ``staged``
+    build on this thread (its entry drops it on eviction), and DROP it
+    best-effort at interpreter exit.
 
     The data files live under ``scratch_dir`` (external tables), so the
     bytes are reclaimed by the root's ``rmtree`` either way; this keeps
     the metastore from accumulating dangling entries when the warehouse
     outlives the app (e.g. a derby metastore in the repo dir)."""
-
-    def _drop() -> None:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        except Exception:
-            pass  # JVM gateway may already be down at exit
-
-    atexit.register(_drop)
+    builds = getattr(_BUILDS, "stack", None)
+    if builds:
+        builds[-1].append(table)
+    atexit.register(_drop_tables, spark, (table,))
 
 
 _CONF_SCOPED: dict = {}

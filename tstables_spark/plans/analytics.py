@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from tstables_spark._exact import exact_sum, sql_sum
 from tstables_spark.plans.registry import query
 from tstables_spark.plans._portable_sql import epoch_floor_div
+from tstables_spark.plans._staging import pin, register_staged_table, staged
 from tstables_spark.plans.tables import load
 
 
@@ -1065,10 +1066,6 @@ _CENSUS_PACK_ID_MAX = 1 << 31
 # two above sf0.1 — conservative on both sides.
 _EDGE_STAGE_PAIRS_MIN = 1_000_000
 
-# Big-graph bucketed edge tables, staged once per (applicationId,
-# sf_dir) — see _pagerank_distributed.
-_PR_EDGES_STAGED: dict = {}
-
 
 def _graph_scale_stats(b0: DataFrame, cap: int) -> tuple[int, int]:
     """(distinct users, capped pair-mass upper bound) of the
@@ -1237,31 +1234,22 @@ def _pagerank_distributed(
         # per task. Staged once per (app, sf_dir): the relation is a
         # pure function of the input, and re-writing GBs per call
         # exhausts disk.
-        key = (spark.sparkContext.applicationId, sf_dir)
-        tag = _PR_EDGES_STAGED.get(key)
-        if tag is None:
-            import uuid
-
-            from tstables_spark.plans._staging import (
-                register_staged_table,
-                scratch_dir,
-            )
-
+        def build(tag: str, d: str) -> str:
             nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            tag = "pr_edges_" + uuid.uuid4().hex[:8]
             (
                 edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
                 .unionAll(
                     edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
                 )
                 .write.bucketBy(nb, "src")
-                .option("path", scratch_dir(spark, "pr_edges_") + "/de")
+                .option("path", d + "/de")
                 .mode("overwrite")
                 .saveAsTable(tag)
             )
             register_staged_table(spark, tag)
-            _PR_EDGES_STAGED[key] = tag
-        de = spark.table(tag)
+            return tag
+
+        de = spark.table(staged(spark, "pr_edges", (sf_dir,), build))
     else:
         eh = edges.localCheckpoint(
             eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
@@ -1550,29 +1538,6 @@ def ts_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _edge_pin(
-    e: DataFrame,
-    big: bool,
-    prefix: str,
-    cache_key: tuple | None = None,
-    bucket_by: str | None = None,
-) -> DataFrame:
-    """Materialize a multiply-consumed edge relation. Broadcast-scale
-    graphs pin with a serialized localCheckpoint (fast, memory-first);
-    big graphs (the graph_pagerank node-count knob) STREAM into a
-    scratch parquet table instead — see _staging.stream_pin, which also
-    carries the per-(app, cache_key) reuse (the _PR_EDGES_STAGED
-    discipline; ADVICE r12) and, via ``bucket_by``, the bucketed
-    layout that feeds key-clustered consumers with zero exchange."""
-    if not big:
-        return e.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-    from tstables_spark.plans._staging import stream_pin
-
-    return stream_pin(e, prefix, cache_key=cache_key, bucket_by=bucket_by)
-
-
 def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = None):
     """Degree-ordered oriented triangle census over a PINNED half-edge
     list ``e(u, v)`` (u < v). Returns ``(tri, deg)``: ``tri`` is a
@@ -1582,7 +1547,7 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
     the wedge expansion is O(m^1.5) by the arboricity bound (see
     graph_triangles). Shared by the exact census and the DOULION
     estimator, which runs it on a sampled edge subset. ``big`` routes
-    the internal oriented-edge pin through ``_edge_pin``'s streamed
+    the internal oriented-edge pin through ``_staging.pin``'s streamed
     scratch table instead of a checkpoint.
 
     r17 big-path join strategy (guide §3.1/§8 — use what we know that
@@ -1666,7 +1631,7 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
                 .alias("ord"),
             )
         )
-        oe = _edge_pin(oe, big, "census_oe_pk", cache_key=cache_key)
+        oe = pin(oe, big, "census_oe_pk", cache_key=cache_key)
         a, b = oe.alias("a"), oe.alias("b")
         c = oe.select(
             F.shiftleft(F.col("src"), 32)
@@ -1691,7 +1656,7 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
         .join(dv, "v")
         .select(src.alias("src"), dst.alias("dst"), ddeg.alias("ddeg"))
     )
-    oe = _edge_pin(oe, big, "census_oe", cache_key=cache_key)
+    oe = pin(oe, big, "census_oe", cache_key=cache_key)
     a, b, c = oe.alias("a"), oe.alias("b"), oe.alias("c")
     if big and oe.count() <= _CENSUS_BROADCAST_EDGES_MAX:
         # the count is a parquet count-star over the staged pin
@@ -1828,7 +1793,7 @@ def graph_triangles_approx(
     # bound, one cheap aggregate): above it, both the sampled-edge pin
     # and the census's internal oriented-edge pin become streamed
     # scratch tables — no edge-sized checkpoint blocks on the heap
-    # (see _edge_pin).
+    # (see _staging.pin).
     # Validate the knob BEFORE the scale-stats job — a malformed cut
     # must fail free, not after a corpus aggregate.
     keep = _validate_cut(cut)  # md5-prefix cut 'xx' keeps keep/256 of edges
@@ -1837,10 +1802,10 @@ def graph_triangles_approx(
     # Streamed scratch pins cached per (app, sf_dir, cut) — the sampled
     # edge list and the census's oriented-edge relation are pure
     # functions of (input, cut), so best-of-N bench repetition at 100x
-    # re-walks the staged files instead of re-writing GBs per run (the
-    # _PR_EDGES_STAGED discipline; ADVICE r12).
+    # re-walks the staged files instead of re-writing GBs per run
+    # (_staging.staged entries).
     ck = (sf_dir, cut)
-    se = _edge_pin(
+    se = pin(
         _doulion_sample(cooccurrence_edges(b0, cap=256), cut),
         big,
         "doulion_se",
@@ -2133,7 +2098,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     RAISES if max_iter is hit rather than return a non-fixpoint set.
 
     Scale shape: the directed edge relation materializes ONCE via
-    _edge_pin (serialized checkpoint under the pair-mass bound,
+    _staging.pin (serialized checkpoint under the pair-mass bound,
     streamed bucketed-by-src scratch table above it — zero-exchange
     groupBy(src) off the bucketed scan); each round joins it against
     two O(nodes) survivor legs (broadcast under the node bound,
@@ -2182,8 +2147,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     if big_edges:
         # Streamed scratch table holds the directed list (the stream
         # is constant-memory regardless of size; consumers re-scan
-        # files) — the pagerank big-edge discipline via _edge_pin.
-        de = _edge_pin(
+        # files) — the pagerank big-edge discipline via _staging.pin.
+        de = pin(
             half.select(
                 F.col("u").alias("src"), F.col("v").alias("dst")
             ).unionAll(
@@ -2198,7 +2163,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Pin the HALF list (the _EDGE_PIN_PAIRS_MAX bound is in
         # half-edges — pinning 2|E| is the r11 pagerank OOM); both
         # directions derive lazily from the pinned rows.
-        eh = _edge_pin(half, False, "kcore_eh")
+        eh = pin(half, False, "kcore_eh")
         de = eh.select(
             F.col("u").alias("src"), F.col("v").alias("dst")
         ).unionAll(eh.select(F.col("v").alias("src"), F.col("u").alias("dst")))

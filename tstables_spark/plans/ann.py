@@ -59,27 +59,20 @@ def sim_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nsw_topk(emb, F.col("vec_id") < 10, k=5)
 
 
-_NSW_STAGED: dict = {}
-
-
 def _nsw_staged_index(spark: SparkSession, sf_dir: str) -> str:
     """Stage the NSW index once per (app, sf) — the repeated-retrieval
-    layout ``nsw_topk``'s scale note promises (same memo pattern as
-    timeseries._asof_staged_table)."""
-    import uuid
-
+    layout ``nsw_topk``'s scale note promises, a ``_staging.staged``
+    entry like every stage-once fixture."""
     from tstables_spark.operators.similarity import stage_nsw_layout
-    from tstables_spark.plans._staging import register_staged_table, scratch_dir
+    from tstables_spark.plans._staging import register_staged_table, staged
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NSW_STAGED:
-        tag = "nsw_" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "nsw_index_")
+    def build(tag: str, base: str) -> str:
         stage_nsw_layout(load(spark, sf_dir, "embeddings"), tag, base)
         for part in ("edges", "base", "entries"):
             register_staged_table(spark, f"{tag}_{part}")
-        _NSW_STAGED[key] = tag
-    return _NSW_STAGED[key]
+        return tag
+
+    return staged(spark, "nsw_index", (sf_dir,), build)
 
 
 @query("sim_nsw_staged")

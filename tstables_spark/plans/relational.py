@@ -28,7 +28,7 @@ from tstables_spark.plans._portable_sql import (
     _qsketch_cells,
     _qsketch_cells_sql,
 )
-from tstables_spark.plans._staging import register_staged_table, scratch_dir
+from tstables_spark.plans._staging import register_staged_table, scratch_dir, staged
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load, register_views
 
@@ -41,23 +41,19 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "lineitem")
 
 
-_INTERCHANGE: dict[tuple[str, str, str], str] = {}
-
-
 def _staged_interchange(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Stage the nation fixture as CSV / JSON-lines once per (app, sf)."""
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    if key not in _INTERCHANGE:
-        path = scratch_dir(spark, f"src_{fmt}_") + "/nation"
+    def build(tag: str, d: str) -> str:
+        path = d + "/nation"
         df = load(spark, sf_dir, "nation")
         if fmt == "csv":
             df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
         else:
             df.coalesce(1).write.mode("overwrite").json(path)
-        _INTERCHANGE[key] = path
-    return _INTERCHANGE[key]
+        return path
+
+    return staged(spark, f"src_{fmt}", (sf_dir,), build)
 
 
 @query("scan_csv", oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation")
@@ -168,22 +164,14 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED: dict[tuple[str, str], str] = {}
-
-
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
     """Stage orders/lineitem as bucketed+sorted tables (8 buckets on the
     join key). One-time cost per (app, sf); afterwards any equi-join on
     the bucket key is co-located — no Exchange at all — which is THE
     repeated-big-join strategy at 100 TB (pay the shuffle once at write
     time, never again per query)."""
-    import tempfile
-    import uuid
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED:
-        tag = "b" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "bucketed_")
+    def build(tag: str, base: str) -> str:
         for name, bucket_col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
             (
                 load(spark, sf_dir, name)
@@ -193,10 +181,10 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> str:
                 .mode("overwrite")
                 .saveAsTable(f"{name}_{tag}")
             )
-        for name in ("orders", "lineitem"):
             register_staged_table(spark, f"{name}_{tag}")
-        _BUCKETED[key] = tag
-    return _BUCKETED[key]
+        return tag
+
+    return staged(spark, "bucketed", (sf_dir,), build)
 
 
 @query(
@@ -1144,8 +1132,6 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps alike. Same partitioned-write discipline as the parquet
     sinks would apply at scale; kept single-dir here because the
     roundtrip property, not layout, is under test."""
-    import tempfile
-
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_linenumber", "l_quantity",
         "l_extendedprice", "l_returnflag", "l_shipdate",

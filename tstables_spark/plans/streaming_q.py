@@ -39,25 +39,24 @@ from tstables_spark.plans._portable_sql import (
     kmv_batch_hashes,
     kmv_truncate,
 )
-from tstables_spark.plans._staging import register_staged_table, scratch_dir
+from tstables_spark.plans._staging import register_staged_table, scratch_dir, staged
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 from tstables_spark.streaming.ingest import ingest_stream
 from tstables_spark.streaming.stateful import running_user_stats
-
-_STAGED: dict[tuple[str, str, str], str] = {}
 
 
 def _staged_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Materialize a fixture table (load()-normalized, e.g. events with
     ts already micros-normalized) as a plain parquet dir usable as a
     file-stream source — once per (app, sf, table)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _STAGED:
-        path = scratch_dir(spark, "stream_src_") + "/" + name
+
+    def build(tag: str, d: str) -> str:
+        path = d + "/" + name
         load(spark, sf_dir, name).write.mode("overwrite").parquet(path)
-        _STAGED[key] = path
-    return _STAGED[key]
+        return path
+
+    return staged(spark, "stream_src", (sf_dir, name), build)
 
 
 def _read_stream(spark: SparkSession, sf_dir: str, name: str = "events") -> DataFrame:
@@ -624,19 +623,13 @@ def stream_asof_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "ts", "o_orderkey", "o_totalprice")
 
 
-_ASOF_INTERVAL_STAGED: dict = {}
-
-
 def _asof_interval_staged_table(spark: SparkSession, sf_dir: str) -> str:
     """Stage the pre-collapsed order book as validity intervals once
     per (app, sf) — the streaming twin of timeseries._asof_staged_table
-    (same pay-the-window-at-write-time pattern, interval flavor)."""
+    (same pay-the-window-at-write-time layout, interval flavor)."""
     from tstables_spark.operators.asof import stage_asof_interval_layout
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ASOF_INTERVAL_STAGED:
-        tag = "asof_iv_" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "asof_interval_")
+    def build(tag: str, base: str) -> str:
         od = (
             load(spark, sf_dir, "orders")
             .groupBy("o_custkey", "o_orderdate")
@@ -655,8 +648,9 @@ def _asof_interval_staged_table(spark: SparkSession, sf_dir: str) -> str:
             num_buckets=8,
         )
         register_staged_table(spark, tag)
-        _ASOF_INTERVAL_STAGED[key] = tag
-    return _ASOF_INTERVAL_STAGED[key]
+        return tag
+
+    return staged(spark, "asof_interval", (sf_dir,), build)
 
 
 @query(
@@ -870,20 +864,18 @@ def stream_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HH_STAGED: dict = {}
-
-
 def _staged_doc_stream(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
     """documents as a 4-file parquet dir (one file per trigger), staged
-    once per (app, sf) — the _staged_kll_values discipline; repeated
-    invocations reuse the files."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _HH_STAGED:
+    once per (app, sf) like _staged_kll_values; repeated invocations
+    reuse the files."""
+
+    def build(tag: str, d: str) -> tuple[str, object]:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        path = scratch_dir(spark, "hh_src_") + "/documents"
+        path = d + "/documents"
         docs.repartition(4).write.mode("overwrite").parquet(path)
-        _HH_STAGED[key] = (path, docs.schema)
-    return _HH_STAGED[key]
+        return path, docs.schema
+
+    return staged(spark, "hh_src", (sf_dir,), build)
 
 
 @query(
@@ -1029,25 +1021,24 @@ def stream_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from tstables_spark.operators.kll import GATE_ORACLE as _KLL_GATE_ORACLE
 
-_KLL_STAGED: dict = {}
-
 
 def _staged_kll_values(spark: SparkSession, sf_dir: str):
     """The NULL/NaN-filtered events value column as an 8-file parquet
     dir (one file per trigger), staged once per (app, sf) like
     _staged_table — repeated invocations (3-scale + vanilla re-checks)
     reuse the files instead of re-writing them."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KLL_STAGED:
+
+    def build(tag: str, d: str) -> str:
         ev = (
             load(spark, sf_dir, "events")
             .select("value")
             .where(F.col("value").isNotNull() & ~F.isnan("value"))
         )
-        path = scratch_dir(spark, "kll_src_") + "/values"
+        path = d + "/values"
         ev.repartition(8).write.parquet(path)
-        _KLL_STAGED[key] = path
-    return _KLL_STAGED[key]
+        return path
+
+    return staged(spark, "kll_src", (sf_dir,), build)
 
 
 @query(

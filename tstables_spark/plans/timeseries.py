@@ -19,7 +19,7 @@ from tstables_spark.operators.rangejoin import banded_range_join
 from tstables_spark.operators.resample import resample_m4, resample_ohlc
 from tstables_spark._exact import exact_sum, exact_wsum, sql_sum, sql_wsum
 from tstables_spark.plans._portable_sql import epoch_floor_div
-from tstables_spark.plans._staging import register_staged_table, scratch_dir
+from tstables_spark.plans._staging import register_staged_table, scratch_dir, staged
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 from tstables_spark.tstable import TimeSeriesTable
@@ -2810,21 +2810,13 @@ def ts_rollup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_ROLLUP_HIER_SQL)
 
 
-_ASOF_STAGED: dict = {}
-
-
 def _asof_staged_table(spark: SparkSession, sf_dir: str) -> str:
     """Stage join_asof's unioned relation in the pre-sorted bucket
     layout once per (app, sf) — the same pay-the-shuffle-at-write-time
     pattern as relational._bucketed_tables."""
-    import uuid
-
     from tstables_spark.operators.asof import stage_asof_layout
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ASOF_STAGED:
-        tag = "asof_" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "asof_presorted_")
+    def build(tag: str, base: str) -> str:
         ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
         od = (
             load(spark, sf_dir, "orders")
@@ -2847,8 +2839,9 @@ def _asof_staged_table(spark: SparkSession, sf_dir: str) -> str:
             num_buckets=8,
         )
         register_staged_table(spark, tag)
-        _ASOF_STAGED[key] = tag
-    return _ASOF_STAGED[key]
+        return tag
+
+    return staged(spark, "asof_presorted", (sf_dir,), build)
 
 
 @query(
@@ -3022,9 +3015,6 @@ def join_asof_tolerance_presorted_q(spark: SparkSession, sf_dir: str) -> DataFra
     ).select("event_id", "user_id", "ts", "o_orderkey", "o_totalprice")
 
 
-_ASOF_EPOCH_STAGED: dict = {}
-
-
 def _asof_epoch_staged_table(spark: SparkSession, sf_dir: str) -> str:
     """Stage join_asof's relation in the EPOCH-PARTITIONED bucket
     layout once per (app, sf), deliberately driving the APPEND path as
@@ -3034,17 +3024,12 @@ def _asof_epoch_staged_table(spark: SparkSession, sf_dir: str) -> str:
     Epoch = calendar year: the 1992-1998 orders archive lands in its
     own partitions that the event append NEVER rewrites (the bounded
     I/O contract; operators/asof.py::stage_asof_epoch_layout)."""
-    import uuid
-
     from tstables_spark.operators.asof import (
         append_asof_epoch_layout,
         stage_asof_epoch_layout,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ASOF_EPOCH_STAGED:
-        tag = "asofe_" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "asof_epochs_")
+    def build(tag: str, base: str) -> str:
         ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
         od = (
             load(spark, sf_dir, "orders")
@@ -3085,8 +3070,9 @@ def _asof_epoch_staged_table(spark: SparkSession, sf_dir: str) -> str:
             num_buckets=8,
         )
         register_staged_table(spark, tag)
-        _ASOF_EPOCH_STAGED[key] = tag
-    return _ASOF_EPOCH_STAGED[key]
+        return tag
+
+    return staged(spark, "asof_epochs", (sf_dir,), build)
 
 
 @query(
@@ -3126,9 +3112,6 @@ def join_asof_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "ts", "o_orderkey", "o_totalprice")
 
 
-_ASOF_LIFECYCLE: dict = {}
-
-
 def _asof_lifecycle_table(spark: SparkSession, sf_dir: str) -> str:
     """Drive the COMPLETE epoch-layout lifecycle once per (app, sf) —
     stage -> two bounded appends -> expire -> compact — and return the
@@ -3145,7 +3128,6 @@ def _asof_lifecycle_table(spark: SparkSession, sf_dir: str) -> str:
     epochs (catalog + bytes) while the 2024 event epochs the appends
     touched are untouched by it."""
     import datetime
-    import uuid
 
     from tstables_spark.operators.asof import (
         append_asof_epoch_layout,
@@ -3156,11 +3138,8 @@ def _asof_lifecycle_table(spark: SparkSession, sf_dir: str) -> str:
         stage_asof_epoch_layout,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ASOF_LIFECYCLE:
-        tag_e = "asoflc_e_" + uuid.uuid4().hex[:8]
-        tag_c = "asoflc_c_" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "asof_lifecycle_")
+    def build(tag: str, base: str) -> str:
+        tag_e, tag_c = tag + "_e", tag + "_c"
         ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
         od = (
             load(spark, sf_dir, "orders")
@@ -3215,8 +3194,9 @@ def _asof_lifecycle_table(spark: SparkSession, sf_dir: str) -> str:
         compact_asof_epoch_layout(spark, f"{base}/e", tag_c, f"{base}/c", 8)
         register_staged_table(spark, tag_e)
         register_staged_table(spark, tag_c)
-        _ASOF_LIFECYCLE[key] = tag_c
-    return _ASOF_LIFECYCLE[key]
+        return tag_c
+
+    return staged(spark, "asof_lifecycle", (sf_dir,), build)
 
 
 @query(
@@ -3255,9 +3235,6 @@ def ts_epoch_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "ts", "o_orderkey", "o_totalprice")
 
 
-_ASOF_RECOVERY: dict = {}
-
-
 def _asof_recovery_table(spark: SparkSession, sf_dir: str) -> str:
     """Drive the epoch layout's CRASH path once per (app, sf): stage ->
     clean append of the last event week -> simulate the mid-append kill
@@ -3270,8 +3247,6 @@ def _asof_recovery_table(spark: SparkSession, sf_dir: str) -> str:
     driver hash then proves the whole detect -> recover -> read cycle:
     a rebuild that duplicated or lost rows in the marked epochs, or
     touched an unmarked one, changes the as-of result."""
-    import uuid
-
     from tstables_spark.operators.asof import (
         _EPOCH,
         _table_fs_root,
@@ -3282,10 +3257,7 @@ def _asof_recovery_table(spark: SparkSession, sf_dir: str) -> str:
         stage_asof_epoch_layout,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ASOF_RECOVERY:
-        tag = "asofrc_" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "asof_recovery_")
+    def build(tag: str, base: str) -> str:
         ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
         od = (
             load(spark, sf_dir, "orders")
@@ -3387,8 +3359,9 @@ def _asof_recovery_table(spark: SparkSession, sf_dir: str) -> str:
         if pending_asof_epoch_append(spark, tag) is not None:
             raise AssertionError("marker survived a completed recovery")
         register_staged_table(spark, tag)
-        _ASOF_RECOVERY[key] = tag
-    return _ASOF_RECOVERY[key]
+        return tag
+
+    return staged(spark, "asof_recovery", (sf_dir,), build)
 
 
 @query(
@@ -3425,21 +3398,13 @@ def ts_epoch_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "ts", "o_orderkey", "o_totalprice")
 
 
-_ASOF_MULTI_STAGED: dict = {}
-
-
 def _asof_multi_staged_table(spark: SparkSession, sf_dir: str) -> str:
     """Stage join_asof_multi's label + both feature sources as ONE
     bucketed-sorted relation once per (app, sf) — see
     operators/asof.py::stage_asof_multi_layout."""
-    import uuid
-
     from tstables_spark.operators.asof import stage_asof_multi_layout
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ASOF_MULTI_STAGED:
-        tag = "asofm_" + uuid.uuid4().hex[:8]
-        base = scratch_dir(spark, "asof_multi_presorted_")
+    def build(tag: str, base: str) -> str:
         ev = load(spark, sf_dir, "events")
         clicks = ev.where(F.col("event_type") == "click").select(
             "event_id", "user_id", "ts"
@@ -3475,8 +3440,9 @@ def _asof_multi_staged_table(spark: SparkSession, sf_dir: str) -> str:
             num_buckets=8,
         )
         register_staged_table(spark, tag)
-        _ASOF_MULTI_STAGED[key] = tag
-    return _ASOF_MULTI_STAGED[key]
+        return tag
+
+    return staged(spark, "asof_multi_presorted", (sf_dir,), build)
 
 
 @query(

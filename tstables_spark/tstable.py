@@ -755,12 +755,13 @@ class TimeSeriesTable:
         single-series special case of the as-of join family
         (operators/asof.py).
 
-        Cost discipline mirrors ``min_dt``/``max_dt``: walk date
-        partitions from ``at`` backwards, one pruned single-partition
-        ``max(ts)`` probe per day (answered from row-group footers via
-        parquet aggregate pushdown) until a day holds data, then read
-        exactly that timestamp's rows. Independent of table size; the
-        worst case is the empty-day gap span, never a full scan.
+        Cost discipline mirrors ``min_dt``/``max_dt`` (``_walk_days``):
+        walk date partitions from ``at`` backwards, one single-partition
+        top-1 probe (one job) per day until a day holds a row at-or-before
+        ``at``, then read exactly that timestamp's rows. Writes never
+        leave an empty ``date=`` dir, so that is at most two probes
+        (``at``'s own day, then the newest earlier day), independent of
+        table size.
         Returns an empty DataFrame when no row exists at-or-before
         ``at``. ``columns`` projects like ``read_range`` (ReadSchema
         pruning). Multiple rows sharing the winning timestamp are all
@@ -769,21 +770,15 @@ class TimeSeriesTable:
         at = _as_utc(at)
         names = self._projected_names(columns, "read_at")
         df = self._df()
-        for d in sorted(
-            (x for x in self._partition_dates() if x <= at.date()), reverse=True
-        ):
-            hit = (
-                df.where((F.col(DATE_COL) == F.lit(d)) & (F.col(TS_COL) <= F.lit(at)))
-                .agg(F.max(TS_COL))
-                .collect()[0][0]
-            )
-            if hit is not None:
-                return (
-                    df.where(
-                        (F.col(DATE_COL) == F.lit(d)) & (F.col(TS_COL) == F.lit(hit))
-                    ).select(*names)
-                )
-        return self.to_df().select(*names).limit(0)
+        found = self._walk_days(
+            df, True, last=at.date(), cond=F.col(TS_COL) <= F.lit(at)
+        )
+        if found is None:
+            return self.to_df().select(*names).limit(0)
+        d, hit = found
+        return df.where(
+            (F.col(DATE_COL) == F.lit(d)) & (F.col(TS_COL) == F.lit(hit))
+        ).select(*names)
 
     # -- A5/A6: min/max -----------------------------------------------------
     def _partition_dates(self) -> list:
@@ -802,22 +797,35 @@ class TimeSeriesTable:
                     pass
         return sorted(out)
 
+    def _walk_days(self, df: DataFrame, reverse: bool, last=None, cond=None):
+        """``(day, ts)``: the earliest ``ts`` of the oldest date partition
+        of ``df`` (this series' ``_df()``) holding a row that matches
+        ``cond`` — or, ``reverse``, the latest ``ts`` of the newest such
+        partition up to ``last``. None when no day qualifies.
+
+        One Spark job per probed day: each probe is a top-1 over ONE
+        date partition's ``ts`` column (a shuffle-free
+        TakeOrderedAndProject), so the cost is the number of days
+        probed, independent of total table size."""
+        days = [d for d in self._partition_dates() if last is None or d <= last]
+        order = F.col(TS_COL).desc() if reverse else F.col(TS_COL).asc()
+        for d in sorted(days, reverse=reverse):
+            pred = F.col(DATE_COL) == F.lit(d)
+            if cond is not None:
+                pred = pred & cond
+            top = df.where(pred).select(TS_COL).orderBy(order).limit(1).collect()
+            if top:
+                return d, top[0][0]
+        return None
+
     def _edge_dt(self, reverse: bool) -> datetime | None:
         """Reference semantics (``TsTable.min_dt``/``max_dt``): walk day
-        partitions from the edge inward until one holds data. Each probe
-        scans ONE date partition — with parquet aggregate pushdown the
-        min/max is answered from row-group footers — so the cost is
-        independent of total table size."""
-        agg = F.max(TS_COL) if reverse else F.min(TS_COL)
-        df = self._df()
-        for d in sorted(self._partition_dates(), reverse=reverse):
-            val = df.where(F.col(DATE_COL) == F.lit(d)).agg(agg).collect()[0][0]
-            if val is not None:
-                # collect() yields naive datetimes in session TZ (UTC,
-                # pinned in __init__); return tz-aware UTC like the
-                # reference's pytz-localized min_dt/max_dt.
-                return val.replace(tzinfo=timezone.utc)
-        return None
+        partitions from the edge inward until one holds data."""
+        found = self._walk_days(self._df(), reverse)
+        # collect() yields naive datetimes in session TZ (UTC, pinned in
+        # __init__); return tz-aware UTC like the reference's
+        # pytz-localized min_dt/max_dt.
+        return None if found is None else found[1].replace(tzinfo=timezone.utc)
 
     def min_dt(self) -> datetime | None:
         """Earliest timestamp (edge-partition walk, not a full scan)."""
