@@ -870,6 +870,71 @@ def test_knn_graph_contract(spark):
         assert got["nn_id"] == -best[1]
 
 
+def _knn_block_reference(pdf, k, id_col="vec_id", vec_col="embedding"):
+    """knn_graph's one-query-at-a-time block loop, kept as the oracle
+    of the chunked kernel."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf.sort_values(id_col)
+    ids = pdf[id_col].to_numpy()
+    n = len(ids)
+    if n < 2:
+        return pd.DataFrame({"qid": ids[:0], "nid": ids[:0], "cosine": []})
+    M = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    d = M.shape[1]
+    n2 = np.zeros(n)
+    for i in range(d):
+        n2 += M[:, i] * M[:, i]
+    outs = []
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for qi in range(n):
+            dot = np.zeros(n)
+            for i in range(d):
+                dot += M[qi, i] * M[:, i]
+            cos = dot / np.sqrt(n2[qi] * n2)
+            mask = ids != ids[qi]
+            c, nid = cos[mask], ids[mask]
+            if len(c) > k:
+                kth = np.partition(c, -k)[-k]
+                sel = c >= kth - 1.1e-4
+                c, nid = c[sel], nid[sel]
+            outs.append(pd.DataFrame({"qid": ids[qi], "nid": nid, "cosine": c}))
+    return pd.concat(outs, ignore_index=True)
+
+
+def test_knn_block_kernel_matches_per_query_loop():
+    """The chunked kNN block kernel returns the per-query loop's frame
+    exactly (cosine compared bitwise) on random blocks, with duplicate
+    ids, n <= k, an all-zero vector and chunks smaller than the block."""
+    import numpy as np
+    import pandas as pd
+
+    from tstables_spark.operators.similarity import _knn_block_kernel
+
+    rng = np.random.default_rng(7)
+    cases = []
+    for n in (1, 2, 3, 5, 6, 17, 40):
+        ids = rng.permutation(1000)[:n].astype(np.int64)
+        cases.append((ids, rng.standard_normal((n, 8))))
+    ids = rng.integers(0, 6, 30).astype(np.int64)  # duplicate ids
+    cases.append((ids, rng.standard_normal((30, 8))))
+    vecs = np.round(rng.standard_normal((25, 4)), 1)  # ties after rounding
+    vecs[3] = 0.0  # all-zero vector: NaN cosines
+    cases.append((np.arange(25, dtype=np.int64)[::-1].copy(), vecs))
+    for ids, vecs in cases:
+        pdf = pd.DataFrame({"vec_id": ids, "embedding": list(vecs)})
+        for k in (1, 5):
+            want = _knn_block_reference(pdf, k)
+            for chunk in (4_000_000, 7, 1):
+                got = _knn_block_kernel(k, "vec_id", "embedding", chunk)(pdf)
+                pd.testing.assert_frame_equal(got, want, check_exact=True)
+                assert np.array_equal(
+                    got["cosine"].to_numpy().view(np.int64),
+                    want["cosine"].to_numpy().view(np.int64),
+                )
+
+
 def test_tick_bars_sizes_and_ohlc(spark):
     """ts_tick_bars: every bar but the last per series holds exactly 200
     ticks; open/close equal the first/last tick by (ts, event_id); high

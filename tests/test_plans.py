@@ -5,6 +5,7 @@ visible in the executed plan, not just hoped for."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -1219,3 +1220,37 @@ def test_cc_mid_path_same_fixpoint(spark, monkeypatch):
     monkeypatch.setattr(C, "_ROUND_BCAST_ROWS", 0)
     plain = {tuple(r) for r in C.connected_components(e).collect()}
     assert bcast == plain
+
+
+def test_load_infers_fixture_schema_once(spark, sf_dir, tmp_path):
+    """tables.load infers a fixture's schema once: a second load runs no
+    Spark job and returns the same schema; a rewritten file or a changed
+    parquet conf infers again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.test_tstable import _jobs_run
+    from tstables_spark.plans import tables
+
+    shutil.copy(os.path.join(sf_dir, "nation.parquet"), tmp_path / "nation.parquet")
+    first = tables.load(spark, str(tmp_path), "nation")
+    again, jobs = _jobs_run(spark, lambda: tables.load(spark, str(tmp_path), "nation"))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    pq.write_table(pa.table({"n_nationkey": [1, 2], "extra": ["a", "b"]}), tmp_path / "nation.parquet")
+    rewritten, jobs = _jobs_run(spark, lambda: tables.load(spark, str(tmp_path), "nation"))
+    assert jobs >= 1
+    assert rewritten.columns == ["n_nationkey", "extra"]
+    assert rewritten.count() == 2
+
+    key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, "true")
+    try:
+        _, jobs = _jobs_run(spark, lambda: tables.load(spark, str(tmp_path), "nation"))
+    finally:
+        spark.conf.unset(key)
+    assert jobs >= 1

@@ -1025,6 +1025,56 @@ def cosine_range(
     )
 
 
+def _knn_block_kernel(k: int, id_col: str, vec_col: str, chunk_values: int = 4_000_000):
+    """``knn_graph``'s per-block kernel: for every vector, the other ids
+    (own id masked out, duplicates included) whose raw cosine is within
+    1.1e-4 of its k-th best, or all of them when at most k remain.
+    Query rows run in chunks of at most ``chunk_values`` cosines;
+    dots and norms still accumulate dimension by dimension, so every
+    value is bit-identical to a one-query-at-a-time loop. The kernel is
+    a closure so that it pickles by value: workers need not import
+    this package."""
+
+    def _block_knn(pdf):
+        import numpy as np
+        import pandas as pd
+
+        pdf = pdf.sort_values(id_col)
+        ids = pdf[id_col].to_numpy()
+        n = len(ids)
+        if n < 2:
+            return pd.DataFrame({"qid": ids[:0], "nid": ids[:0], "cosine": []})
+        M = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        d = M.shape[1]
+        n2 = np.zeros(n)
+        for i in range(d):
+            n2 += M[:, i] * M[:, i]
+        step = max(1, chunk_values // n)
+        qid, nid, cosine = [], [], []
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for a in range(0, n, step):
+                b = min(a + step, n)
+                dot = np.zeros((b - a, n))
+                for i in range(d):
+                    dot += M[a:b, i, None] * M[None, :, i]
+                cos = dot / np.sqrt(n2[a:b, None] * n2[None, :])
+                keep = ids[a:b, None] != ids[None, :]
+                big = keep.sum(axis=1) > k
+                if big.any():
+                    c = np.where(keep[big], cos[big], -np.inf)
+                    kth = np.partition(c, -k, axis=1)[:, -k]
+                    keep[big] &= cos[big] >= (kth - 1.1e-4)[:, None]
+                r, j = np.nonzero(keep)
+                qid.append(ids[a:b][r])
+                nid.append(ids[j])
+                cosine.append(cos[r, j])
+        return pd.DataFrame(
+            {"qid": np.concatenate(qid), "nid": np.concatenate(nid), "cosine": np.concatenate(cosine)}
+        )
+
+    return _block_knn
+
+
 def knn_graph(
     emb: DataFrame,
     k: int = 5,
@@ -1052,39 +1102,10 @@ def knn_graph(
     (left-to-right float order), matching DuckDB's sequential
     ``list_sum(list_transform(...))`` — see embedding_near_dup_pairs.
     """
-    import numpy as np
-    import pandas as pd
-
-    def _block_knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"qid": ids[:0], "nid": ids[:0], "cosine": []})
-        M = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        d = M.shape[1]
-        n2 = np.zeros(n)
-        for i in range(d):
-            n2 += M[:, i] * M[:, i]
-        outs = []
-        for qi in range(n):
-            dot = np.zeros(n)
-            for i in range(d):
-                dot += M[qi, i] * M[:, i]
-            cos = dot / np.sqrt(n2[qi] * n2)
-            mask = ids != ids[qi]
-            c, nid = cos[mask], ids[mask]
-            if len(c) > k:
-                kth = np.partition(c, -k)[-k]
-                sel = c >= kth - 1.1e-4
-                c, nid = c[sel], nid[sel]
-            outs.append(pd.DataFrame({"qid": ids[qi], "nid": nid, "cosine": c}))
-        return pd.concat(outs, ignore_index=True)
-
     raw = (
         emb.select(F.col(block_col).alias("blk"), F.col(id_col), vec_col)
         .groupBy("blk")
-        .applyInPandas(_block_knn, "qid long, nid long, cosine double")
+        .applyInPandas(_knn_block_kernel(k, id_col, vec_col), "qid long, nid long, cosine double")
     )
     w = W.partitionBy("qid").orderBy(F.col("cosine").desc(), "nid")
     return (

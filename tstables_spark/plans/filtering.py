@@ -601,6 +601,14 @@ def lm_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant (cache blocking) read 1.45 s. Windows: 1.41 s wall,
     task ~1.1 s, strictly fewer jobs.
 
+    Skew: the partitionBy(w1) and partitionBy(w2) windows have an
+    unbounded frame, so WindowExec buffers each key's whole partition.
+    A stopword-headed key (w1 = 'the') puts all of its bigram types in
+    one task, which stays within memory only by spilling and is a
+    straggler at large scale. A groupBy of the per-key totals joined
+    back to the type relation avoids the per-key buffering; switch to
+    that shape if a large-scale run shows this task as the straggler.
+
     Scale knob (§3.1): above _KN_PIN_BYTES_MIN of compressed corpus
     (summed input file sizes from file metadata — no gate job; a
     corpus whose files pyarrow cannot read stays in-plan) the type

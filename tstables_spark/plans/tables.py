@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,30 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
+@functools.lru_cache(maxsize=64)
+def _inferred_schema(spark: SparkSession, path: str, stamp, parquet_conf):
+    """The schema ``spark.read.parquet(path)`` infers (one Spark job).
+    The key holds what the inference depends on: the session, the
+    file's ``(st_mtime_ns, st_size)`` and the explicitly set parquet
+    confs, so a rewritten file or a changed conf infers again."""
+    return spark.read.parquet(path).schema
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per
+    (session, file version, parquet confs) instead of on every call."""
+    st = os.stat(path)
+    conf = tuple(
+        sorted(
+            (k, v)
+            for k, v in spark.conf.getAll.items()
+            if k.startswith(("spark.sql.parquet.", "spark.sql.legacy.parquet."))
+        )
+    )
+    schema = _inferred_schema(spark, path, (st.st_mtime_ns, st.st_size), conf)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -48,13 +73,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # 1.7e18 ns exceeds double's 2^53 integer range) — exactly
         # DuckDB's nanos->micros truncation, so oracles agree.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read(spark, path)
         from pyspark.sql import functions as F
 
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _normalize_ntz(df)
-    return _normalize_ntz(spark.read.parquet(path))
+    return _normalize_ntz(_read(spark, path))
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
