@@ -323,6 +323,124 @@ def test_kcore_peel_raises_past_max_iter(spark):
     assert kcore_peel(de, 2, max_iter=10).count() == 0
 
 
+def _actions_and_pins(spark, monkeypatch, fn):
+    """Run ``fn()`` under a fresh job group; return the number of Spark
+    actions it ran and the number of ``_staging.pin`` calls it made.
+
+    An action is one SQL execution: AQE submits each query stage (and
+    each broadcast build) of an action as its own job, so the jobs of
+    the group are mapped to the executions that own them."""
+    import time
+    import uuid
+
+    from tstables_spark.plans import _staging
+
+    pins = []
+    real_pin = _staging.pin
+
+    def counting_pin(*args, **kwargs):
+        pins.append(1)
+        return real_pin(*args, **kwargs)
+
+    monkeypatch.setattr(_staging, "pin", counting_pin)
+    sc = spark.sparkContext
+    group = "actions_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, "action count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.setattr(_staging, "pin", real_pin)
+    # the status store is fed by the listener bus in order: once a
+    # later job is visible, every job of the group is too
+    probe = "actions_probe_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(probe, "listener drain")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(probe):
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    actions = 0
+    for i in range(execs.size()):
+        ids = execs.apply(i).jobs().keySet().toSeq()
+        if any(int(ids.apply(j)) in jobs for j in range(ids.size())):
+            actions += 1
+    return actions, len(pins)
+
+
+def _cc_rounds(pairs):
+    """Rounds connected_components runs on ``pairs``, the last
+    (unchanged) one included: min-label propagation plus the
+    label-of-label jump from the second round on."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    lab = {n: n for n in adj}
+    rounds = 0
+    while True:
+        rounds += 1
+        new = {
+            n: min(
+                [lab[n]]
+                + [lab[m] for m in adj[n]]
+                + ([lab[lab[n]]] if rounds > 1 else [])
+            )
+            for n in adj
+        }
+        if new == lab:
+            return rounds
+        lab = new
+
+
+def test_fixpoint_kernels_one_action_per_round(spark, monkeypatch):
+    """connected_components and kcore_peel run exactly one Spark action
+    per round: the convergence probe (the label sum, the survivor
+    count) is observed on the round's pin, never a job of its own.
+    connected_components adds two fixed pins (the symmetric edge list
+    and the identity labels) and one edge count; kcore_peel adds
+    nothing."""
+    from tstables_spark.operators.components import connected_components
+    from tstables_spark.operators.kcore import kcore_peel
+
+    chain = [(i, i + 1) for i in range(33)]
+    rounds = _cc_rounds(chain)
+    assert rounds >= 5  # deep enough that rounds dominate the count
+    edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    got = {}
+    actions, pins = _actions_and_pins(
+        spark,
+        monkeypatch,
+        lambda: got.update(
+            (r.node, r.component) for r in connected_components(edges).collect()
+        ),
+    )
+    assert got == dict.fromkeys(range(34), 0)
+    # + 1 for the collect above
+    assert (actions, pins) == (rounds + 2 + 1 + 1, rounds + 2)
+
+    # the clique-plus-tail graph of test_kcore_peel_clique_plus_tail:
+    # at k=2 the tail peels one node per round (12, 11, 10), then one
+    # unchanged round confirms the fixpoint
+    clique = [(a, b) for a in range(5) for b in range(5) if a < b]
+    half = spark.createDataFrame(
+        clique + [(4, 10), (10, 11), (11, 12)], "u long, v long"
+    )
+    de = half.selectExpr("u AS src", "v AS dst").unionAll(
+        half.selectExpr("v AS src", "u AS dst")
+    ).localCheckpoint(eager=True)
+    for big_nodes in (False, True):
+        actions, pins = _actions_and_pins(
+            spark, monkeypatch, lambda: kcore_peel(de, 2, big_nodes=big_nodes)
+        )
+        assert (actions, pins) == (4, 4), big_nodes
+
+
 def test_salted_join_rejects_right_family(spark):
     """Right/full joins would duplicate unmatched dim rows salt times —
     the contract is scoped to the inner/left family (ADVICE r2)."""

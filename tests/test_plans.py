@@ -591,8 +591,8 @@ def test_r17_census_big_path_broadcast_gate(spark, sf_dir, monkeypatch):
     shuffle+SMJ that broadcast removes). Under the bound the optimized
     plan must carry the broadcast strategy hints and the answer must
     equal the small path's; with the bound forced to 0 the hints must
-    NOT appear (the sort-merge fallback for a sample that outgrows a
-    broadcast)."""
+    NOT appear and the sort-merge fallback (for a sample that outgrows
+    a broadcast) must give the same answer."""
     import tstables_spark.plans.analytics as A
 
     small = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
@@ -605,13 +605,10 @@ def test_r17_census_big_path_broadcast_gate(spark, sf_dir, monkeypatch):
     assert {tuple(r) for r in df.collect()} == small
 
     monkeypatch.setattr(A, "_CENSUS_BROADCAST_EDGES_MAX", 0)
-    lp0 = (
-        A.graph_triangles_approx(spark, sf_dir)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    df0 = A.graph_triangles_approx(spark, sf_dir)
+    lp0 = df0._jdf.queryExecution().optimizedPlan().toString()
     assert lp0.count("strategy=broadcast") == 1, lp0
+    assert {tuple(r) for r in df0.collect()} == small
 
 
 def test_r13_doulion_cut_validation_and_pin_cache(spark, sf_dir, monkeypatch):
@@ -785,7 +782,7 @@ def test_r13_kcore_big_paths_identical(spark, sf_dir, monkeypatch):
     """graph_kcore's big-graph strategies (streamed scratch-table edge
     pin above the STAGE-ECONOMICS pair-mass bound — the r14 knob-free
     auto-selection, _EDGE_STAGE_PAIRS_MIN; shuffle-hash survivor joins
-    + DISK_ONLY round pins above the node bound), forced by dropping
+    + streamed round pins above the node bound), forced by dropping
     both bounds to 1, must compute EXACTLY the broadcast/checkpoint
     answer — and repeat invocations must reuse the staged edge table
     instead of re-writing it per run (the DOULION/minhash repetition
@@ -821,6 +818,32 @@ def test_dedup_near_plain_session_flat_global(spark, sf_dir):
         )
         is None
     )
+
+
+def test_one_materialization_primitive():
+    """``_staging.pin`` is the package's only eager materialization and
+    every query runs on the caller's session: no call to
+    ``.localCheckpoint(`` outside ``plans/_staging.py`` and no call to
+    ``.newSession(`` anywhere in ``tstables_spark/``. Calls are found
+    in the syntax tree, so comments and docstrings may name them."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "tstables_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if not (
+                isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            attr = node.func.attr
+            if attr == "newSession" or (
+                attr == "localCheckpoint" and rel != "plans/_staging.py"
+            ):
+                bad.append(f"{rel}:{node.lineno} .{attr}(")
+    assert not bad, bad
 
 
 def test_stream_pin_bucketed_zero_exchange(spark, sf_dir):
@@ -1038,45 +1061,26 @@ def test_staged_fixture_lru_eviction(spark, sf_dir, monkeypatch):
 
 
 def test_aqe_trade_inverted(spark, sf_dir):
-    """r17 verdict #1: the AQE initialPartitionNum trade is INVERTED —
-    the engine global is flat (nothing sets the conf; AQE defaults to
-    the shuffle floor), the ten former flat-twin riders run on the
-    plain session, and the wedge-census family is the ONLY consumer of
-    a conf clone, now the x8 twin (_staging.wide_initial_partitions —
-    its 100x shuffle needs >32 initial reduce partitions for the 8g
-    heap envelope, the r12 OOM)."""
-    from tstables_spark.plans._staging import wide_initial_partitions
-
-    flat = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # former flat-twin riders: plain session, no clone
+    """Every query runs on the caller's session, the wedge-census
+    family included, and nothing sets AQE's initialPartitionNum: a
+    runtime conf the caller sets between two ``graph_triangles``
+    calls reaches the second call's frame."""
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     for name in (
         "dedup_near", "dedup_near_maxdf", "dedup_containment",
         "dedup_substring", "dedup_clusters", "dedup_cluster_sizes",
         "graph_degree_dist", "graph_jaccard",
+        "graph_triangles", "graph_triangles_approx", "graph_triangles_gate",
     ):
         assert QUERIES[name](spark, sf_dir).sparkSession is spark, name
-    # the census family binds to the x8 twin
-    twin = wide_initial_partitions(spark)
-    assert twin is not spark
-    # cached: same twin instance per (app, parent, overrides)
-    assert wide_initial_partitions(spark) is twin
-    assert int(
-        twin.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-    ) == flat * 8
-    # the twin inherits the parent's runtime confs (UTC is load-bearing)
-    assert twin.conf.get("spark.sql.session.timeZone") == spark.conf.get(
-        "spark.sql.session.timeZone"
-    )
-    for name in ("graph_triangles", "graph_triangles_approx",
-                 "graph_triangles_gate"):
-        assert QUERIES[name](spark, sf_dir).sparkSession is twin, name
-    # the global stays unset — flat by default for every other query
-    assert (
-        spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
-        )
-        is None
-    )
+    assert spark.conf.get(key, None) is None
+    wide = str(int(spark.conf.get("spark.sql.shuffle.partitions")) * 2)
+    spark.conf.set(key, wide)
+    try:
+        df = QUERIES["graph_triangles"](spark, sf_dir)
+        assert df.sparkSession.conf.get(key, None) == wide
+    finally:
+        spark.conf.unset(key)
 
 
 def test_cc_round_join_zero_exchange_zero_sort_on_edges(spark):

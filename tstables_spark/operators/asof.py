@@ -24,9 +24,8 @@ import warnings
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 _SIDE = "__asof_side"
 _TIME = "__asof_time"
@@ -243,6 +242,8 @@ def append_asof_layout(
     file per bucket (and therefore a zero-Sort read) matters more than
     append cost. Pass the same ``right_values`` order the table was
     staged with."""
+    from tstables_spark.plans._staging import pin
+
     staged = spark.table(table_name)
     left_cols = [c for c in staged.columns if c not in (_KEY, _TIME, _SIDE, _CARRY)]
     carry_t = staged.schema[_CARRY].dataType
@@ -262,9 +263,7 @@ def append_asof_layout(
                 lambda c: staged.schema[c].dataType,
             )
         )
-    merged = reduce(DataFrame.unionByName, parts).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    merged = pin(reduce(DataFrame.unionByName, parts))
     _write_asof_table(merged, table_name, path, num_buckets)
 
 
@@ -737,6 +736,8 @@ def append_asof_epoch_layout(
     name) resolves the staged table's persisted granularity, so
     named-granularity layouts append knob-free; only custom-callable
     layouts must re-supply the callable."""
+    from tstables_spark.plans._staging import dynamic_partition_overwrite, pin
+
     epoch_of = _resolve_epoch_of(spark, table_name, epoch_of)
     staged = spark.table(table_name)
     cols_order = staged.columns  # partition column last, per saveAsTable
@@ -779,17 +780,13 @@ def append_asof_epoch_layout(
     # metric (the components.py observe() trick) — no separate
     # distinct-collect scan per append, which matters for the
     # streaming caller where the per-batch wall is job-floor-bound.
-    from pyspark.sql import Observation
-
     obs = Observation()
-    new = (
-        union.withColumn(_EPOCH, epoch_of(F.col(_TIME)).cast("int"))
-        .observe(
+    new = pin(
+        union.withColumn(_EPOCH, epoch_of(F.col(_TIME)).cast("int")).observe(
             obs,
             F.collect_set(_EPOCH).alias("es"),  # collect_set drops NULLs
             F.sum(F.when(F.col(_EPOCH).isNull(), 1).otherwise(0)).alias("nnull"),
         )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     epochs = list(obs.get["es"])  # bounded: appends land in few epochs
     # NULL-epoch rows (a NULL time -> NULL epoch) land in the hive
@@ -800,17 +797,12 @@ def append_asof_epoch_layout(
     touched = F.col(_EPOCH).isin(epochs)
     if (obs.get["nnull"] or 0) > 0:
         touched = touched | F.col(_EPOCH).isNull()
-    keep = (
-        staged.where(touched)
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
+    keep = pin(staged.where(touched))
     # Lock-serialized dynamic-overwrite toggle (see
     # _staging.dynamic_partition_overwrite): the per-write option is
     # silently ignored by insertInto, and an unserialized conf toggle
     # races under concurrent writers in one session — reachable here
     # via the streaming foreachBatch caller.
-    from tstables_spark.plans._staging import dynamic_partition_overwrite
-
     # marker BEFORE the overwrite, removed only after it returns: the
     # keep-pin above is already materialized (eager checkpoint), so
     # everything after the marker is the destructive window
@@ -869,6 +861,8 @@ def recover_asof_epoch_append(
     re-runnable (same inputs -> same bytes, idempotent).
 
     Returns the sorted list of rebuilt epochs."""
+    from tstables_spark.plans._staging import dynamic_partition_overwrite, pin
+
     marker = pending_asof_epoch_append(spark, table_name)
     if marker is None:
         raise RuntimeError(
@@ -906,10 +900,8 @@ def recover_asof_epoch_append(
     scope = F.col(_EPOCH).isin(sorted(targets))
     if with_null:
         scope = scope | F.col(_EPOCH).isNull()
-    from pyspark.sql import Observation
-
     obs = Observation()
-    repl = (
+    repl = pin(
         union.withColumn(_EPOCH, epoch_of(F.col(_TIME)).cast("int"))
         .where(scope)
         .observe(
@@ -917,12 +909,9 @@ def recover_asof_epoch_append(
             F.collect_set(_EPOCH).alias("es"),
             F.sum(F.when(F.col(_EPOCH).isNull(), 1).otherwise(0)).alias("nnull"),
         )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     have = set(obs.get["es"])
     have_null = (obs.get["nnull"] or 0) > 0
-    from tstables_spark.plans._staging import dynamic_partition_overwrite
-
     if have or have_null:
         with dynamic_partition_overwrite(spark):
             (

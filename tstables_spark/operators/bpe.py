@@ -61,7 +61,7 @@ def bpe_train(
     the merge list (merge_rank, pair, cnt) — the tokenizer's merge
     table, in training order. Stops early if the pair space dries up.
 
-    The per-round ``localCheckpoint`` pins each state so round r's
+    The per-round ``_staging.pin`` pins each state so round r's
     aggregate doesn't re-execute rounds 1..r-1's replaces (the same
     iterated-lineage discipline as operators/components.py)."""
     merges, _ = bpe_train_with_state(words, n_merges, word_col, freq_col)
@@ -79,11 +79,15 @@ def bpe_train_with_state(
     (``bpe_encode``) reads: applying a trained tokenizer to the corpus
     is exactly replaying its merges over the word table, so training
     and encoding share this one loop."""
+    from tstables_spark.plans._staging import pin
+
     spark = words.sparkSession
-    state = words.select(
-        F.regexp_replace(F.col(word_col), "(.)", "|$1|").alias("s"),
-        F.col(freq_col).cast("long").alias("freq"),
-    ).localCheckpoint(eager=True)
+    state = pin(
+        words.select(
+            F.regexp_replace(F.col(word_col), "(.)", "|$1|").alias("s"),
+            F.col(freq_col).cast("long").alias("freq"),
+        )
+    )
     merges: list[tuple[int, str, int]] = []
     for r in range(1, n_merges + 1):
         top = (
@@ -97,12 +101,14 @@ def bpe_train_with_state(
         pair, cnt = top[0]["pair"], int(top[0]["cnt"])
         merges.append((r, pair, cnt))
         a, b = pair.split(" ")
-        state = state.select(
-            F.replace(
-                F.col("s"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
-            ).alias("s"),
-            "freq",
-        ).localCheckpoint(eager=True)
+        state = pin(
+            state.select(
+                F.replace(
+                    F.col("s"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
+                ).alias("s"),
+                "freq",
+            )
+        )
     return (
         local_df(spark, merges, "merge_rank int, pair string, cnt long"),
         state,

@@ -10,9 +10,9 @@ large-star/small-star, Kiveris et al., "Connected Components in
 MapReduce"). The jump makes convergence O(log diameter) instead of
 O(diameter): near-dup graphs are usually near-cliques (2-3 rounds),
 but sf0.1 produced a chain deeper than 20 hops and diameter-bound
-propagation timed out. Each round is ONE job (r13: the joins, the min
-aggregate AND the O(1) convergence sum all ride the round's checkpoint
-materialization via observe()); the driver only sees the single
+propagation timed out. Each round is ONE job (the joins, the min
+aggregate AND the O(1) convergence sum all ride the round's
+``_staging.pin`` via observe()); the driver only sees the single
 label-sum per round, never data. Since r17 the per-round EDGE cost is
 SIZE-ADAPTIVE, decided from the materialized edge count (a free count
 on the checkpoint): small graphs keep the r16 shape — plain per-round
@@ -36,7 +36,7 @@ unique regardless of partitioning — safe for exact oracle comparison
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -76,18 +76,19 @@ def connected_components(
     tuned for — raise ``max_iter`` or switch to a large-star/small-star
     O(log n) scheme.
     """
+    from tstables_spark.plans._staging import pin
+
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # undirected: propagate both ways — both orientations explode from
     # ONE scan of the upstream (r17: the former union's two legs each
     # evaluated the possibly-expensive pair derivation inside the
-    # materialization job). Materialize ONCE with the serialized
-    # checkpoint (the r12 pin discipline), then pick the per-round
+    # materialization job). Pin ONCE, then pick the per-round
     # EDGE layout from the now-free edge count (see module docstring):
     # small graphs iterate straight over the checkpoint (per-round
     # shuffles are tiny and AQE-coalesced); big graphs re-layout once
     # into a hash-partitioned columnar cache so no round shuffles or
     # sorts the O(E) relation again.
-    sym = (
+    sym = pin(
         e.select(
             F.explode(
                 F.array(
@@ -95,9 +96,7 @@ def connected_components(
                     F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
                 )
             ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        ).select("p.a", "p.b")
     )
     n_sym = sym.count()  # count on the checkpoint: free
     big = n_sym > _SYM_RELAYOUT_ROWS
@@ -129,23 +128,16 @@ def connected_components(
     # label, min can only shrink), so the label sum strictly decreases
     # every round until the fixpoint — equal sums ⟺ zero labels
     # changed. DECIMAL(38,0) keeps the sum exact at any node-id
-    # magnitude (1e9 nodes × 1e18 ids overflows int64). r13: the sum
-    # rides the checkpoint materialization itself via observe() —
-    # metrics are collected by the SAME job that pins the round, so the
-    # former per-round probe job (a full labels scan; ~half the
-    # per-round fixed cost in the SCALE.md r12 decomposition) is gone.
-    from pyspark.sql import Observation
-
-    def _pin_with_sum(df: DataFrame):
-        obs = Observation()
-        pinned = df.observe(
-            obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        return pinned, obs.get["s"]  # .get blocks on the checkpoint job
+    # magnitude (1e9 nodes × 1e18 ids overflows int64). The sum rides
+    # the round's pin via observe(): the SAME job that pins the round
+    # computes it, so no round runs a separate probe job.
+    label_sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
 
     # Pin the identity labels too: round 0 references them in two join
     # legs, and the pin doubles as the free initial-sum probe.
-    labels, prev_sum = _pin_with_sum(labels)
+    obs = Observation()
+    labels = pin(labels.observe(obs, label_sum))
+    prev_sum = obs.get["s"]
     for i in range(max_iter):
         # each node's candidate = min(own label, neighbors' labels).
         # Big path: SHUFFLE_HASH hint on the labels side — labels is
@@ -220,9 +212,11 @@ def connected_components(
             cand = cand.union(jump)
         new_labels = cand.groupBy("node").agg(F.min("component").alias("component"))
         # cut lineage each round: iterative joins otherwise stack plans
-        # exponentially. O(nodes) rows — serialized for pin-discipline
-        # consistency; the convergence sum rides the same job.
-        labels, s = _pin_with_sum(new_labels)
+        # exponentially. O(nodes) rows; the convergence sum rides the
+        # same job.
+        obs = Observation()
+        labels = pin(new_labels.observe(obs, label_sum))
+        s = obs.get["s"]
         if s == prev_sum:
             if pinned_sym is not None:
                 pinned_sym.unpersist()

@@ -345,6 +345,8 @@ def minhash_lsh_pairs(
     ``cache_key``: optional identity of ``docs`` (e.g. the sf_dir) —
     lets the big-corpus path reuse its streamed scratch tables across
     invocations (``_staging.staged`` entries; see _MINHASH_PIN_ROWS_MAX)."""
+    from tstables_spark.plans._staging import is_pinned, pin
+
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     # Physical-strategy knob BEFORE any data-sized materialization (the
@@ -356,8 +358,6 @@ def minhash_lsh_pairs(
     # cache_key, the big verdict is implied and the estimate scan (a
     # full docs pass) is skipped — the repeat-invocation path the cache
     # exists for must not re-scan the corpus just to re-derive `big`.
-    from tstables_spark.plans._staging import is_pinned, pin
-
     big = cache_key is not None and all(
         is_pinned(docs.sparkSession, p, cache_key + extra)
         for p, extra in (("mh_sh", (n,)), ("mh_sig", (n, num_hashes)))
@@ -610,15 +610,16 @@ def editdist_pairs(
     knobs to turn (shrink ``band_width``, raise the budget) instead of
     degrading into an invisible 10-hour stage. ``None`` disables.
     """
+    from tstables_spark.plans._staging import pin
+
     if max_candidate_pairs is not None:
         # Pinned: the estimate self-joins this tiny (lang, band)
         # histogram, and unpinned each side re-scans the corpus for
         # the occupancy aggregate (the minhash self-join lesson,
         # SCALE.md r11 — here the pin is rows-of-counts, KB).
-        occ = (
+        occ = pin(
             docs.groupBy("lang", F.expr(f"n_chars div {band_width}").alias("band"))
             .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         a, b = occ.alias("a"), occ.alias("b")
         # occupancy products in DOUBLE: a single hot block of ~3e9 docs
@@ -762,6 +763,8 @@ def simhash_pairs(
     recall 1.0 (the guarantee is exact, not probabilistic). Verify is a
     codegen'd ``bit_count(a XOR b)`` on the candidates only.
     """
+    from tstables_spark.plans._staging import pin
+
     n_bands = max_hamming + 1
     assert bits % n_bands == 0, "bits must divide into max_hamming+1 bands"
     w = bits // n_bands
@@ -772,12 +775,8 @@ def simhash_pairs(
     # pipeline — the corpus token explode plus the `bits`-column
     # conditional-sum aggregate, the exact wide-aggregate shape that
     # GC-thrashed minhash at 100x docs. One row of (doc_id, long) per
-    # doc, serialized (the corpus-sized-pin discipline, SCALE.md r11).
-    from pyspark import StorageLevel
-
-    fp = simhash_fingerprints(docs, bits).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    # doc.
+    fp = pin(simhash_fingerprints(docs, bits))
     band_structs = F.array(
         *[
             F.struct(
@@ -844,18 +843,13 @@ def prefix_dup_flags(
     giant-literal regime that breaks codegen. Output rows only for
     flagged docs: O(dups).
     """
-    from pyspark import StorageLevel
+    from tstables_spark.plans._staging import pin
 
-    # Serialized pin: this materialization carries FULL document texts
-    # (corpus-sized — the one relation here that cannot shrink), so it
-    # follows the serialized corpus-sized-pin discipline (SCALE.md r11)
-    # rather than the deserialized default.
-    d = (
+    d = pin(
         docs.select(id_col, text_col)
         .repartitionByRange(F.col(text_col), F.col(id_col))
         .sortWithinPartitions(text_col, id_col)
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     w = W.partitionBy("__pid").orderBy(text_col, id_col)
     led = d.withColumn("__nxt", F.lead(text_col).over(w))

@@ -18,8 +18,8 @@ Algorithm notes:
   is its unique fixpoint regardless of removal order (Batagelj-
   Zaversnik) — so equal survivor COUNTS in consecutive rounds prove
   set equality, an O(1) convergence probe with no join. Like the
-  connected-components kernel, the count rides the round's checkpoint
-  materialization via ``observe()``: one job per round, the driver
+  connected-components kernel, the count rides the round's
+  ``_staging.pin`` via ``observe()``: one job per round, the driver
   sees a single long, never data.
 - Determinism: degrees are integers and the fixpoint is unique, so
   the result is exactly comparable against an unrolled-SQL oracle
@@ -35,9 +35,8 @@ Algorithm notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def kcore_peel(
@@ -55,7 +54,8 @@ def kcore_peel(
     ``de`` must be materialized by the caller (pinned or staged —
     every round re-joins it). ``big_nodes`` flips the survivor-side
     join from broadcast to shuffle-hash and the per-round O(nodes)
-    pins to DISK_ONLY, the graph_pagerank wide-graph discipline.
+    pins to ``pin``'s streamed path, the graph_pagerank wide-graph
+    discipline.
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iter`` rounds: returning a non-fixpoint survivor set would
@@ -72,18 +72,7 @@ def kcore_peel(
     a data-derived k) pass it to skip round 0's rebuild of the same
     2|E| scan+shuffle.
     """
-    from pyspark.sql import Observation
-
-    level = (
-        StorageLevel.DISK_ONLY if big_nodes else StorageLevel.MEMORY_AND_DISK
-    )
-
-    def _pin_with_count(df: DataFrame):
-        obs = Observation()
-        pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True, storageLevel=level
-        )
-        return pinned, obs.get["n"]  # .get blocks on the checkpoint job
+    from tstables_spark.plans._staging import pin
 
     # Round 0 peels on FULL-graph degrees (the first peel needs no
     # survivor restriction: within-all degrees ARE full degrees).
@@ -91,8 +80,22 @@ def kcore_peel(
         deg0 = de.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("c")
         )
-    alive, prev = _pin_with_count(deg0.where(F.col("c") >= k))
-    for _ in range(max_iter):
+    d, prev = deg0, None
+    for _ in range(max_iter + 1):
+        # the survivor count rides the round's pin job via observe()
+        obs = Observation()
+        alive = pin(
+            d.where(F.col("c") >= k).observe(obs, F.count(F.lit(1)).alias("n")),
+            big_nodes,
+            "kcore_alive",
+        )
+        cnt = obs.get["n"]
+        if cnt == prev:
+            # Equal counts under monotone shrinkage <=> equal sets;
+            # alive's degrees were computed within that set, so they
+            # are the core degrees.
+            return alive
+        prev = cnt
         xa = alive.select(F.col("node").alias("xa"))
         ya = alive.select(F.col("node").alias("ya"))
         if big_nodes:
@@ -105,13 +108,6 @@ def kcore_peel(
             .groupBy(F.col("src").alias("node"))
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        alive2, cnt = _pin_with_count(d.where(F.col("c") >= k))
-        if cnt == prev:
-            # Equal counts under monotone shrinkage <=> equal sets;
-            # alive2's degrees were computed within that set, so they
-            # are the core degrees.
-            return alive2
-        alive, prev = alive2, cnt
     raise RuntimeError(
         f"kcore_peel did not converge in {max_iter} rounds (survivor "
         f"count still shrinking): raise max_iter"

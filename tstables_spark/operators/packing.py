@@ -62,6 +62,8 @@ def distributed_cumsum(
     shuffle size (r17) instead of a constant tuned for either local
     mode or the cluster.
     """
+    from tstables_spark.plans._staging import pin
+
     # Partition count: explicit when the caller passes one, else LET AQE
     # COALESCE the range shuffle by observed size (repartitionByRange
     # with no count is AQE-rebalanceable; a bare count pins it). The
@@ -81,9 +83,7 @@ def distributed_cumsum(
         if num_partitions
         else df.repartitionByRange(*cols)
     )
-    parts = ranged.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
+    parts = pin(ranged.withColumn("__pid", F.spark_partition_id()))
     local = W.partitionBy("__pid").orderBy(*order_cols)
     out = parts
     for c in value_cols:
@@ -220,6 +220,8 @@ def pack_sequences(
     themselves plus overflow — matching the window-SQL semantics
     exactly (see the oracle twin), not truncating.
     """
+    from tstables_spark.plans._staging import pin
+
     # MATERIALIZE the range partitioning before anything reads __pid:
     # two separate jobs (the totals collect below and the caller's final
     # action) each re-run an un-materialized repartitionByRange, and
@@ -237,9 +239,7 @@ def pack_sequences(
         if num_partitions
         else df.repartitionByRange(F.col(order_col))
     )
-    parts = ranged.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
+    parts = pin(ranged.withColumn("__pid", F.spark_partition_id()))
     local = W.partitionBy("__pid").orderBy(order_col)
     with_local = parts.withColumn(
         "__local_run", F.sum(weight_col).over(local)

@@ -20,7 +20,6 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 DIM = 64  # embeddings fixture dimension; callers pass dim= to override
 
@@ -567,8 +566,8 @@ def ivfpq_topk(
             n_cells, iters, m, pq_k, id_col, dim,
         )
     if full_key is not None:
-        # dead-app eviction (the _CONF_SCOPED discipline): a long-lived
-        # process cycling Spark apps must not pin dead apps' codebooks
+        # dead-app eviction: a long-lived process cycling Spark apps
+        # must not pin dead apps' codebooks
         app = full_key[0]
         for dead in [ck for ck in _PQ_TRAINED if ck[0] != app]:
             _PQ_TRAINED.pop(dead, None)
@@ -1172,10 +1171,12 @@ def nsw_topk(
     (rows-only driver check); the quality contract is hash-gated by
     sim_recall's recall@5 >= 0.8 floor alongside the IVF/LSH variants.
     """
+    from tstables_spark.plans._staging import pin
+
     # checkpoint=False keeps the full lineage (no eager jobs) so tests
     # can assert the join strategy of every round in ONE static plan;
     # production always pins (the iterative-lineage discipline).
-    cp = (lambda df: df.localCheckpoint(eager=True)) if checkpoint else (lambda df: df)
+    cp = pin if checkpoint else (lambda df: df)
     base = with_norm2(emb, vec_col=vec_col, dim=dim)
     # undirected edge relation from the exact per-block kNN graph
     g = knn_graph(emb, k=graph_k, block_col=block_col, id_col=id_col, vec_col=vec_col)
@@ -1452,13 +1453,15 @@ def append_nsw_layout(
     append would mix neighborhood sizes across blocks. Results after
     append are asserted identical to a fresh re-stage in
     tests/test_operators.py."""
+    from tstables_spark.plans._staging import dynamic_partition_overwrite, pin
+
     # Pinned eagerly FIRST: new_base feeds the two affected-set
     # collects, the kNN input, and the base partition rewrite — an
     # unpinned delta would be re-evaluated per consumer (4x), could
     # bake nondeterminism into base rows that differ from the rows the
     # edges were computed from, and would break if the caller derived
     # new_emb from the very tables the writes below overwrite.
-    new_base = (
+    new_base = pin(
         with_norm2(new_emb, vec_col=vec_col, dim=dim)
         .select(
             F.col(id_col),
@@ -1467,7 +1470,6 @@ def append_nsw_layout(
             F.col(block_col).alias("blk"),
             _nsw_pblk(F.col(block_col)).alias("pblk"),
         )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     affected = [r["blk"] for r in new_base.select("blk").distinct().collect()]
     apblks = sorted({r["pblk"] for r in new_base.select("pblk").distinct().collect()})
@@ -1480,19 +1482,20 @@ def append_nsw_layout(
     # eagerly WITH (v, n2): it feeds both the kNN input and the base
     # partition rewrite, and the latter reads the very partitions it
     # overwrites.
-    old_full = (
+    old_full = pin(
         spark.table(f"{table_name}_base")
         .where(in_ap & hit)
         .join(F.broadcast(new_base.select(id_col).distinct()), id_col, "left_anti")
         .select(id_col, "v", "n2", "blk", "pblk")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     # old ∪ new rows of the affected blocks: consumed by the kNN kernel,
-    # the edge blk join and the entries window — pin once, serialized
-    # (the r11 pin discipline), so the applyInPandas build runs once.
-    rows = old_full.select(id_col, "v", "blk").unionByName(
-        new_base.select(id_col, "v", "blk")
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    # the edge blk join and the entries window — pin once, so the
+    # applyInPandas build runs once.
+    rows = pin(
+        old_full.select(id_col, "v", "blk").unionByName(
+            new_base.select(id_col, "v", "blk")
+        )
+    )
     pblk = _nsw_pblk(F.col("blk")).alias("pblk")
     edges = _nsw_block_edges(rows, graph_k, "blk", id_col, "v").select(
         "src", "dst", "blk", pblk
@@ -1504,23 +1507,20 @@ def append_nsw_layout(
     # hash-share them): pinned eagerly — they are read from the very
     # partitions the overwrite below replaces. Bounded by the affected
     # fraction (|apblks| / 64) of the index.
-    keep_edges = (
+    keep_edges = pin(
         spark.table(f"{table_name}_edges")
         .where(in_ap & ~hit)
         .select("src", "dst", "blk", "pblk")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    keep_entries = (
+    keep_entries = pin(
         spark.table(f"{table_name}_entries")
         .where(in_ap & ~hit)
         .select("nid", "blk", "pblk")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    keep_base = (
+    keep_base = pin(
         spark.table(f"{table_name}_base")
         .where(in_ap & ~hit)
         .select(id_col, "v", "n2", "blk", "pblk")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     # insertInto is POSITIONAL and partition columns sit last in the
     # table schema — select in table order. All three writes are
@@ -1530,8 +1530,6 @@ def append_nsw_layout(
     # is lock-serialized (see _staging.dynamic_partition_overwrite —
     # the per-write option is silently ignored by insertInto, and an
     # unserialized toggle races under concurrent writers).
-    from tstables_spark.plans._staging import dynamic_partition_overwrite
-
     with dynamic_partition_overwrite(spark):
         edges.unionByName(keep_edges).write.insertInto(
             f"{table_name}_edges", overwrite=True
@@ -1572,7 +1570,9 @@ def nsw_topk_staged(
     keeps pinning because its lineage root is the expensive
     applyInPandas kNN build. Pass ``checkpoint=True`` for walks with
     many rounds where plan growth would outpace the re-scan cost."""
-    cp = (lambda df: df.localCheckpoint(eager=True)) if checkpoint else (lambda df: df)
+    from tstables_spark.plans._staging import pin
+
+    cp = pin if checkpoint else (lambda df: df)
     edges = spark.table(f"{table_name}_edges")
     base = spark.table(f"{table_name}_base")
     entries = spark.table(f"{table_name}_entries")

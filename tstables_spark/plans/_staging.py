@@ -1,4 +1,5 @@
-"""Per-application scratch space and the one stage-once registry.
+"""Per-application scratch space, the one stage-once registry and the
+one materialization primitive.
 
 Every layout the plans stage lives under ONE per-application temp root
 (``scratch_dir``), removed at interpreter exit.
@@ -17,8 +18,25 @@ registry, keyed by (applicationId, prefix, key):
 - race-checked: of two concurrent builds of one key the first wins;
   the loser's tables and dir are dropped.
 
-``pin`` and ``stream_pin``, the checkpoint-or-stream materialization,
-are callers of it.
+``pin`` is the engine's one eager materialization: every relation a
+plan or operator consumes more than once, or whose lineage an
+iteration must cut, goes through it, and nothing else in the package
+calls ``localCheckpoint``. It has two paths:
+
+- small (the default): an eager ``localCheckpoint`` at serialized
+  ``MEMORY_AND_DISK``. Serialized blocks take a fraction of the heap
+  of the deserialized rows Spark's default level keeps, so less of a
+  pin spills and less GC pressure builds, and the memory-first read
+  keeps the small pins of the iterative kernels fast.
+- big: ``stream_pin``, a scratch Parquet table written by a streaming
+  file write. A checkpoint holds one serialized block per task in the
+  heap at once, so a corpus-sized relation does not fit one; a file
+  write runs at constant memory and consumers re-scan the files.
+  Optionally cached per key in ``staged`` and bucketed on a join key.
+
+An ``Observation`` attached to the pinned frame is reported by the
+pin's own job on both paths, so a per-round probe (a label sum, a
+survivor count) costs no extra job.
 
 The free statistics the size gates read (``file_stats``: input file
 sizes and Parquet footers, no Spark job) live here too.
@@ -309,16 +327,12 @@ def stream_pin(
     num_buckets: int | None = None,
 ):
     """Materialize a multiply-consumed CORPUS-SIZED relation by
-    STREAMING it into a scratch parquet table, the big-graph
-    alternative to a localCheckpoint pin: checkpoint materialization
-    holds one serialized per-task block in heap simultaneously (the 8g
-    GCLocker OOM SCALE.md r12 measured), while a file write streams at
-    constant memory and consumers re-scan files. ``cache_key``: a
-    tuple identifying the relation as a pure function of its inputs —
-    when given, the table is a ``staged`` entry. ``bucket_by`` /
-    ``num_buckets``: optionally bucket the staged table so
-    key-clustered consumers (a groupBy or shuffle-hash join on the
-    bucket key) read it with ZERO exchange."""
+    STREAMING it into a scratch parquet table: ``pin``'s big path (see
+    the module docstring). ``cache_key``: a tuple identifying the
+    relation as a pure function of its inputs — when given, the table
+    is a ``staged`` entry. ``bucket_by`` / ``num_buckets``: optionally
+    bucket the staged table so key-clustered consumers (a groupBy or
+    shuffle-hash join on the bucket key) read it with ZERO exchange."""
     spark = df.sparkSession
     nb = None
     if bucket_by is not None:
@@ -344,16 +358,16 @@ def stream_pin(
 
 def pin(
     df,
-    big: bool,
-    prefix: str,
+    big: bool = False,
+    prefix: str = "pin",
     cache_key: tuple | None = None,
     bucket_by: str | None = None,
 ):
-    """Materialize a multiply-consumed relation: a serialized
-    ``MEMORY_AND_DISK`` localCheckpoint when it is small (fast,
-    memory-first), a ``stream_pin`` scratch table when ``big`` (no
-    corpus-sized checkpoint blocks on the heap; reused per
-    ``cache_key``, bucketed by ``bucket_by``)."""
+    """Materialize ``df`` eagerly and return the pinned frame (see the
+    module docstring): a serialized ``MEMORY_AND_DISK`` localCheckpoint
+    unless ``big``, else a ``stream_pin`` scratch table named after
+    ``prefix``, reused per ``cache_key`` and bucketed by
+    ``bucket_by``."""
     if not big:
         from pyspark import StorageLevel
 
@@ -376,107 +390,6 @@ def register_staged_table(spark, table: str) -> None:
     if builds:
         builds[-1].append(table)
     atexit.register(_drop_tables, spark, (table,))
-
-
-_CONF_SCOPED: dict = {}
-_CONF_SCOPED_LOCK = threading.Lock()
-
-
-def _evict_dead_conf_twins() -> None:
-    """Drop twin-cache entries whose parent's SparkContext has stopped:
-    they pin dead SparkSession/SessionState pairs forever otherwise
-    (the _APP_ROOTS per-app discipline applied to sessions). Caller
-    holds ``_CONF_SCOPED_LOCK``."""
-    dead = []
-    for key, (parent, _twin) in _CONF_SCOPED.items():
-        try:
-            sc = parent.sparkContext
-            if sc is None or sc._jsc is None:
-                dead.append(key)
-        except Exception:
-            dead.append(key)
-    for key in dead:
-        _CONF_SCOPED.pop(key, None)
-
-
-def conf_scoped_session(spark, overrides: dict):
-    """A SQLConf-scoped twin of ``spark``: same SparkContext and
-    external catalog, OWN SQLConf — the only scope that makes an
-    EXECUTION-TIME conf local to one query's DataFrame. A set/restore
-    around plan CONSTRUCTION is invisible to the driver's later
-    execution of the returned frame, and a plain global set is exactly
-    the named global trade this helper exists to avoid (SCALE.md r13
-    bisection: AQE initialPartitionNum x8 buys the wedge census its 8g
-    completion and costs dedup_near 1.6x at the 100x envelope — two
-    right answers, one conf slot; r17 inverted the default so the
-    census is the twin rider, see wide_initial_partitions).
-
-    ``newSession()`` inherits only BUILDER-time confs (they live in the
-    SparkContext conf), so the parent's explicitly-set runtime confs —
-    the driver wrapper's UTC/NTZ/output-timestamp trio, harness shuffle
-    sizing — are copied onto the clone first (``SET`` enumerates them;
-    static entries that reject runtime set are skipped), then the
-    overrides land on top. Cached per (app, overrides): SessionState
-    construction is not free and queries re-run every round.
-
-    Cache semantics (r14 advice): the twin snapshots the parent's
-    runtime confs ONCE, at creation — a parent conf changed AFTER the
-    twin is cached does NOT propagate to it (by design: the twin's
-    whole point is an immutable per-query conf scope; callers that
-    need a different base must pass it in ``overrides``). The cache is
-    lock-guarded (streaming foreachBatch threads reach it) and evicts
-    entries whose parent SparkContext has stopped, so a long-lived
-    process cycling sessions does not pin dead SessionStates."""
-    key = (
-        spark.sparkContext.applicationId,
-        id(spark),  # two sessions in one app must not share a clone
-        tuple(sorted((str(k), str(v)) for k, v in overrides.items())),
-    )
-    with _CONF_SCOPED_LOCK:
-        hit = _CONF_SCOPED.get(key)
-        if hit is not None:
-            return hit[1]
-    s = spark.newSession()
-    for r in spark.sql("SET").collect():
-        k, v = r[0], r[1]
-        if not k.startswith("spark.sql."):
-            continue
-        try:
-            s.conf.set(k, v)
-        except Exception:
-            pass  # static conf (can only be set at builder time)
-    for k, v in overrides.items():
-        s.conf.set(k, str(v))
-    # the PARENT rides in the cache entry: id(spark) is only a stable
-    # key while the parent is alive, so pin it — a GC'd session's
-    # reused id must never serve a twin cloned from a dead session
-    with _CONF_SCOPED_LOCK:
-        _evict_dead_conf_twins()
-        # a racing builder may have landed the same key while we were
-        # cloning — keep the first (both are valid; one clone leaks
-        # nothing beyond its SessionState until app end)
-        return _CONF_SCOPED.setdefault(key, (spark, s))[1]
-
-
-def wide_initial_partitions(spark):
-    """The conf-scoped twin with AQE's initialPartitionNum raised to 8x
-    the shuffle floor — the INVERSE of r16's flat twin (r17 verdict #1):
-    the engine global is now flat (session.py), because the x8 setting
-    taxed every medium-cardinality shuffle chain ~1.4-1.6x at the 100x
-    envelope (SCALE.md r13/r16 bisections) and had exactly ONE
-    load-bearing consumer — the wedge census, whose uniformly-huge 100x
-    shuffle needs >32 initial reduce partitions to keep per-task
-    join/sort state under the 8g heap envelope (the r12 OOM). The
-    census family binds its frames to this twin; results are identical
-    (partition count only — AQE coalesces small stages back down)."""
-    return conf_scoped_session(
-        spark,
-        {
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
-                int(spark.conf.get("spark.sql.shuffle.partitions")) * 8
-            )
-        },
-    )
 
 
 class FileStats(NamedTuple):

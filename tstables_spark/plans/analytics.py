@@ -16,14 +16,13 @@ row-scale data to the driver, and every aggregate is partial-agg
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tstables_spark._exact import exact_sum, sql_sum
 from tstables_spark.plans.registry import query
 from tstables_spark.plans._portable_sql import epoch_floor_div
-from tstables_spark.plans._staging import pin, register_staged_table, staged
+from tstables_spark.plans._staging import pin
 from tstables_spark.plans.tables import load
 
 
@@ -624,15 +623,9 @@ def graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence graph), bounded by a property test with a synthetic
     10k-user bucket.
 
-    The engine-global AQE initialPartitionNum is FLAT since r17
-    (session.py inverted the r13 trade): the r15 'unattributed ~1.6x
-    100x residual vs r11' was bisected in r16 to exactly the old
-    engine-global x8 setting (same box, same fixture — 10M rows /
-    9,920,100 memberships re-verified — same bytes of plan code:
-    flat-32 79.5 s ≈ the r11 76 s, +initialPartitionNum x8 112.5 s,
-    +pageSize/G1-only 85.7 s; SCALE.md r16). The x8 now lives in a
-    conf twin scoped to its one consumer, the wedge census; this plan
-    runs on the plain session."""
+    AQE's initialPartitionNum stays at Spark's default (session.py): a
+    x8 initial partition count cost this plan 112.5 s vs 79.5 s at the
+    100x envelope (SCALE.md r16)."""
     ev = load(spark, sf_dir, "events")
     # raw memberships: cooccurrence_edges' collect_set dedups repeat
     # activity inside its one aggregate (r17) — the former separate
@@ -1184,12 +1177,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     - distributed, above it. Two measured 1-row statistics
       (``_graph_scale_stats``) steer two independent axes. Edge
       layout: under _EDGE_PIN_PAIRS_MAX capped pair mass the half-edge
-      list is a serialized localCheckpoint; above it the directed list
-      is staged once per (app, sf_dir) as a table bucketed by src, so
-      deg and every round's join read it with no edge-side exchange.
-      Rank join: under _PR_BROADCAST_NODES_MAX nodes the per-node
+      list is pinned in memory; above it the directed list is staged
+      once per (app, sf_dir) as a table bucketed by src, so deg and
+      every round's join read it with no edge-side exchange. Rank
+      join: under _PR_BROADCAST_NODES_MAX nodes the per-node
       contribution relation is broadcast; above it it shuffle-hash
-      joins into the bucket layout and the O(nodes) pins go DISK_ONLY.
+      joins into the bucket layout and the O(nodes) pins stream to
+      scratch tables. Every pin is ``_staging.pin``.
       Each round pins its ranks (lineage cut), so construction runs
       one job per round plus the pins and statistics.
 
@@ -1217,6 +1211,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _directed(half: DataFrame) -> DataFrame:
+    """Both orientations ``(src, dst)`` of a half-edge list ``(u, v)``."""
+    return half.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+        half.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+
+
 def _pagerank_distributed(
     spark: SparkSession, sf_dir: str, b0: DataFrame, n_est: int, pair_est: int
 ) -> DataFrame:
@@ -1227,50 +1228,25 @@ def _pagerank_distributed(
     big_edges = pair_est > _EDGE_PIN_PAIRS_MAX
     edges = cooccurrence_edges(b0, cap=256)
     if big_edges:
-        # Stage the directed edge list bucketed by src, streamed into
-        # files rather than pinned: a corpus-sized localCheckpoint holds
-        # one serialized block per task in heap at once (the 8g OOM in
-        # SCALE.md), a bucketed write is a constant-memory sort + stream
-        # per task. Staged once per (app, sf_dir): the relation is a
+        # The directed edge list streamed into a scratch table bucketed
+        # by src (pin's big path: no corpus-sized checkpoint blocks on
+        # the heap), staged once per (app, sf_dir): the relation is a
         # pure function of the input, and re-writing GBs per call
         # exhausts disk.
-        def build(tag: str, d: str) -> str:
-            nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            (
-                edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-                .unionAll(
-                    edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-                )
-                .write.bucketBy(nb, "src")
-                .option("path", d + "/de")
-                .mode("overwrite")
-                .saveAsTable(tag)
-            )
-            register_staged_table(spark, tag)
-            return tag
-
-        de = spark.table(staged(spark, "pr_edges", (sf_dir,), build))
+        de = pin(
+            _directed(edges), True, "pr_edges", cache_key=(sf_dir,), bucket_by="src"
+        )
     else:
-        eh = edges.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        de = eh.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            eh.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
+        de = _directed(pin(edges))
     # deg is O(nodes): pin once instead of re-deriving it from a 2|E|
     # scan + shuffle in every round's join. On the bucketed layout the
-    # aggregate has no exchange. Wide graphs keep O(nodes) pins
-    # DISK_ONLY: memory-first pins accumulate in heap faster than the
-    # ContextCleaner reaps dead generations.
-    deg = (
-        de.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint(
-            eager=True,
-            storageLevel=StorageLevel.DISK_ONLY
-            if big_nodes
-            else StorageLevel.MEMORY_AND_DISK,
-        )
+    # aggregate has no exchange. Wide graphs stream their O(nodes) pins
+    # to scratch tables: memory-first pins accumulate in heap faster
+    # than the ContextCleaner reaps dead generations.
+    deg = pin(
+        de.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree")),
+        big_nodes,
+        "pr_deg",
     )
     n = deg.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]  # 1-row
     ranks = deg.select(
@@ -1279,12 +1255,7 @@ def _pagerank_distributed(
     for _ in range(3):
         # O(nodes) eager pin: cuts the iteration lineage and feeds the
         # rank side of the join from materialized rows.
-        rk = ranks.localCheckpoint(
-            eager=True,
-            storageLevel=StorageLevel.DISK_ONLY
-            if big_nodes
-            else StorageLevel.MEMORY_AND_DISK,
-        )
+        rk = pin(ranks, big_nodes, "pr_ranks")
         # c18 depends only on the src node: evaluate it once per node
         # on the O(nodes) side, not once per directed edge.
         rks = rk.select("node", F.expr("pr12 * 1000000L div degree").alias("c18"))
@@ -1490,19 +1461,18 @@ def ts_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # those jobs re-scans and re-aggregates the raw events table —
     # ReuseExchange dedups within one plan, never across the separate
     # checkpoint/collect jobs the two-phase cumsums run.
-    c = (
+    c = pin(
         ev.select(
             F.col("event_type").alias("et"),
             F.round(F.col("value") * 100).cast("long").alias("tick"),
         )
         .groupBy("et", "tick")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     med = _grouped_median2(c, "et", "tick", "cnt").select(
         "et", "n", F.col("m2").alias("med2")
     )
-    d = (
+    d = pin(
         c.join(F.broadcast(med.select("et", "med2")), "et")
         .select(
             "et",
@@ -1511,7 +1481,6 @@ def ts_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("et", "dev2")
         .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     mad = _grouped_median2(d, "et", "dev2", "cnt").select(
         "et", F.col("m2").alias("mad4")
@@ -1564,8 +1533,8 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
     GENERATED AND CONSUMED IN ONE PIPELINED STAGE (scan -> probe ->
     probe -> partial count) and never touches an exchange, sort, or
     shuffle file. Above the bound the sort-merge path stands (at true
-    100 TB scale a billion-edge sample outgrows any broadcast; the x8
-    twin keeps its per-task sort state bounded — the r12 envelope).
+    100 TB scale a billion-edge sample outgrows any broadcast), on the
+    caller's session and its shuffle partition count.
     The small path is untouched: sub-threshold relations already
     auto-broadcast (the committed sf0.1 plan), and adding hints there
     would only churn plans the bench pins.
@@ -1777,14 +1746,8 @@ def graph_triangles_approx(
     p=3/4 sampled wedge spill measurably exceeds the box's 80 GB disk
     (SCALE.md r12), and two independent low-p runs cross-check each
     other's estimates there. The estimate t_s * 256^3 div keep^3 is
-    exact integer arithmetic — no float enters either engine.
-
-    Census family: rides the x8-initialPartitionNum conf twin like
-    graph_triangles (r17 — the sampled wedge shuffle at 100x/low p is
-    still the biggest shuffle in the engine; see graph_triangles)."""
-    from tstables_spark.plans._staging import wide_initial_partitions
-
-    spark = wide_initial_partitions(spark)
+    exact integer arithmetic — no float enters either engine. Runs on
+    the caller's session (see graph_triangles)."""
     ev = load(spark, sf_dir, "events")
     b0 = ev.select(
         "user_id", F.expr(epoch_floor_div("unix_micros(ts)", 60000000)).alias("bucket")
@@ -1847,22 +1810,15 @@ def graph_triangles_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.0696 at sf0.01 (574 exact triangles), 0.0059-scale at sf0.1
     (613k) — the 1/sqrt(t p^3) concentration in action. Runs at
     fixture scale where the exact census is cheap; at 100x only the
-    estimator runs (the point of having it). Census family: rides the
-    x8-initialPartitionNum conf twin (r17; see graph_triangles)."""
-    from tstables_spark.plans._staging import wide_initial_partitions
-
-    spark = wide_initial_partitions(spark)
+    estimator runs (the point of having it). Runs on the caller's
+    session (see graph_triangles)."""
     ev = load(spark, sf_dir, "events")
     b0 = ev.select(
         "user_id", F.expr(epoch_floor_div("unix_micros(ts)", 60000000)).alias("bucket")
     )  # raw memberships: the edge aggregate dedups (r17)
-    e = cooccurrence_edges(b0, cap=256).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    e = pin(cooccurrence_edges(b0, cap=256))
     # the sampled subset filters the SAME pin — no second edge derivation
-    se = _doulion_sample(e).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    se = pin(_doulion_sample(e))
     tri_e, _ = _oriented_census(e)
     tri_s, _ = _oriented_census(se)
     est = F.expr(f"ts * {_DOULION_NUM}L div {_DOULION_DEN}L")
@@ -1952,30 +1908,19 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree, id) order is compared LEXICOGRAPHICALLY — a composite
     degree*K + id scalar would overflow int64 for snowflake-scale
     ids, exactly the 100-TB regime. Edges are
-    materialized once with an eager localCheckpoint (three join legs);
+    pinned once (``_staging.pin``; three join legs);
     wedges = sum deg*(deg-1)/2 exactly in BIGINT; clustering
     3T/wedges is one double multiply + divide rounded at 6dp —
     identical in both engines.
 
-    Runs on the CONF-SCOPED x8-initialPartitionNum twin (r17: the
-    engine global is flat now — session.py inverted the r13 trade —
-    and the census is the ONE consumer the x8 existed for: its
-    uniformly-huge 100x wedge shuffle needs >32 initial reduce
-    partitions to keep per-task join/sort state inside the 8g heap
-    envelope, the r12 measured OOM). Results identical (partition
-    count only)."""
-    from tstables_spark.plans._staging import wide_initial_partitions
-
-    spark = wide_initial_partitions(spark)
+    Like every query, the census family runs on the caller's session
+    and its confs; the wedge shuffle's width is the session's shuffle
+    partition count, coalesced by AQE."""
     ev = load(spark, sf_dir, "events")
     b0 = ev.select(
         "user_id", F.expr(epoch_floor_div("unix_micros(ts)", 60000000)).alias("bucket")
     )  # raw memberships: the edge aggregate dedups (r17)
-    # Edge-sized pins are serialized (the graph_pagerank 100x lesson,
-    # SCALE.md r11): this relation scales with the corpus.
-    e = cooccurrence_edges(b0, cap=256).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    e = pin(cooccurrence_edges(b0, cap=256))
     tri, deg = _oriented_census(e)
     w = deg.agg(
         F.sum(F.expr("degree * (degree - 1) div 2")).alias("wedges"),
@@ -2149,11 +2094,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is constant-memory regardless of size; consumers re-scan
         # files) — the pagerank big-edge discipline via _staging.pin.
         de = pin(
-            half.select(
-                F.col("u").alias("src"), F.col("v").alias("dst")
-            ).unionAll(
-                half.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-            ),
+            _directed(half),
             True,
             "kcore_de",
             cache_key=(sf_dir, "kcore", "10"),
@@ -2163,10 +2104,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Pin the HALF list (the _EDGE_PIN_PAIRS_MAX bound is in
         # half-edges — pinning 2|E| is the r11 pagerank OOM); both
         # directions derive lazily from the pinned rows.
-        eh = pin(half, False, "kcore_eh")
-        de = eh.select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ).unionAll(eh.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+        de = _directed(pin(half))
     # k = max(2, 3*med div 4); med = exact ascending-rank median of
     # full-graph degrees. Histogram (O(distinct degree values) rows)
     # + two-phase distributed prefix sum — no single-task window; the
@@ -2176,15 +2114,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # peel's round 0 all consume it — unpinned, each re-runs the full
     # 2|E| aggregate (review r13: a lazy deg0 made the pass-through
     # parameter a no-op).
-    deg0 = (
-        de.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(
-            eager=True,
-            storageLevel=StorageLevel.DISK_ONLY
-            if big_nodes
-            else StorageLevel.MEMORY_AND_DISK,
-        )
+    deg0 = pin(
+        de.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("c")),
+        big_nodes,
+        "kcore_deg0",
     )
     n = deg0.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
     rank = (n + 1) // 2
@@ -2357,13 +2290,8 @@ def assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     it replaces."""
     li = load(spark, sf_dir, "lineitem")
     pt = load(spark, sf_dir, "part")
-    # Serialized pin (not the deserialized default): the basket
-    # relation is the plan's one fact-sized materialization — the r9
-    # 10x-OOM driver-heap knob (README) exists because of it.
-    # Serialized rows cost ~4x less heap and spill gracefully, the
-    # same sizing fix measured on minhash's fingerprint pin
-    # (operators/dedup.py, SCALE.md r11).
-    baskets = (
+    # the plan's one fact-sized materialization (three consumers)
+    baskets = pin(
         li.join(
             F.broadcast(pt.select("p_partkey", "p_brand")),
             li["l_partkey"] == F.col("p_partkey"),
@@ -2371,7 +2299,6 @@ def assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("item"))
         .groupBy("ok")
         .agg(F.sort_array(F.collect_set("item")).alias("items"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     # every basket has >= 1 item by construction (inner join), so
     # count-star over basket rows == the old countDistinct(ok)
@@ -2503,13 +2430,12 @@ def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.w", "e.x")
-    adj = (
-        sym.groupBy("w")
-        .agg(F.slice(F.sort_array(F.collect_set("x")), 1, 32).alias("xs"))
-        # node-count-sized (32-capped adjacency arrays), consumed by
-        # both the degree and the co-membership branches: serialized
-        # pin per the edge-pin discipline (SCALE.md r11)
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    # node-count-sized (32-capped adjacency arrays), consumed by both
+    # the degree and the co-membership branches
+    adj = pin(
+        sym.groupBy("w").agg(
+            F.slice(F.sort_array(F.collect_set("x")), 1, 32).alias("xs")
+        )
     )
     cdeg = adj.select(F.explode("xs").alias("x")).groupBy("x").agg(
         F.count("*").alias("d")

@@ -25,6 +25,7 @@ from tstables_spark.operators.similarity import (
 )
 from tstables_spark._exact import exact_sum as _exact_sum
 from tstables_spark._exact import sql_sum as _sql_sum
+from tstables_spark.plans._staging import pin
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 
@@ -642,13 +643,15 @@ def _pca_power_state(emb: DataFrame, rounds: int, dims: int):
     # dropping the pin and re-running the quantize map twice measured a
     # WASH at sf0.1 (2.69 s pinned vs 2.78 s lazy, 3-run min — SCALE.md
     # measured non-win), so the simpler always-pinned form stays.
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1048576)"
-            " AS BIGINT))"
-        ).alias("q"),
-    ).localCheckpoint(eager=True)
+    q = pin(
+        emb.select(
+            "vec_id",
+            F.expr(
+                "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1048576)"
+                " AS BIGINT))"
+            ).alias("q"),
+        )
+    )
     mu_rows = (
         q.select(F.posexplode("q").alias("dim", "x"))
         .groupBy("dim")
@@ -659,10 +662,9 @@ def _pca_power_state(emb: DataFrame, rounds: int, dims: int):
     for r in mu_rows:
         mu[r["dim"]] = int(r["m"])
     mu_lit = F.array(*[F.lit(m) for m in mu])
-    z = q.select(
-        "vec_id",
-        F.zip_with("q", mu_lit, lambda a, b: a - b).alias("z"),
-    ).localCheckpoint(eager=True)
+    z = pin(
+        q.select("vec_id", F.zip_with("q", mu_lit, lambda a, b: a - b).alias("z"))
+    )
     v = [1 << 20] * dims
     for _ in range(rounds):
         v_lit = F.array(*[F.lit(int(x)) for x in v])

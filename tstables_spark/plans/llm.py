@@ -8,8 +8,6 @@ the operators/ modules.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +46,7 @@ from tstables_spark.plans._portable_sql import (
 )
 from tstables_spark.plans._textnorm import norm_sql as _norm_sql
 from tstables_spark.plans._textnorm import norm_text as _norm_text
-from tstables_spark.plans._staging import scratch_dir
+from tstables_spark.plans._staging import pin, scratch_dir
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 
@@ -229,14 +227,10 @@ def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join (operators/dedup.py — the exact baseline the LSH variant
     approximates).
 
-    AQE's initialPartitionNum is FLAT at the engine global since r17
-    (session.py): the r13-r16 rounds proved the old global x8 cost
-    this query's two posting shuffles 1.6x at the 100x envelope in
-    pure reduce-task overhead (SCALE.md r13 six-row bisection) and ten
-    queries ended up riding a conf-scoped flat twin to undo it — the
-    trade is now inverted, the wedge census (the one x8 consumer)
-    rides _staging.wide_initial_partitions, and this plan runs on the
-    plain session."""
+    Runs on the caller's session with AQE's initialPartitionNum at
+    Spark's default (session.py): a raised initial partition count
+    measured 1.6x on this query's two posting shuffles at the 100x
+    envelope, in pure reduce-task overhead (SCALE.md r13)."""
     return jaccard_pairs(load(spark, sf_dir, "documents"), n=3, threshold=0.6)
 
 
@@ -1524,9 +1518,7 @@ def doc_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-aggregation) — pin it once so the corpus explode+shuffle runs
     # once, and derive doc lengths from it (sum tf == count tok)
     # instead of a second explode pass over the corpus.
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf")).localCheckpoint(
-        eager=True
-    )
+    tf = pin(tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count("*").alias("n_docs"),

@@ -193,9 +193,7 @@ def dedup_near_maxdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB. The oracle pins the fixed semantics: per-doc set sizes (the
     denominator) come from the UNFILTERED shingle sets, so max_df only
     removes shared-shingle evidence and can only lower recall, never
-    create pairs (ADVICE r1 finding). The engine-global AQE
-    initialPartitionNum is flat since r17 (llm.py dedup_near), so no
-    conf twin is needed here anymore."""
+    create pairs (ADVICE r1 finding)."""
     return jaccard_pairs(
         load(spark, sf_dir, "documents"), n=3, threshold=0.5, max_df=15
     )
@@ -437,9 +435,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components labels; all the heavy lifting is the same
     pair+CC pipeline dedup_clusters runs, so this query also
     regression-pins the component STRUCTURE (size distribution), not
-    just per-node labels. The engine-global AQE initialPartitionNum
-    is flat since r17 (see dedup_clusters), so no conf twin is needed
-    here anymore."""
+    just per-node labels."""
     from tstables_spark.operators.components import connected_components
 
     pairs = jaccard_pairs(load(spark, sf_dir, "documents"), n=3, threshold=0.6)

@@ -56,20 +56,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE's initialPartitionNum is left at the shuffle floor
-        # GLOBALLY (r17, inverting the r13 trade): the x8 initial
-        # setting existed for ONE consumer — the 100x wedge census,
-        # whose uniformly-huge shuffle hands each of 32 tasks ~250 MB
-        # of join/sort state on an 8g heap (the r12 measured OOM; AQE
-        # skew splitting never fires because nothing is SKEWED, just
-        # big) — while taxing every medium-cardinality shuffle chain
-        # (posting-list aggs, co-occurrence joins) ~1.4-1.6x at the
-        # 100x envelope in pure reduce-task overhead (bisections:
-        # SCALE.md r13 dedup_near, r16 degree_dist/jaccard/clusters).
-        # Ten queries ended up riding a conf-scoped FLAT twin to undo
-        # it. Inverted: flat is the default for everyone, and the
-        # census family rides the x8 twin
-        # (_staging.wide_initial_partitions).
+        # AQE's initialPartitionNum is left at Spark's default (the
+        # shuffle partition count) for every query.
         # Never take the bypass-merge shuffle writer (default
         # threshold 200): with the flat initialPartitionNum above,
         # every SQL exchange writes <= |cores| reduce partitions, and
