@@ -66,7 +66,7 @@ def soak_nsw(spark) -> dict:
         nsw_topk_staged,
         stage_nsw_layout,
     )
-    from tstables_spark.plans._staging import scratch_dir
+    from tstables_spark._staging import scratch_dir
 
     emb0 = spark.read.parquet(f"{SF}/embeddings.parquet")
     reps = 10
@@ -155,7 +155,7 @@ def soak_asof(spark) -> dict:
         asof_join_presorted,
         stage_asof_layout,
     )
-    from tstables_spark.plans._staging import scratch_dir
+    from tstables_spark._staging import scratch_dir
     from tstables_spark.plans.tables import load
 
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
@@ -260,7 +260,7 @@ def soak_asof_epochs(spark) -> dict:
         asof_join_presorted,
         stage_asof_epoch_layout,
     )
-    from tstables_spark.plans._staging import scratch_dir
+    from tstables_spark._staging import scratch_dir
     from tstables_spark.plans.tables import load
 
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")

@@ -56,7 +56,7 @@ def main() -> None:
         nsw_topk_staged,
         stage_nsw_layout,
     )
-    from tstables_spark.plans._staging import scratch_dir
+    from tstables_spark._staging import scratch_dir
 
     spark = get_spark("ann_100x_sweep")
     pred = F.col("vec_id") < 10

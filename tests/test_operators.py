@@ -325,7 +325,8 @@ def test_kcore_peel_raises_past_max_iter(spark):
 
 def _actions_and_pins(spark, monkeypatch, fn):
     """Run ``fn()`` under a fresh job group; return the number of Spark
-    actions it ran and the number of ``_staging.pin`` calls it made.
+    actions it ran and the number of ``_staging.pin`` calls the
+    connected-components and k-core operators made.
 
     An action is one SQL execution: AQE submits each query stage (and
     each broadcast build) of an action as its own job, so the jobs of
@@ -333,7 +334,8 @@ def _actions_and_pins(spark, monkeypatch, fn):
     import time
     import uuid
 
-    from tstables_spark.plans import _staging
+    from tstables_spark import _staging
+    from tstables_spark.operators import components, kcore
 
     pins = []
     real_pin = _staging.pin
@@ -342,7 +344,8 @@ def _actions_and_pins(spark, monkeypatch, fn):
         pins.append(1)
         return real_pin(*args, **kwargs)
 
-    monkeypatch.setattr(_staging, "pin", counting_pin)
+    for mod in (components, kcore):
+        monkeypatch.setattr(mod, "pin", counting_pin)
     sc = spark.sparkContext
     group = "actions_" + uuid.uuid4().hex[:8]
     sc.setJobGroup(group, "action count")
@@ -350,7 +353,8 @@ def _actions_and_pins(spark, monkeypatch, fn):
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        monkeypatch.setattr(_staging, "pin", real_pin)
+        for mod in (components, kcore):
+            monkeypatch.setattr(mod, "pin", real_pin)
     # the status store is fed by the listener bus in order: once a
     # later job is visible, every job of the group is too
     probe = "actions_probe_" + uuid.uuid4().hex[:8]
@@ -439,6 +443,10 @@ def test_fixpoint_kernels_one_action_per_round(spark, monkeypatch):
             spark, monkeypatch, lambda: kcore_peel(de, 2, big_nodes=big_nodes)
         )
         assert (actions, pins) == (4, 4), big_nodes
+    # the wide-graph rounds are disk-only checkpoints, not scratch tables
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("kcore_alive")
+    ]
 
 
 def test_salted_join_rejects_right_family(spark):
@@ -2546,7 +2554,7 @@ def test_asof_epoch_append_crash_detected_and_recovered(spark, tmp_path, monkeyp
     import os
     from contextlib import contextmanager
 
-    import tstables_spark.plans._staging as _staging
+    import tstables_spark._staging as _staging
     from tstables_spark.operators.asof import (
         _EPOCH,
         append_asof_epoch_layout,

@@ -443,7 +443,10 @@ def test_r12_big_graph_paths_identical(spark, sf_dir, monkeypatch):
     shuffled-rank iteration, and the DOULION estimator's streamed
     scratch-table pins. Also pins the big plan shape — iterations
     shuffle-hash with zero edge-side Exchange (ranks exchange INTO
-    the bucket layout), no broadcast of the rank relation anywhere."""
+    the bucket layout), no broadcast of the rank relation anywhere.
+    The wide-graph O(nodes) pins (degrees, per-round ranks) are
+    checkpoints Spark frees, never catalog tables that outlive the
+    call."""
     import tstables_spark.plans.analytics as A
 
     pr_kernel = {tuple(r) for r in A.graph_pagerank(spark, sf_dir).collect()}
@@ -461,6 +464,15 @@ def test_r12_big_graph_paths_identical(spark, sf_dir, monkeypatch):
     assert {
         tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()
     } == tri_small
+    assert not _tables_named(spark, "pr_deg", "pr_ranks")
+
+
+def _tables_named(spark, *prefixes):
+    """Catalog tables of the current database whose name starts with
+    one of ``prefixes``."""
+    return [
+        t.name for t in spark.catalog.listTables() if t.name.startswith(prefixes)
+    ]
 
 
 def test_pagerank_single_task_kernel_is_lazy(spark, sf_dir):
@@ -556,7 +568,7 @@ def test_pagerank_footer_gate_and_measured_fallback(spark, sf_dir, tmp_path, mon
     import pyarrow.parquet as pq
 
     import tstables_spark.plans.analytics as A
-    from tstables_spark.plans._staging import file_stats
+    from tstables_spark._staging import file_stats
     from tstables_spark.plans.tables import load
 
     src = os.path.join(sf_dir, "events.parquet")
@@ -592,7 +604,8 @@ def test_r17_census_big_path_broadcast_gate(spark, sf_dir, monkeypatch):
     plan must carry the broadcast strategy hints and the answer must
     equal the small path's; with the bound forced to 0 the hints must
     NOT appear and the sort-merge fallback (for a sample that outgrows
-    a broadcast) must give the same answer."""
+    a broadcast) must give the same answer, with both census joins on
+    the explicit partition count sized from the measured edge count."""
     import tstables_spark.plans.analytics as A
 
     small = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
@@ -604,11 +617,32 @@ def test_r17_census_big_path_broadcast_gate(spark, sf_dir, monkeypatch):
     assert lp.count("strategy=broadcast") >= 3, lp
     assert {tuple(r) for r in df.collect()} == small
 
+    _census_sort_merge_leg(spark, sf_dir, monkeypatch, small)
+
+
+def _census_sort_merge_leg(spark, sf_dir, monkeypatch, small):
+    """Force the big-path census past its broadcast bound: no census
+    broadcast hint, the small path's answer, and every census exchange
+    on the explicit count sized from the measured edge count."""
+    import math
+
+    import tstables_spark.plans.analytics as A
+
     monkeypatch.setattr(A, "_CENSUS_BROADCAST_EDGES_MAX", 0)
+    # size the partitions so the count lands above the shuffle floor
+    (m,) = {r[1] for r in small}  # n_edges_sampled == oriented edges
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    per = max(1, m // (floor + 3))
+    monkeypatch.setattr(A, "_CENSUS_EDGES_PER_PARTITION", per)
+    n = max(floor, math.ceil(m / per))
+    assert n > floor
     df0 = A.graph_triangles_approx(spark, sf_dir)
     lp0 = df0._jdf.queryExecution().optimizedPlan().toString()
     assert lp0.count("strategy=broadcast") == 1, lp0
     assert {tuple(r) for r in df0.collect()} == small
+    ep0 = df0._jdf.queryExecution().executedPlan().toString()
+    counts = re.findall(r"hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM", ep0)
+    assert len(counts) >= 3 and set(counts) == {str(n)}, ep0
 
 
 def test_r13_doulion_cut_validation_and_pin_cache(spark, sf_dir, monkeypatch):
@@ -626,7 +660,7 @@ def test_r13_doulion_cut_validation_and_pin_cache(spark, sf_dir, monkeypatch):
         with _pytest.raises(ValueError):
             A.graph_triangles_approx(spark, sf_dir, cut=bad)
 
-    from tstables_spark.plans._staging import _STREAM_PINNED
+    from tstables_spark._staging import _STREAM_PINNED
 
     monkeypatch.setattr(A, "_EDGE_PIN_PAIRS_MAX", 1)
     first = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
@@ -667,6 +701,7 @@ def test_r18_census_key_pack_gate(spark, sf_dir, monkeypatch):
     lp0 = df0._jdf.queryExecution().optimizedPlan().toString()
     assert "shiftleft" not in lp0, lp0
     assert {tuple(r) for r in df0.collect()} == small
+    _census_sort_merge_leg(spark, sf_dir, monkeypatch, small)
 
 
 def test_r13_minhash_big_path_identical(spark, sf_dir, monkeypatch):
@@ -677,7 +712,7 @@ def test_r13_minhash_big_path_identical(spark, sf_dir, monkeypatch):
     of re-writing corpus-sized files per run (the 100x bench
     repetition guarantee)."""
     import tstables_spark.operators.dedup as D
-    from tstables_spark.plans._staging import _STREAM_PINNED
+    from tstables_spark._staging import _STREAM_PINNED
 
     small = {tuple(r) for r in QUERIES["dedup_minhash"](spark, sf_dir).collect()}
     monkeypatch.setattr(D, "_MINHASH_PIN_ROWS_MAX", 1)
@@ -782,13 +817,14 @@ def test_r13_kcore_big_paths_identical(spark, sf_dir, monkeypatch):
     """graph_kcore's big-graph strategies (streamed scratch-table edge
     pin above the STAGE-ECONOMICS pair-mass bound — the r14 knob-free
     auto-selection, _EDGE_STAGE_PAIRS_MIN; shuffle-hash survivor joins
-    + streamed round pins above the node bound), forced by dropping
+    + disk-only round pins above the node bound), forced by dropping
     both bounds to 1, must compute EXACTLY the broadcast/checkpoint
     answer — and repeat invocations must reuse the staged edge table
     instead of re-writing it per run (the DOULION/minhash repetition
-    guarantee)."""
+    guarantee). The O(nodes) pins (deg0 and every peel round) leave no
+    catalog table behind."""
     import tstables_spark.plans.analytics as A
-    from tstables_spark.plans._staging import _STREAM_PINNED
+    from tstables_spark._staging import _STREAM_PINNED
 
     small = {tuple(r) for r in QUERIES["graph_kcore"](spark, sf_dir).collect()}
     monkeypatch.setattr(A, "_EDGE_STAGE_PAIRS_MIN", 1)
@@ -802,6 +838,7 @@ def test_r13_kcore_big_paths_identical(spark, sf_dir, monkeypatch):
     assert {
         k: v for k, v in _STREAM_PINNED.items() if k[1] == "kcore_de"
     } == staged  # reused, not re-staged
+    assert not _tables_named(spark, "kcore_alive", "kcore_deg0")
 
 
 def test_dedup_near_plain_session_flat_global(spark, sf_dir):
@@ -823,7 +860,7 @@ def test_dedup_near_plain_session_flat_global(spark, sf_dir):
 def test_one_materialization_primitive():
     """``_staging.pin`` is the package's only eager materialization and
     every query runs on the caller's session: no call to
-    ``.localCheckpoint(`` outside ``plans/_staging.py`` and no call to
+    ``.localCheckpoint(`` outside ``_staging.py`` and no call to
     ``.newSession(`` anywhere in ``tstables_spark/``. Calls are found
     in the syntax tree, so comments and docstrings may name them."""
     import ast
@@ -840,7 +877,7 @@ def test_one_materialization_primitive():
                 continue
             attr = node.func.attr
             if attr == "newSession" or (
-                attr == "localCheckpoint" and rel != "plans/_staging.py"
+                attr == "localCheckpoint" and rel != "_staging.py"
             ):
                 bad.append(f"{rel}:{node.lineno} .{attr}(")
     assert not bad, bad
@@ -852,7 +889,7 @@ def test_stream_pin_bucketed_zero_exchange(spark, sf_dir):
     graph_kcore's big-edge path (and its docstring) rides on."""
     from pyspark.sql import functions as F
 
-    from tstables_spark.plans._staging import stream_pin
+    from tstables_spark._staging import stream_pin
     from tstables_spark.plans.tables import load
 
     ev = load(spark, sf_dir, "events").select("user_id", "event_type")
@@ -868,6 +905,34 @@ def test_stream_pin_bucketed_zero_exchange(spark, sf_dir):
     assert "SelectedBucketsCount: 8 out of 8" in plan
 
 
+def test_pin_level_follows_size_estimate(spark):
+    """``pin`` keeps Spark's default deserialized level for a relation
+    computed without an earlier pin whose optimizer estimate is within
+    the broadcast threshold, and serialized MEMORY_AND_DISK above it or
+    over a pin; ``big`` without a cache key or bucket column is a
+    DISK_ONLY checkpoint, not a catalog table."""
+    from tstables_spark._staging import pin
+
+    def level(df):
+        lv = df._jdf.queryExecution().analyzed().rdd().getStorageLevel()
+        return lv.useMemory(), lv.useDisk(), lv.deserialized()
+
+    df = spark.range(1000)  # estimated at 8000 bytes
+    small = pin(df)
+    assert level(small) == (True, True, True)
+    assert level(pin(small.select("id"))) == (True, True, False)
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4000")
+    try:
+        assert level(pin(df)) == (True, True, False)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    big = pin(df, True, "pin_level_big")
+    assert level(big) == (False, True, False)
+    assert big.count() == 1000
+    assert not _tables_named(spark, "pin_level_big")
+
+
 def test_stream_pin_lru_eviction_restages(spark, sf_dir, monkeypatch):
     """The staged-pin registry is LRU-bounded (r14 verdict #5: a
     long-lived session accumulated one catalog table + one JVM
@@ -879,7 +944,7 @@ def test_stream_pin_lru_eviction_restages(spark, sf_dir, monkeypatch):
 
     from pyspark.sql import functions as F
 
-    from tstables_spark.plans import _staging
+    from tstables_spark import _staging
     from tstables_spark.plans.tables import load
 
     monkeypatch.setattr(_staging, "_STREAM_PINNED_CAP", 2)
@@ -910,7 +975,7 @@ def test_stream_pin_lru_skips_in_use_pins(spark, sf_dir, monkeypatch):
     plan construction can never evict a table that plan still scans.
     Held pins transiently exceed the cap and are reclaimed on the
     first insert after the scope closes."""
-    from tstables_spark.plans import _staging
+    from tstables_spark import _staging
     from tstables_spark.plans.tables import load
 
     monkeypatch.setattr(_staging, "_STREAM_PINNED_CAP", 1)
@@ -937,7 +1002,7 @@ def test_stream_pin_refs_survive_to_execution(spark, sf_dir, monkeypatch):
     caller drops the frame — which is after execution by definition."""
     import gc
 
-    from tstables_spark.plans import _staging
+    from tstables_spark import _staging
     from tstables_spark.plans.tables import load
 
     monkeypatch.setattr(_staging, "_STREAM_PINNED_CAP", 1)
@@ -978,7 +1043,7 @@ def test_stream_pin_concurrent_stage_keeps_winner(spark, sf_dir, monkeypatch):
 
     from pyspark.sql import functions as F  # noqa: F401
 
-    from tstables_spark.plans import _staging
+    from tstables_spark import _staging
     from tstables_spark.plans.tables import load
 
     ev = load(spark, sf_dir, "events").select("user_id").limit(5)
@@ -1025,7 +1090,7 @@ def test_staged_fixture_lru_eviction(spark, sf_dir, monkeypatch):
     import pandas as pd
 
     from tests.parity import canonicalize
-    from tstables_spark.plans import _staging
+    from tstables_spark import _staging
     from tstables_spark.plans import relational as R
 
     def value_hash(name):

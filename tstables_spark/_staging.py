@@ -21,28 +21,39 @@ registry, keyed by (applicationId, prefix, key):
 ``pin`` is the engine's one eager materialization: every relation a
 plan or operator consumes more than once, or whose lineage an
 iteration must cut, goes through it, and nothing else in the package
-calls ``localCheckpoint``. It has two paths:
+calls ``localCheckpoint``. It decides how a relation is held:
 
-- small (the default): an eager ``localCheckpoint`` at serialized
-  ``MEMORY_AND_DISK``. Serialized blocks take a fraction of the heap
-  of the deserialized rows Spark's default level keeps, so less of a
-  pin spills and less GC pressure builds, and the memory-first read
-  keeps the small pins of the iterative kernels fast.
-- big: ``stream_pin``, a scratch Parquet table written by a streaming
-  file write. A checkpoint holds one serialized block per task in the
-  heap at once, so a corpus-sized relation does not fit one; a file
-  write runs at constant memory and consumers re-scan the files.
-  Optionally cached per key in ``staged`` and bucketed on a join key.
+- small (the default): an eager ``localCheckpoint``, memory first.
+  A relation computed from files alone whose optimizer size estimate
+  (no job) is at most Spark's broadcast threshold, a size Spark itself
+  holds whole and deserialized in every executor, keeps Spark's
+  default deserialized level, whose rows every re-read scans without
+  decoding. Any other is serialized ``MEMORY_AND_DISK``, whose blocks
+  take a fraction of the heap. The estimate errs high (a join
+  multiplies its inputs' sizes), so it rarely keeps a big relation
+  deserialized. A relation over an earlier pin is not estimated:
+  through an iteration's chain of pins the estimate compounds to
+  numbers of millions of digits, whose transfer alone costs seconds
+  a round.
+- big: held off the heap. A checkpoint at a memory level holds one
+  block per task in the heap at once, so a corpus-sized relation does
+  not fit one. Without a ``cache_key`` or ``bucket_by`` it is a
+  ``DISK_ONLY`` checkpoint: its blocks stream to local disk at
+  constant memory, and Spark's ContextCleaner frees them once no frame
+  reaches them, so an iteration's dead rounds go as they die. With
+  either, it is ``stream_pin``: a scratch Parquet table, reused per
+  key through ``staged`` and bucketed on a join key.
 
 An ``Observation`` attached to the pinned frame is reported by the
-pin's own job on both paths, so a per-round probe (a label sum, a
+pin's own job on every path, so a per-round probe (a label sum, a
 survivor count) costs no extra job.
 
 The free statistics the size gates read (``file_stats``: input file
 sizes and Parquet footers, no Spark job) live here too.
 
-Kept in a private helper (not a plans module) so importing it never
-registers queries.
+A private module at the package root that imports nothing from the
+package: operators and plans both import it, and importing it
+registers no query.
 """
 
 from __future__ import annotations
@@ -364,17 +375,23 @@ def pin(
     bucket_by: str | None = None,
 ):
     """Materialize ``df`` eagerly and return the pinned frame (see the
-    module docstring): a serialized ``MEMORY_AND_DISK`` localCheckpoint
-    unless ``big``, else a ``stream_pin`` scratch table named after
-    ``prefix``, reused per ``cache_key`` and bucketed by
-    ``bucket_by``."""
-    if not big:
-        from pyspark import StorageLevel
+    module docstring): a memory-first localCheckpoint unless ``big``;
+    if ``big``, a ``DISK_ONLY`` localCheckpoint, or, given a
+    ``cache_key`` or ``bucket_by``, a ``stream_pin`` scratch table
+    named after ``prefix``."""
+    from pyspark import StorageLevel
 
-        return df.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-    return stream_pin(df, prefix, cache_key=cache_key, bucket_by=bucket_by)
+    if big and (cache_key is not None or bucket_by is not None):
+        return stream_pin(df, prefix, cache_key=cache_key, bucket_by=bucket_by)
+    if big:
+        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    if all(leaves.apply(i).nodeName() != "LogicalRDD" for i in range(leaves.size())):
+        bound = df.sparkSession._jsparkSession.sessionState().conf()
+        if 0 <= plan.stats().sizeInBytes() <= bound.autoBroadcastJoinThreshold():
+            return df.localCheckpoint(eager=True)  # Spark's default level
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def register_staged_table(spark, table: str) -> None:

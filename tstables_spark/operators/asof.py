@@ -27,6 +27,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, Window as W
 from pyspark.sql import functions as F
 
+from tstables_spark import _staging
+from tstables_spark._staging import pin
+
 _SIDE = "__asof_side"
 _TIME = "__asof_time"
 _KEY = "__asof_key"
@@ -242,7 +245,6 @@ def append_asof_layout(
     file per bucket (and therefore a zero-Sort read) matters more than
     append cost. Pass the same ``right_values`` order the table was
     staged with."""
-    from tstables_spark.plans._staging import pin
 
     staged = spark.table(table_name)
     left_cols = [c for c in staged.columns if c not in (_KEY, _TIME, _SIDE, _CARRY)]
@@ -638,7 +640,6 @@ def _write_pending_marker(jvm, fs, loc: str, payload: dict) -> None:
     import json
     import uuid
 
-    from tstables_spark.plans import _staging
 
     tmp = jvm.org.apache.hadoop.fs.Path(
         f"{loc}/{_PENDING}.{uuid.uuid4().hex[:8]}.tmp"
@@ -736,7 +737,6 @@ def append_asof_epoch_layout(
     name) resolves the staged table's persisted granularity, so
     named-granularity layouts append knob-free; only custom-callable
     layouts must re-supply the callable."""
-    from tstables_spark.plans._staging import dynamic_partition_overwrite, pin
 
     epoch_of = _resolve_epoch_of(spark, table_name, epoch_of)
     staged = spark.table(table_name)
@@ -822,7 +822,7 @@ def append_asof_epoch_layout(
         # beyond those already present in the touched epochs
         new = new.exceptAll(keep.select(*new.columns))
     union_out = keep.unionByName(new)
-    with dynamic_partition_overwrite(spark):
+    with _staging.dynamic_partition_overwrite(spark):
         (
             union_out
             .select(*cols_order)  # insertInto is positional
@@ -861,7 +861,6 @@ def recover_asof_epoch_append(
     re-runnable (same inputs -> same bytes, idempotent).
 
     Returns the sorted list of rebuilt epochs."""
-    from tstables_spark.plans._staging import dynamic_partition_overwrite, pin
 
     marker = pending_asof_epoch_append(spark, table_name)
     if marker is None:
@@ -913,7 +912,7 @@ def recover_asof_epoch_append(
     have = set(obs.get["es"])
     have_null = (obs.get["nnull"] or 0) > 0
     if have or have_null:
-        with dynamic_partition_overwrite(spark):
+        with _staging.dynamic_partition_overwrite(spark):
             (
                 repl.select(*cols_order)
                 .repartition(num_buckets, F.col(_KEY))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tstables_spark._local import local_df
+from tstables_spark._staging import pin
 
 
 def bpe_pair_table(state: DataFrame) -> DataFrame:
@@ -79,7 +80,6 @@ def bpe_train_with_state(
     (``bpe_encode``) reads: applying a trained tokenizer to the corpus
     is exactly replaying its merges over the word table, so training
     and encoding share this one loop."""
-    from tstables_spark.plans._staging import pin
 
     spark = words.sparkSession
     state = pin(

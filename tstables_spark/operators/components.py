@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from tstables_spark._staging import pin
+
 # Edge count above which the per-round O(E) shuffle+sort is worth one
 # extra O(E) re-layout into a hash-partitioned cache (see module
 # docstring). Below it the r16 plain-join rounds win outright: AQE
@@ -76,7 +78,6 @@ def connected_components(
     tuned for — raise ``max_iter`` or switch to a large-star/small-star
     O(log n) scheme.
     """
-    from tstables_spark.plans._staging import pin
 
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # undirected: propagate both ways — both orientations explode from

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from tstables_spark._staging import is_pinned, pin
+
 # Portable hashing: every fingerprint below is reproducible OUTSIDE this
 # engine (DuckDB, Trino, any SQL dialect with md5) — a deliberate contract,
 # not a convenience. Dedup fingerprints outlive any one engine: a corpus
@@ -345,7 +347,6 @@ def minhash_lsh_pairs(
     ``cache_key``: optional identity of ``docs`` (e.g. the sf_dir) —
     lets the big-corpus path reuse its streamed scratch tables across
     invocations (``_staging.staged`` entries; see _MINHASH_PIN_ROWS_MAX)."""
-    from tstables_spark.plans._staging import is_pinned, pin
 
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
@@ -610,7 +611,6 @@ def editdist_pairs(
     knobs to turn (shrink ``band_width``, raise the budget) instead of
     degrading into an invisible 10-hour stage. ``None`` disables.
     """
-    from tstables_spark.plans._staging import pin
 
     if max_candidate_pairs is not None:
         # Pinned: the estimate self-joins this tiny (lang, band)
@@ -763,7 +763,6 @@ def simhash_pairs(
     recall 1.0 (the guarantee is exact, not probabilistic). Verify is a
     codegen'd ``bit_count(a XOR b)`` on the candidates only.
     """
-    from tstables_spark.plans._staging import pin
 
     n_bands = max_hamming + 1
     assert bits % n_bands == 0, "bits must divide into max_hamming+1 bands"
@@ -843,7 +842,6 @@ def prefix_dup_flags(
     giant-literal regime that breaks codegen. Output rows only for
     flagged docs: O(dups).
     """
-    from tstables_spark.plans._staging import pin
 
     d = pin(
         docs.select(id_col, text_col)

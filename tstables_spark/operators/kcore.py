@@ -30,13 +30,16 @@ Algorithm notes:
   bound both joins are broadcast-hash (edges never shuffle, and a
   bucketed-by-src staged edge table feeds the final groupBy(src) with
   zero exchange — the graph_pagerank big-edge layout). Per-round
-  state is one O(nodes) pin, serialized, lineage-cut.
+  state is one O(nodes) pin (on disk above the node bound),
+  lineage-cut.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from tstables_spark._staging import pin
 
 
 def kcore_peel(
@@ -54,8 +57,9 @@ def kcore_peel(
     ``de`` must be materialized by the caller (pinned or staged —
     every round re-joins it). ``big_nodes`` flips the survivor-side
     join from broadcast to shuffle-hash and the per-round O(nodes)
-    pins to ``pin``'s streamed path, the graph_pagerank wide-graph
-    discipline.
+    pins to ``pin``'s disk-only checkpoint, the graph_pagerank
+    wide-graph discipline: each dead round's blocks are freed by
+    Spark's ContextCleaner.
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iter`` rounds: returning a non-fixpoint survivor set would
@@ -72,7 +76,6 @@ def kcore_peel(
     a data-derived k) pass it to skip round 0's rebuild of the same
     2|E| scan+shuffle.
     """
-    from tstables_spark.plans._staging import pin
 
     # Round 0 peels on FULL-graph degrees (the first peel needs no
     # survivor restriction: within-all degrees ARE full degrees).

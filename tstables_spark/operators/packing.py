@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from tstables_spark._staging import pin
+
 
 def distributed_cumsum(
     df: DataFrame,
@@ -62,7 +64,6 @@ def distributed_cumsum(
     shuffle size (r17) instead of a constant tuned for either local
     mode or the cluster.
     """
-    from tstables_spark.plans._staging import pin
 
     # Partition count: explicit when the caller passes one, else LET AQE
     # COALESCE the range shuffle by observed size (repartitionByRange
@@ -220,7 +221,6 @@ def pack_sequences(
     themselves plus overflow — matching the window-SQL semantics
     exactly (see the oracle twin), not truncating.
     """
-    from tstables_spark.plans._staging import pin
 
     # MATERIALIZE the range partitioning before anything reads __pid:
     # two separate jobs (the totals collect below and the caller's final

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from tstables_spark._staging import dynamic_partition_overwrite, pin
+
 DIM = 64  # embeddings fixture dimension; callers pass dim= to override
 
 
@@ -1171,7 +1173,6 @@ def nsw_topk(
     (rows-only driver check); the quality contract is hash-gated by
     sim_recall's recall@5 >= 0.8 floor alongside the IVF/LSH variants.
     """
-    from tstables_spark.plans._staging import pin
 
     # checkpoint=False keeps the full lineage (no eager jobs) so tests
     # can assert the join strategy of every round in ONE static plan;
@@ -1453,7 +1454,6 @@ def append_nsw_layout(
     append would mix neighborhood sizes across blocks. Results after
     append are asserted identical to a fresh re-stage in
     tests/test_operators.py."""
-    from tstables_spark.plans._staging import dynamic_partition_overwrite, pin
 
     # Pinned eagerly FIRST: new_base feeds the two affected-set
     # collects, the kNN input, and the base partition rewrite — an
@@ -1570,7 +1570,6 @@ def nsw_topk_staged(
     keeps pinning because its lineage root is the expensive
     applyInPandas kNN build. Pass ``checkpoint=True`` for walks with
     many rounds where plan growth would outpace the re-scan cost."""
-    from tstables_spark.plans._staging import pin
 
     cp = pin if checkpoint else (lambda df: df)
     edges = spark.table(f"{table_name}_edges")

@@ -20,9 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tstables_spark._exact import exact_sum, sql_sum
+from tstables_spark._staging import pin
 from tstables_spark.plans.registry import query
 from tstables_spark.plans._portable_sql import epoch_floor_div
-from tstables_spark.plans._staging import pin
 from tstables_spark.plans.tables import load
 
 
@@ -1045,6 +1045,18 @@ _CENSUS_BROADCAST_EDGES_MAX = 20_000_000
 # documents. Module constant so tests can force the fallback.
 _CENSUS_PACK_ID_MAX = 1 << 31
 
+# Census sort-merge partition sizing: above the broadcast bound both
+# census joins run on an explicit partition count, one per this many
+# measured oriented edges (never under the session's shuffle
+# partitions), so the per-task slice of the wedge stream, and with it
+# each task's sort and spill, stays bounded as the sample grows. AQE
+# does not coalesce an explicit count. At both measured points it
+# matches the x8 initial partition count the census used to take
+# from a session conf: 2.46M edges (10x events fixture, cut 40) on 4
+# cores -> 33 vs 32; 18.8M (100x fixture, p=1/16) on 32 cores -> 251
+# vs 256.
+_CENSUS_EDGES_PER_PARTITION = 75_000
+
 # ECONOMICS bound, distinct from the OOM bound above: for a
 # multiply-consumed edge relation cached per (app, sf, cut), the
 # streamed bucketed scratch table is the amortizing steady state well
@@ -1096,7 +1108,7 @@ def _half_edge_bound(ev: DataFrame, cap: int) -> int | None:
     of the user_id range, and every membership row pairs with at most
     ``cap - 1`` others of its bucket, each pair counted from both ends.
     None when the footers lack user_id min/max statistics."""
-    from tstables_spark.plans._staging import file_stats
+    from tstables_spark._staging import file_stats
 
     st = file_stats(ev, "user_id")
     if st is None or st.lo is None:
@@ -1182,8 +1194,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       every round's join read it with no edge-side exchange. Rank
       join: under _PR_BROADCAST_NODES_MAX nodes the per-node
       contribution relation is broadcast; above it it shuffle-hash
-      joins into the bucket layout and the O(nodes) pins stream to
-      scratch tables. Every pin is ``_staging.pin``.
+      joins into the bucket layout and the O(nodes) pins are held
+      off the heap as disk-only checkpoints. Every pin is
+      ``_staging.pin``.
       Each round pins its ranks (lineage cut), so construction runs
       one job per round plus the pins and statistics.
 
@@ -1240,9 +1253,9 @@ def _pagerank_distributed(
         de = _directed(pin(edges))
     # deg is O(nodes): pin once instead of re-deriving it from a 2|E|
     # scan + shuffle in every round's join. On the bucketed layout the
-    # aggregate has no exchange. Wide graphs stream their O(nodes) pins
-    # to scratch tables: memory-first pins accumulate in heap faster
-    # than the ContextCleaner reaps dead generations.
+    # aggregate has no exchange. Wide graphs hold their O(nodes) pins
+    # on disk: memory-first pins accumulate in heap faster than the
+    # ContextCleaner reaps dead generations.
     deg = pin(
         de.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree")),
         big_nodes,
@@ -1533,8 +1546,9 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
     GENERATED AND CONSUMED IN ONE PIPELINED STAGE (scan -> probe ->
     probe -> partial count) and never touches an exchange, sort, or
     shuffle file. Above the bound the sort-merge path stands (at true
-    100 TB scale a billion-edge sample outgrows any broadcast), on the
-    caller's session and its shuffle partition count.
+    100 TB scale a billion-edge sample outgrows any broadcast), with
+    both joins on an explicit partition count sized from that same
+    measured edge count (``_census_partitions``).
     The small path is untouched: sub-threshold relations already
     auto-broadcast (the committed sf0.1 plan), and adding hints there
     would only churn plans the bench pins.
@@ -1607,8 +1621,14 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
             .bitwiseOR(F.col("ord").bitwiseAND(lo32))
             .alias("pk")
         )
-        if oe.count() <= _CENSUS_BROADCAST_EDGES_MAX:
+        m = oe.count()
+        n = None if m <= _CENSUS_BROADCAST_EDGES_MAX else _census_partitions(oe, m)
+        if n is None:
             b, c = F.broadcast(b), F.broadcast(c)
+        else:
+            a = oe.repartition(n, "src").alias("a")
+            b = oe.repartition(n, "src").alias("b")
+            c = c.repartition(n, "pk")
         wed = a.join(
             b,
             (F.col("a.src") == F.col("b.src"))
@@ -1618,6 +1638,8 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
             .bitwiseOR(F.col("b.ord").bitwiseAND(lo32))
             .alias("pk")
         )
+        if n is not None:
+            wed = wed.repartition(n, "pk")
         tri = wed.join(c, "pk").agg(F.count(F.lit(1)).alias("t"))
         return tri, deg
     oe = (
@@ -1627,11 +1649,19 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
     )
     oe = pin(oe, big, "census_oe", cache_key=cache_key)
     a, b, c = oe.alias("a"), oe.alias("b"), oe.alias("c")
-    if big and oe.count() <= _CENSUS_BROADCAST_EDGES_MAX:
+    n = None
+    if big:
         # the count is a parquet count-star over the staged pin
         # (aggregate pushdown; one sub-second job) — a MEASURED gate,
         # not an estimate, per the r12 two-collected-statistics rule
-        b, c = F.broadcast(b), F.broadcast(c)
+        m = oe.count()
+        if m <= _CENSUS_BROADCAST_EDGES_MAX:
+            b, c = F.broadcast(b), F.broadcast(c)
+        else:
+            n = _census_partitions(oe, m)
+            a = oe.repartition(n, "src").alias("a")
+            b = oe.repartition(n, "src").alias("b")
+            c = oe.repartition(n, "src", "dst").alias("c")
     wed = a.join(
         b,
         (F.col("a.src") == F.col("b.src"))
@@ -1640,10 +1670,19 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
             | ((F.col("a.ddeg") == F.col("b.ddeg")) & (F.col("a.dst") < F.col("b.dst")))
         ),
     ).select(F.col("a.dst").alias("y"), F.col("b.dst").alias("z"))
+    if n is not None:
+        wed = wed.repartition(n, "y", "z")
     tri = wed.join(
         c, (F.col("c.src") == F.col("y")) & (F.col("c.dst") == F.col("z"))
     ).agg(F.count(F.lit(1)).alias("t"))
     return tri, deg
+
+
+def _census_partitions(oe: DataFrame, m: int) -> int:
+    """Partition count of the census's sort-merge joins over ``m``
+    measured oriented edges (see ``_CENSUS_EDGES_PER_PARTITION``)."""
+    floor = int(oe.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(floor, -(-m // _CENSUS_EDGES_PER_PARTITION))
 
 
 # DOULION edge-sampling knobs, shared by the estimator and its gate.
@@ -2043,7 +2082,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     RAISES if max_iter is hit rather than return a non-fixpoint set.
 
     Scale shape: the directed edge relation materializes ONCE via
-    _staging.pin (serialized checkpoint under the pair-mass bound,
+    _staging.pin (a checkpoint under the pair-mass bound,
     streamed bucketed-by-src scratch table above it — zero-exchange
     groupBy(src) off the bucketed scan); each round joins it against
     two O(nodes) survivor legs (broadcast under the node bound,

@@ -25,7 +25,7 @@ from tstables_spark.operators.similarity import (
 )
 from tstables_spark._exact import exact_sum as _exact_sum
 from tstables_spark._exact import sql_sum as _sql_sum
-from tstables_spark.plans._staging import pin
+from tstables_spark._staging import pin
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 
@@ -65,7 +65,7 @@ def _nsw_staged_index(spark: SparkSession, sf_dir: str) -> str:
     layout ``nsw_topk``'s scale note promises, a ``_staging.staged``
     entry like every stage-once fixture."""
     from tstables_spark.operators.similarity import stage_nsw_layout
-    from tstables_spark.plans._staging import register_staged_table, staged
+    from tstables_spark._staging import register_staged_table, staged
 
     def build(tag: str, base: str) -> str:
         stage_nsw_layout(load(spark, sf_dir, "embeddings"), tag, base)

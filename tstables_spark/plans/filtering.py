@@ -618,7 +618,7 @@ def lm_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     miss perf, not memory."""
     from pyspark.sql.window import Window
 
-    from tstables_spark.plans._staging import file_stats, stream_pin
+    from tstables_spark._staging import file_stats, stream_pin
 
     d = load(spark, sf_dir, "documents")
     toks = F.split(F.lower("text"), " ")

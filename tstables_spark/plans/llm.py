@@ -46,7 +46,7 @@ from tstables_spark.plans._portable_sql import (
 )
 from tstables_spark.plans._textnorm import norm_sql as _norm_sql
 from tstables_spark.plans._textnorm import norm_text as _norm_text
-from tstables_spark.plans._staging import pin, scratch_dir
+from tstables_spark._staging import pin, scratch_dir
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 

@@ -108,7 +108,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             # staged-pin LRU cannot evict a table this plan scans while
             # the caller still holds the frame it will execute — the
             # construction-to-execution window included (r16 advice).
-            from tstables_spark.plans._staging import hold_stream_pins
+            from tstables_spark._staging import hold_stream_pins
 
             with hold_stream_pins() as scope:
                 df = fn(spark, sf_dir, **kwargs)

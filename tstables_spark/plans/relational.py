@@ -28,7 +28,7 @@ from tstables_spark.plans._portable_sql import (
     _qsketch_cells,
     _qsketch_cells_sql,
 )
-from tstables_spark.plans._staging import register_staged_table, scratch_dir, staged
+from tstables_spark._staging import register_staged_table, scratch_dir, staged
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load, register_views
 

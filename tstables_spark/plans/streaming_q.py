@@ -39,7 +39,7 @@ from tstables_spark.plans._portable_sql import (
     kmv_batch_hashes,
     kmv_truncate,
 )
-from tstables_spark.plans._staging import register_staged_table, scratch_dir, staged
+from tstables_spark._staging import register_staged_table, scratch_dir, staged
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 from tstables_spark.streaming.ingest import ingest_stream

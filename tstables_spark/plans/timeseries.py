@@ -19,7 +19,7 @@ from tstables_spark.operators.rangejoin import banded_range_join
 from tstables_spark.operators.resample import resample_m4, resample_ohlc
 from tstables_spark._exact import exact_sum, exact_wsum, sql_sum, sql_wsum
 from tstables_spark.plans._portable_sql import epoch_floor_div
-from tstables_spark.plans._staging import register_staged_table, scratch_dir, staged
+from tstables_spark._staging import register_staged_table, scratch_dir, staged
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
 from tstables_spark.tstable import TimeSeriesTable
