@@ -35,6 +35,48 @@ def series(spark, tmp_path_factory):
 
 minutes = st.integers(min_value=0, max_value=N_MINUTES - 1)
 
+N_DAYS = 40  # above the 32 paths at which Spark lists in a parallel job
+
+
+@pytest.fixture(scope="module")
+def days40(spark, tmp_path_factory):
+    """40 days of 6-hourly ticks; every second day gets a second file."""
+    root = str(tmp_path_factory.mktemp("days40"))
+    t = TimeSeriesTable.create(spark, root, "d40", SCHEMA)
+    rows = [(BASE + timedelta(hours=6 * i), float(i)) for i in range(N_DAYS * 4)]
+    t.append(spark.createDataFrame(rows, SCHEMA))
+    t.append(spark.createDataFrame(rows[::8], SCHEMA))
+    return t, rows + rows[::8]
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.integers(min_value=-3 * 24, max_value=(N_DAYS + 3) * 24),
+    st.integers(min_value=0, max_value=10 * 24),
+)
+def test_read_range_reads_only_overlapping_day_dirs(days40, start_h, span_h):
+    """read_range(start, end) reads exactly the files of the date= dirs
+    from start's day to end's day, and returns exactly the rows inside
+    the range."""
+    import glob
+    import os
+    from datetime import date
+    from urllib.parse import urlparse
+
+    t, rows = days40
+    start = BASE + timedelta(hours=start_h)
+    end = start + timedelta(hours=span_h)
+    df = t.read_range(start, end)
+    base = os.path.realpath(t.path)
+    want = {
+        os.path.relpath(os.path.realpath(f), base)
+        for f in glob.glob(os.path.join(t.path, "date=*", "*.parquet"))
+        if start.date() <= date.fromisoformat(f.split("date=")[1][:10]) <= end.date()
+    }
+    got = {os.path.relpath(os.path.realpath(urlparse(f).path), base) for f in df.inputFiles()}
+    assert got == want
+    assert df.count() == sum(start <= ts <= end for ts, _ in rows)
+
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.tuples(minutes, minutes, minutes).map(sorted))

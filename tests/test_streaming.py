@@ -578,3 +578,34 @@ def test_versioned_path_fold_gc_and_restart_guard(tmp_path):
     w = VersionedPathFold(str(tmp_path / "w"), merge)
     with _pytest.raises(RuntimeError, match="process restarted"):
         w("b5", 5)
+
+
+def test_day_reads_see_batch_appends_on_streamed_table(spark, tmp_path):
+    """Every read of a series names its day dirs and never consults the
+    streaming sink's ``_spark_metadata`` log, so a batch append next to
+    sink-written files is visible before any compaction or upsert."""
+    from pyspark.sql import types as T
+
+    from tstables_spark.tstable import TimeSeriesTable
+
+    t0 = datetime(2024, 9, 1, tzinfo=UTC)
+    schema = T.StructType(
+        [T.StructField("ts", T.TimestampType()), T.StructField("v", T.DoubleType())]
+    )
+    t = TimeSeriesTable.create(spark, str(tmp_path), "s", schema)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(t0 + timedelta(minutes=i), float(i)) for i in range(20)], schema
+    ).write.parquet(src)
+    ingest_stream(
+        spark.readStream.schema(schema).parquet(src), t.path, str(tmp_path / "ckpt")
+    ).awaitTermination()
+    day2 = t0 + timedelta(days=1)
+    t.append(spark.createDataFrame(
+        [(day2 + timedelta(minutes=i), float(100 + i)) for i in range(5)], schema
+    ))
+    assert os.path.isdir(os.path.join(t.path, "_spark_metadata"))
+    assert t.to_df().count() == 25
+    assert t.read_range(day2, day2 + timedelta(hours=23)).count() == 5
+    assert t.max_dt() == day2 + timedelta(minutes=4)
+    assert [r.v for r in t.read_at(t0 + timedelta(days=2)).collect()] == [104.0]

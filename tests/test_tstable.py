@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -770,3 +771,130 @@ def test_day_walk_probe_job_counts(spark, root):
     df, jobs = _jobs_run(spark, lambda: ts.read_at(at))
     assert jobs <= 2
     assert [r.ts for r in df.collect()] == [datetime(2024, 3, 2, 9)]
+
+
+def test_compact_evolved_series_keeps_added_column(spark, root):
+    """compact_series reads with the series' declared schema: a column
+    added by ``evolve`` keeps its values through the rewrite even when
+    the series' first data file predates the column."""
+    from tstables_spark.streaming.ingest import compact_series
+
+    ts = TimeSeriesTable.create(spark, root, "evo", SCHEMA)
+    d1 = datetime(2024, 3, 1, tzinfo=UTC)
+    ts.append(_ticks(spark, d1, 2))
+    wide = T.StructType(list(SCHEMA.fields) + [T.StructField("c", T.StringType(), True)])
+    ts.evolve(wide)
+    d2 = d1 + timedelta(days=1)
+    ts.append(spark.createDataFrame(
+        [(d2, "EURUSD", 1.0, "x"), (d2 + timedelta(hours=1), "EURUSD", 1.1, "y")], wide
+    ))
+    compact_series(spark, ts.path, dates=[d2.date()])
+    got = [r.c for r in ts.read_range(d2, d2 + timedelta(hours=1)).orderBy("ts").collect()]
+    assert got == ["x", "y"]
+
+
+def test_day_reads_run_the_same_jobs_on_a_longer_table(spark, root):
+    """read_range, read_at, min_dt and max_dt run as many Spark jobs on a
+    40-day table as on a 3-day one: each reads named day dirs, so the
+    parallel-listing job Spark runs for more than 32 paths never shows
+    up as the table grows."""
+    jobs = {}
+    for n in (3, 40):
+        t0 = datetime(2024, 3, 1, 9, tzinfo=UTC)
+        ts = TimeSeriesTable.create(spark, root, f"d{n}", SCHEMA)
+        ts.append(_ticks(spark, t0, n, step_s=86400))  # one tick a day
+        last = t0 + timedelta(days=n - 1)
+        calls = {
+            "read_range": lambda: ts.read_range(last, last + timedelta(hours=1)).collect(),
+            "read_at": lambda: ts.read_at(last - timedelta(hours=1)).collect(),
+            "min_dt": ts.min_dt,
+            "max_dt": ts.max_dt,
+        }
+        jobs[n] = {name: _jobs_run(spark, fn)[1] for name, fn in calls.items()}
+    assert jobs[40] == jobs[3], jobs
+
+
+def test_store_reads_go_through_read_days():
+    """``_read_days`` is the only code in ``tstable.py`` and
+    ``streaming/ingest.py`` that reads the store's files: ``.read`` (as
+    in ``spark.read``) appears in no other function. Found in the syntax
+    tree, so comments and docstrings may name it."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "tstables_spark"
+    inside, bad = [], []
+
+    def visit(node, fn, rel):
+        for child in ast.iter_child_nodes(node):
+            scope = child.name if isinstance(child, ast.FunctionDef) else fn
+            if isinstance(child, ast.Attribute) and child.attr == "read":
+                (inside if fn == "_read_days" else bad).append(f"{rel}:{child.lineno}")
+            visit(child, scope, rel)
+
+    for rel in ("tstable.py", "streaming/ingest.py"):
+        visit(ast.parse((pkg / rel).read_text()), None, rel)
+    assert inside and not bad, bad
+    assert not hasattr(TimeSeriesTable, "_df")
+
+
+def test_list_names_local_and_hadoop_agree(spark, root, monkeypatch):
+    """A local dir lists the same entries through ``os.listdir`` as
+    through the one-call Hadoop listing other roots take (Hadoop's
+    local FS hides its ``.crc`` checksum files)."""
+    from tstables_spark import tstable
+
+    ts = TimeSeriesTable.create(spark, root, "ls", SCHEMA)
+    ts.append(_ticks(spark, datetime(2024, 3, 1, tzinfo=UTC), 48))
+    local = sorted(n for n in tstable._fs_list_names(spark, ts.path) if not n.endswith(".crc"))
+    monkeypatch.setattr(tstable, "_local_path", lambda fs, jpath: None)
+    assert sorted(tstable._fs_list_names(spark, ts.path)) == local
+    assert local == ["_SUCCESS", "_ts_meta.json", "date=2024-03-01", "date=2024-03-02"]
+    assert tstable._fs_list_names(spark, os.path.join(root, "missing")) == []
+
+
+def test_schemeless_root_follows_default_fs(spark, root):
+    """Hadoop resolves a path with no scheme against ``fs.defaultFS``,
+    and so does every Spark read and write of the store. With a default
+    FS that is not local (a ``viewfs`` mount of ``root``), ``/<mount>``
+    is no dir on this machine, so listing, claiming and rewriting it must
+    go through Hadoop too, or reads come back empty and ``create``
+    fails."""
+    from tstables_spark.streaming.ingest import compact_series
+
+    conf = spark._jsc.hadoopConfiguration()
+    # Hadoop caches one FileSystem per scheme and authority: a fresh
+    # authority gets a ViewFileSystem built from this mount table.
+    mount = "ts" + uuid.uuid4().hex[:8]
+    link = f"fs.viewfs.mounttable.{mount}.link./{mount}"
+    default_fs = conf.get("fs.defaultFS")
+    conf.set(link, "file://" + root)
+    conf.set("fs.defaultFS", f"viewfs://{mount}/")
+    try:
+        assert not os.path.exists(f"/{mount}")
+        start = datetime(2024, 3, 1, tzinfo=UTC)
+        ts = TimeSeriesTable.create(spark, f"/{mount}", "s", SCHEMA)
+        ts.append(_ticks(spark, start, 48))
+        ts.append(_ticks(spark, start + timedelta(minutes=30), 48))
+        days = sorted(d for d in os.listdir(os.path.join(root, "s")) if d.startswith("date="))
+        assert days == ["date=2024-03-01", "date=2024-03-02"]
+        with pytest.raises(TimeSeriesTableError):
+            TimeSeriesTable.create(spark, f"/{mount}", "s", SCHEMA)
+
+        assert ts.to_df().count() == 96
+        assert ts.read_range(start, start + timedelta(hours=5)).count() == 11
+        assert ts.min_dt() == start
+        assert ts.max_dt() == start + timedelta(hours=47, minutes=30)
+        at = ts.read_at(start + timedelta(hours=30, minutes=40)).collect()
+        assert [r.ts for r in at] == [datetime(2024, 3, 2, 6, 30)]
+
+        compact_series(spark, ts.path)
+        for d in days:
+            parts = [f for f in os.listdir(os.path.join(root, "s", d)) if f.endswith(".parquet")]
+            assert len(parts) == 1
+        ts.upsert(spark.createDataFrame([(start, "EURUSD", 9.0)], SCHEMA))
+        assert ts.to_df().count() == 96
+        assert [r.price for r in ts.read_at(start).collect()] == [9.0]
+    finally:
+        conf.set("fs.defaultFS", default_fs)
+        conf.unset(link)

@@ -22,7 +22,7 @@ from tstables_spark.plans._portable_sql import epoch_floor_div
 from tstables_spark._staging import register_staged_table, scratch_dir, staged
 from tstables_spark.plans.registry import query
 from tstables_spark.plans.tables import load
-from tstables_spark.tstable import TimeSeriesTable
+from tstables_spark.tstable import TimeSeriesTable, _read_days
 
 # Events span 2024-01-01 .. 2024-01-30 (all scale factors).
 RANGE_START = "2024-01-10 00:00:00"
@@ -874,7 +874,7 @@ def ts_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts = TimeSeriesTable.create(spark, tmp, "events_series", ev.schema)
     ts.append(ev)
     return (
-        ts._df()
+        _read_days(spark, ts.path, ts._partition_dates(), ts.schema)
         .groupBy(F.col("date").cast("timestamp").alias("part_date"))
         .agg(
             F.count(F.lit(1)).alias("n"),

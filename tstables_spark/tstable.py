@@ -21,14 +21,23 @@ PyTables Filters/chunking   Parquet codec + row-group sizing (A9)
 Physical layout: ``<root>/<series>/date=YYYY-MM-DD/part-*.parquet`` with
 rows sorted by ``ts`` *within* every file. The reference prunes to the
 day-groups overlapping a requested range and binary-searches the sorted
-timestamp column of the edge partitions; here Hive-style partition
-pruning on ``date`` plays the first role and Parquet row-group min/max
-statistics (tight, because of the in-file sort) play the second — so
-read latency is proportional to the size of the requested range, not the
-size of the table, which is the reference's core performance contract
-(BASELINE.md). This holds unchanged on a 1000-executor cluster over
-100 TB: pruning happens at planning time against partition metadata and
-row-group footers, never by scanning data.
+timestamp column of the edge partitions. Here every read goes through
+``_read_days``, which names the ``date=`` dirs it touches: ``read_range``
+the days its range overlaps, ``read_at`` / ``min_dt`` / ``max_dt`` one
+dir per probed day. Parquet row-group min/max statistics (tight, because
+of the in-file sort) play the binary search. So a read costs O(range),
+not O(table) — the reference's core performance contract (BASELINE.md).
+``scripts/measure_tick_reads.py`` on 4 cores (24 rows a day, median of
+5): a one-day ``read_range`` took 0.06 s and ``max_dt`` 0.05 s on 30-,
+365- and 1825-day series alike, with the same Spark jobs per call at
+every length; reading the series root, as this module did before, took
+3.6 and 4.0 s on the 1825-day series.
+
+The trade of naming day dirs: store reads never consult a streaming
+file sink's ``_spark_metadata`` log. Batch appends next to a stream are
+visible at once, and so is a file a micro-batch wrote but never
+committed (its driver died mid-batch; see
+``streaming.ingest.ingest_stream``).
 
 Semantic divergences from the reference (deliberate, documented):
 
@@ -47,7 +56,7 @@ from __future__ import annotations
 import json
 import os
 import re
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,10 +114,27 @@ def _fs_mkdirs(spark: SparkSession, path: str) -> None:
 
 
 def _fs_list_names(spark: SparkSession, path: str) -> list[str]:
-    fs, jpath, _ = _jfs(spark, path)
+    """Names of the entries of directory ``path`` ([] if it is missing).
+
+    A dir Hadoop resolves to the local file system (``_local_path``) is
+    listed by ``os.listdir``: 0.4 ms for 1825 ``date=`` dirs on a 4-core
+    box. Any other goes through Hadoop in a fixed number of JVM calls,
+    the listing coming back as one newline-joined string: 0.025 s for
+    those dirs, against 0.25 s for two py4j calls per entry. Most of the
+    0.025 s is py4j returning an answer over 8 KB, which stalls on
+    loopback (25-44 ms measured) — half a one-day read."""
+    fs, jpath, jvm = _jfs(spark, path)
+    local = _local_path(fs, jpath)
+    if local is not None:
+        try:
+            return os.listdir(local)
+        except FileNotFoundError:
+            return []
     if not fs.exists(jpath):
         return []
-    return [st.getPath().getName() for st in fs.listStatus(jpath)]
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(jpath))
+    joined = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(paths).mkString("\n")
+    return [p.rsplit("/", 1)[-1] for p in joined.split("\n") if p]
 
 
 def _fs_read_text(spark: SparkSession, path: str) -> str:
@@ -133,24 +159,35 @@ def _is_local_path(path: str) -> bool:
     return "://" not in path or path.startswith("file:")
 
 
+def _local_path(fs, jpath) -> str | None:
+    """The OS path of Hadoop Path ``jpath`` if ``fs``, the FileSystem
+    Hadoop resolved it to, is the local one; else None. The decision is
+    Hadoop's, as for Spark's own reads and writes: a path with no scheme
+    follows ``fs.defaultFS``, which on a cluster is usually not local."""
+    if fs.getScheme() != "file":
+        return None
+    return fs.makeQualified(jpath).toUri().getPath()
+
+
 def _fs_claim_new(spark: SparkSession, path: str) -> bool:
     """Claim a path so exactly one of two concurrent creators wins.
 
-    Local roots keep the kernel-atomic O_EXCL open (Hadoop's
-    LocalFileSystem createNewFile is exists-then-create — NOT atomic).
-    Remote roots use FileSystem.createNewFile; HDFS signals the loser
+    A path Hadoop resolves to the local file system (``_local_path``)
+    keeps the kernel-atomic O_EXCL open (Hadoop's LocalFileSystem
+    createNewFile is exists-then-create — NOT atomic). Any other uses
+    FileSystem.createNewFile; HDFS signals the loser
     with FileAlreadyExistsException (mapped to False here), S3-like
     stores are last-writer-wins by nature — the same caveat every
     non-transactional table format carries."""
-    if _is_local_path(path):
-        local = path[len("file:"):] if path.startswith("file:") else path
+    fs, jpath, _ = _jfs(spark, path)
+    local = _local_path(fs, jpath)
+    if local is not None:
         try:
             fd = os.open(local, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
         except FileExistsError:
             return False
         os.close(fd)
         return True
-    fs, jpath, _ = _jfs(spark, path)
     try:
         return bool(fs.createNewFile(jpath))
     except Exception as e:  # HDFS raises instead of returning False
@@ -211,11 +248,11 @@ def _fs_rename_overwrite(spark: SparkSession, src: str, dst: str) -> None:
 
 def _drop_sink_log(spark: SparkSession, path: str) -> None:
     """Remove a streaming file sink's ``_spark_metadata`` log under
-    ``path``. ``spark.read.parquet`` TRUSTS the log when present and lists
-    only the files it registered, so a rewrite must drop it BEFORE its
-    read (else batch-appended files are left out of the rewrite and then
-    deleted by the swap) and again at swap time (the log lists files the
-    swap replaces)."""
+    ``path``. The store's own reads never consult it (``_read_days``
+    names day dirs; Spark trusts a sink log only when it reads the dir
+    that holds it), but a third-party ``spark.read.parquet(path)`` of the
+    root does and lists only the files the log registered — which a swap
+    has just replaced."""
     fs, _, jvm = _jfs(spark, path)
     fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_spark_metadata"), True)
 
@@ -273,17 +310,21 @@ def rewrite_days(
     renamed to ``date=…__precompact``, the rewritten dir renamed in, the
     backup dropped. Days the rewrite did not produce and the root's own
     files (``_ts_meta.json``, ``_ts_versions/``) are never touched, so the
-    series path never goes missing; a reader sees at most one day missing
-    between that day's two renames. The temp dir is removed in every case.
+    series path never goes missing; a reader that lists the days between
+    a day's two renames misses at most that day, and one that named the
+    day just before fails on the missing dir (as a read whose files were
+    already listed fails on the replaced files). The temp dir is removed
+    in every case.
 
     A ``__precompact`` marker left by a crashed run for ANY of the days
     aborts before the first rename. A failed rename-in puts the live dir
     back (best-effort; never masking the original error). The streaming
-    sink's log is dropped before the swap (``_drop_sink_log``; callers
-    drop it before building ``df`` too). MUST run with any writing stream
-    stopped (or between availableNow runs): an active FileStreamSink
-    would recreate the log listing only its next batch, hiding every
-    other file from readers."""
+    sink's log is dropped before the swap (``_drop_sink_log``). MUST run
+    with any writing stream stopped (or between availableNow runs): a
+    micro-batch writing into a day being swapped can be lost with the
+    replaced dir, and an active FileStreamSink would recreate the log
+    listing only its next batch, hiding every other file from readers of
+    the root."""
     tmp = path + suffix
     fs, _, jvm = _jfs(spark, path)
     hpath = jvm.org.apache.hadoop.fs.Path
@@ -317,6 +358,50 @@ def rewrite_days(
             fs.delete(old, True)
     finally:
         fs.delete(hpath(tmp), True)
+
+
+# -- the one read path: named day dirs under the series root ---------------
+
+def _list_days(spark: SparkSession, path: str) -> list:
+    """Sorted dates of the ``date=YYYY-MM-DD`` dirs under ``path``, from
+    directory names only (one listing, no data read). Other entries —
+    root files, ``date=…__precompact`` swap backups — are skipped."""
+    out = []
+    for n in _fs_list_names(spark, path):
+        if n.startswith(f"{DATE_COL}="):
+            try:
+                out.append(date.fromisoformat(n.split("=", 1)[1]))
+            except ValueError:
+                pass
+    return sorted(out)
+
+
+def _read_days(spark: SparkSession, path: str, days, schema: T.StructType | None) -> DataFrame:
+    """The store's one reader: ``schema`` plus the ``date`` partition
+    column over exactly the ``date=`` dirs of ``days`` under ``path``.
+    An element of ``days`` may also be a path relative to ``path`` (a
+    snapshot's manifest file). ``basePath`` keeps ``date`` a partition
+    column, so date predicates stay partition filters.
+
+    A read never lists more than the dirs it names, so its cost follows
+    the days it covers, not the table. It also never consults a
+    streaming sink's ``_spark_metadata`` log (Spark trusts that log only
+    when it reads the one dir that holds it): a day read sees
+    batch-appended files next to sink-written ones, and also any file a
+    micro-batch wrote but never committed (see ``ingest_stream``).
+
+    No days gives an empty frame of the schema. ``schema=None`` infers it
+    from the files (a bare parquet tree with no ``_ts_meta.json``)."""
+    if schema is not None:
+        schema = T.StructType(list(schema.fields) + [T.StructField(DATE_COL, T.DateType())])
+    if not days:
+        return spark.createDataFrame([], schema)
+    reader = spark.read.option("basePath", path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*[
+        os.path.join(path, d if isinstance(d, str) else f"{DATE_COL}={d}") for d in days
+    ])
 
 
 class TimeSeriesTable:
@@ -509,9 +594,10 @@ class TimeSeriesTable:
         touched set. Corrections that genuinely re-time a row across
         days are a delete+insert.
 
-        On a series a streaming file sink also writes to, the sink's
-        ``_spark_metadata`` log is dropped before the read (see
-        ``_drop_sink_log``): run with that stream stopped, as for
+        The read names the touched days' dirs (``_read_days``), so on a
+        series a streaming file sink also writes to it merges sink-written
+        and batch-appended files alike — and any file a micro-batch
+        wrote but never committed. Run with that stream stopped, as for
         ``compact_series``.
         """
         self._check_schema(df)
@@ -544,10 +630,8 @@ class TimeSeriesTable:
             raise TimeSeriesTableError("null timestamps not allowed")
         if not dates:
             return
-        date_strs = sorted(str(d) for d in dates)
-
-        _drop_sink_log(self.spark, self.path)
-        existing = self._df().where(F.col(DATE_COL).cast("string").isin(date_strs))
+        touched = set(dates)
+        existing = self._read([d for d in self._partition_dates() if d in touched])
         tagged_old = existing.select(*cols, DATE_COL).withColumn("__src", F.lit(0))
         tagged_new = dated_new.select(*cols, DATE_COL).withColumn("__src", F.lit(1))
         # Group on (identity, date), NOT identity alone: if the same
@@ -582,7 +666,7 @@ class TimeSeriesTable:
         and type changes are rejected: they would require a rewrite to
         stay consistent, and silently reinterpreting old files is how
         engines corrupt history. Reads need no mergeSchema scan-side
-        inference: ``_df`` already passes the declared schema, and
+        inference: ``_read_days`` already passes the declared schema, and
         Spark's parquet reader fills columns missing from a file with
         nulls — so old files serve the new schema for free and
         partition pruning/pushdown are unchanged.
@@ -633,22 +717,12 @@ class TimeSeriesTable:
         if got != want:
             raise TimeSeriesTableError(f"schema mismatch: got {got}, want {want}")
 
-    def _df(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(
-                T.StructType(
-                    list(self.schema.fields) + [T.StructField(DATE_COL, T.DateType())]
-                )
-            ).parquet(self.path)
-        except Exception:
-            # empty series: no parquet files yet
-            return self.spark.createDataFrame([], self.schema).withColumn(
-                DATE_COL, F.lit(None).cast(T.DateType())
-            )
+    def _read(self, days) -> DataFrame:
+        return _read_days(self.spark, self.path, days, self.schema)
 
     def to_df(self) -> DataFrame:
         """Whole series as a DataFrame (without the derived date column)."""
-        return self._df().select(*self.schema.fieldNames())
+        return self._read(self._partition_dates()).select(*self.schema.fieldNames())
 
     # -- A4: read_range -----------------------------------------------------
     def _projected_names(self, columns: list[str] | None, op: str) -> list[str]:
@@ -685,9 +759,10 @@ class TimeSeriesTable:
         """All rows with ``start <= ts <= end`` — inclusive both ends,
         exactly like ``TsTable.read_range`` (SURVEY.md §2 A4).
 
-        The explicit ``date BETWEEN`` predicate guarantees static
-        partition pruning (the reference's manual day-group walk); the
-        ``ts BETWEEN`` predicate is pushed to the Parquet reader where
+        Only the ``date=`` dirs from ``start``'s UTC day to ``end``'s are
+        read (the reference's manual day-group walk), and the ``date
+        BETWEEN`` predicate stays on top as a partition filter. The ``ts
+        BETWEEN`` predicate is pushed to the Parquet reader, where
         row-group min/max stats — tight, thanks to the write-time sort —
         skip non-overlapping row groups (the reference's binary search).
 
@@ -701,16 +776,13 @@ class TimeSeriesTable:
         """
         start, end = _as_utc(start), _as_utc(end)
         names = self._projected_names(columns, "read_range")
-        if end < start:
-            return self.to_df().select(*names).limit(0)
-        df = self._df()
-        pruned = df.where(
+        days = [d for d in self._partition_dates() if start.date() <= d <= end.date()]
+        return self._read(days).where(
             (F.col(DATE_COL) >= F.lit(start.date()))
             & (F.col(DATE_COL) <= F.lit(end.date()))
             & (F.col(TS_COL) >= F.lit(start))
             & (F.col(TS_COL) <= F.lit(end))
-        )
-        return pruned.select(*names)
+        ).select(*names)
 
     # -- pandas edge (the reference's native interface) ---------------------
     def append_pandas(self, pdf, strict_order: bool = False, files_per_day: int = 1) -> None:
@@ -756,12 +828,13 @@ class TimeSeriesTable:
         (operators/asof.py).
 
         Cost discipline mirrors ``min_dt``/``max_dt`` (``_walk_days``):
-        walk date partitions from ``at`` backwards, one single-partition
-        top-1 probe (one job) per day until a day holds a row at-or-before
-        ``at``, then read exactly that timestamp's rows. Writes never
-        leave an empty ``date=`` dir, so that is at most two probes
-        (``at``'s own day, then the newest earlier day), independent of
-        table size.
+        walk date partitions from ``at`` backwards, one single-dir top-1
+        probe (one job) per day until a day holds a row at-or-before
+        ``at``, then read exactly that timestamp's rows from that dir.
+        Batch writes never leave an empty ``date=`` dir, so that is at
+        most two probes (``at``'s own day, then the newest earlier day),
+        independent of table size; a streaming micro-batch whose job
+        aborted can leave one, which costs one more probe.
         Returns an empty DataFrame when no row exists at-or-before
         ``at``. ``columns`` projects like ``read_range`` (ReadSchema
         pruning). Multiple rows sharing the winning timestamp are all
@@ -769,51 +842,36 @@ class TimeSeriesTable:
         inclusive contract."""
         at = _as_utc(at)
         names = self._projected_names(columns, "read_at")
-        df = self._df()
-        found = self._walk_days(
-            df, True, last=at.date(), cond=F.col(TS_COL) <= F.lit(at)
-        )
+        found = self._walk_days(True, last=at.date(), cond=F.col(TS_COL) <= F.lit(at))
         if found is None:
-            return self.to_df().select(*names).limit(0)
+            return self._read([]).select(*names)
         d, hit = found
-        return df.where(
-            (F.col(DATE_COL) == F.lit(d)) & (F.col(TS_COL) == F.lit(hit))
-        ).select(*names)
+        return self._read([d]).where(F.col(TS_COL) == F.lit(hit)).select(*names)
 
     # -- A5/A6: min/max -----------------------------------------------------
     def _partition_dates(self) -> list:
-        """Sorted list of date partition values, from partition-directory
-        names only — a pure metadata operation at any scale (the
-        reference's y/m/d group enumeration). Uses the Hadoop FileSystem
-        API so the same code works on HDFS/S3 on a real cluster."""
-        from datetime import date as _date
+        """Sorted dates of this series' day partitions (``_list_days``) —
+        the reference's y/m/d group enumeration; a root Hadoop does not
+        resolve to the local file system is listed through its API."""
+        return _list_days(self.spark, self.path)
 
-        out = []
-        for n in _fs_list_names(self.spark, self.path):
-            if n.startswith(f"{DATE_COL}="):
-                try:
-                    out.append(_date.fromisoformat(n.split("=", 1)[1]))
-                except ValueError:
-                    pass
-        return sorted(out)
-
-    def _walk_days(self, df: DataFrame, reverse: bool, last=None, cond=None):
-        """``(day, ts)``: the earliest ``ts`` of the oldest date partition
-        of ``df`` (this series' ``_df()``) holding a row that matches
-        ``cond`` — or, ``reverse``, the latest ``ts`` of the newest such
-        partition up to ``last``. None when no day qualifies.
+    def _walk_days(self, reverse: bool, last=None, cond=None):
+        """``(day, ts)``: the earliest ``ts`` of the oldest day partition
+        holding a row that matches ``cond`` — or, ``reverse``, the latest
+        ``ts`` of the newest such day up to ``last``. None when no day
+        qualifies.
 
         One Spark job per probed day: each probe is a top-1 over ONE
-        date partition's ``ts`` column (a shuffle-free
-        TakeOrderedAndProject), so the cost is the number of days
-        probed, independent of total table size."""
+        day dir's ``ts`` column (a shuffle-free TakeOrderedAndProject),
+        so the cost is the number of days probed, independent of total
+        table size."""
         days = [d for d in self._partition_dates() if last is None or d <= last]
         order = F.col(TS_COL).desc() if reverse else F.col(TS_COL).asc()
-        for d in sorted(days, reverse=reverse):
-            pred = F.col(DATE_COL) == F.lit(d)
+        for d in (reversed(days) if reverse else days):
+            df = self._read([d])
             if cond is not None:
-                pred = pred & cond
-            top = df.where(pred).select(TS_COL).orderBy(order).limit(1).collect()
+                df = df.where(cond)
+            top = df.select(TS_COL).orderBy(order).limit(1).collect()
             if top:
                 return d, top[0][0]
         return None
@@ -821,7 +879,7 @@ class TimeSeriesTable:
     def _edge_dt(self, reverse: bool) -> datetime | None:
         """Reference semantics (``TsTable.min_dt``/``max_dt``): walk day
         partitions from the edge inward until one holds data."""
-        found = self._walk_days(self._df(), reverse)
+        found = self._walk_days(reverse)
         # collect() yields naive datetimes in session TZ (UTC, pinned in
         # __init__); return tz-aware UTC like the reference's
         # pytz-localized min_dt/max_dt.
@@ -854,12 +912,9 @@ class TimeSeriesTable:
         Snapshots recorded before a purge refer to deleted files — purge
         is this layout's VACUUM, and invalidates older versions
         (documented in ``snapshot``)."""
-        from datetime import date as _date
-        from datetime import datetime as _datetime
-
-        if isinstance(cutoff, _datetime):
+        if isinstance(cutoff, datetime):
             cutoff = _as_utc(cutoff).date()
-        if not isinstance(cutoff, _date):
+        if not isinstance(cutoff, date):
             raise TimeSeriesTableError(f"cutoff must be a date/datetime, got {type(cutoff)}")
         fs, _, jvm = _jfs(self.spark, self.path)
         purged = []
@@ -933,18 +988,16 @@ class TimeSeriesTable:
     def read_version(self, version: int) -> DataFrame:
         """The series exactly as of ``snapshot()`` number ``version``.
 
-        Reads only the manifest's files; ``basePath`` keeps Hive
-        partition-column derivation (and therefore date pruning on top
-        of this frame) working even though individual files are listed.
-        An empty manifest yields an empty frame of the declared schema."""
+        Reads only the manifest's files (``_read_days`` over paths
+        relative to the root), so date pruning on top of this frame still
+        works. An empty manifest yields an empty frame of the declared
+        schema."""
         vpath = os.path.join(self._versions_dir(), f"v{version}.json")
         if not _fs_exists(self.spark, vpath):
             raise TimeSeriesTableError(
                 f"no snapshot v{version}; have {self.versions()}"
             )
         files = json.loads(_fs_read_text(self.spark, vpath))["files"]
-        if not files:
-            return self.spark.createDataFrame([], self.schema)
         # ONE recursive listing instead of a per-file exists probe —
         # O(files) sequential RPCs against a remote store would add
         # seconds of pure metadata latency.
@@ -955,15 +1008,7 @@ class TimeSeriesTable:
                 f"snapshot v{version} references files removed by a later "
                 f"compact/purge/upsert (vacuum invalidates old versions): {missing[:3]}"
             )
-        read_schema = T.StructType(
-            list(self.schema.fields) + [T.StructField(DATE_COL, T.DateType())]
-        )
-        df = (
-            self.spark.read.schema(read_schema)
-            .option("basePath", self.path)
-            .parquet(*[os.path.join(self.path, rel) for rel in files])
-        )
-        return df.select(*self.schema.fieldNames())
+        return self._read(files).select(*self.schema.fieldNames())
 
 
 def list_series(root: str, spark: SparkSession | None = None) -> list[str]:
