@@ -21,3 +21,32 @@ def test_task_flags_only_against_matching_baseline():
     legacy = {k: v for k, v in prev.items() if k != "cpus"}
     assert bench._task_flags(legacy, stamp, cur) == ([], {}, "mismatch")
     assert bench._task_flags({}, stamp, cur) == ([], {}, "mismatch")
+
+
+def test_count_code_lines_skips_docstrings_comments_and_blanks():
+    """scripts/count_code_lines.py counts lines holding a code token:
+    docstrings, comment-only and blank lines are out; every line a
+    multi-line string spans is in, its blank line too."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(bench.__file__).resolve().parent / "scripts" / "count_code_lines.py"
+    spec = importlib.util.spec_from_file_location("count_code_lines", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    snippet = (
+        '"""Module docstring\n'
+        'over two lines."""\n'
+        "\n"
+        "import os  # trailing comment\n"
+        "# a comment line\n"
+        "\n"
+        "def f(x):\n"
+        '    """Function docstring."""\n'
+        '    s = """a\n'
+        "multi-line\n"
+        "\n"
+        'string"""\n'
+        "    return s\n"
+    )
+    assert mod.count_code_lines(snippet) == 7

@@ -1501,7 +1501,7 @@ def test_asof_presorted_directional_matches_and_elides(spark, tmp_path):
     Sort, same as the backward read."""
     import re
     from tstables_spark.operators.asof import (
-        asof_join, asof_join_presorted_directional, stage_asof_layout,
+        asof_join, asof_join_presorted, stage_asof_layout,
     )
 
     left = spark.createDataFrame(
@@ -1527,7 +1527,7 @@ def test_asof_presorted_directional_matches_and_elides(spark, tmp_path):
                 direction=direction,
             ).collect()
         }
-        pre = asof_join_presorted_directional(
+        pre = asof_join_presorted(
             spark, "asof_presorted_dir_test", ["event_id", "k", "ts"],
             ["val"], direction=direction,
         )
@@ -1543,9 +1543,10 @@ def test_asof_presorted_directional_matches_and_elides(spark, tmp_path):
     assert eq > 0
 
 
-def test_asof_directions_match_pandas_merge_asof(spark):
+def test_asof_directions_match_pandas_merge_asof(spark, tmp_path):
     """Independent reference for the whole as-of direction family:
-    pandas merge_asof on the same data must agree with asof_join for
+    pandas merge_asof on the same data must agree with asof_join AND
+    with the staged read (stage_asof_layout + asof_join_presorted) for
     backward / forward / nearest, with and without tolerance — a THIRD
     implementation (the DuckDB oracles are the second), on a fixture
     with deliberate exact-timestamp ties and equal-distance nearest
@@ -1568,14 +1569,27 @@ def test_asof_directions_match_pandas_merge_asof(spark):
     left = spark.createDataFrame(lpdf[["event_id", "k", "ts"]])
     right = spark.createDataFrame(rpdf[["k", "rts", "val"]])
 
-    from tstables_spark.operators.asof import asof_join
+    from tstables_spark.operators.asof import (
+        asof_join, asof_join_presorted, stage_asof_layout,
+    )
 
+    stage_asof_layout(
+        left, right, "ts", "rts", "k", "k", ["val"],
+        "asof_pandas_ref_test", str(tmp_path / "t"), num_buckets=3,
+    )
     for direction in ("backward", "forward", "nearest"):
         for tol in (None, 30):
             got = {
                 (r["event_id"], r["val"])
                 for r in asof_join(
                     left, right, "ts", "rts", "k", "k", ["val"],
+                    tolerance_seconds=tol, direction=direction,
+                ).collect()
+            }
+            staged = {
+                (r["event_id"], r["val"])
+                for r in asof_join_presorted(
+                    spark, "asof_pandas_ref_test", ["event_id"], ["val"],
                     tolerance_seconds=tol, direction=direction,
                 ).collect()
             }
@@ -1595,6 +1609,42 @@ def test_asof_directions_match_pandas_merge_asof(spark):
             }
             assert got == want, (direction, tol,
                                  sorted(got - want)[:5], sorted(want - got)[:5])
+            assert staged == want, (direction, tol, "staged",
+                                    sorted(staged - want)[:5],
+                                    sorted(want - staged)[:5])
+    spark.sql("DROP TABLE IF EXISTS asof_pandas_ref_test")
+
+
+def test_one_asof_encoder_and_carry_step():
+    """Inside operators/asof.py only ``_carry`` calls ``rowsBetween``
+    (runs an as-of window) and only ``_encode_asof_sides`` builds the
+    side literal (``.alias(_SIDE)``): every as-of read, fresh or staged,
+    goes through one encoder and one carry step. Calls are found in the
+    syntax tree, so comments and docstrings may name them."""
+    import ast
+    import pathlib
+
+    import tstables_spark.operators.asof as asof
+
+    tree = ast.parse(pathlib.Path(asof.__file__).read_text())
+    owners = {"rowsBetween": "_carry", "_SIDE": "_encode_asof_sides"}
+    seen, bad = set(), []
+    for top in tree.body:
+        owner = top.name if isinstance(top, ast.FunctionDef) else None
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr = node.func.attr
+            if attr == "alias" and any(
+                isinstance(a, ast.Name) and a.id == "_SIDE" for a in node.args
+            ):
+                attr = "_SIDE"
+            if attr in owners:
+                seen.add(attr)
+                if owner != owners[attr]:
+                    bad.append(f"asof.py:{node.lineno} {attr} in {owner}")
+    assert not bad, bad
+    assert seen == set(owners)
 
 
 def test_distributed_cumsum_decimal_column(spark):
@@ -2393,7 +2443,6 @@ def test_asof_epoch_layout_bounded_appends(spark, tmp_path):
         append_asof_epoch_layout,
         asof_join,
         asof_join_presorted,
-        asof_join_presorted_directional,
         stage_asof_epoch_layout,
     )
 
@@ -2457,7 +2506,7 @@ def test_asof_epoch_layout_bounded_appends(spark, tmp_path):
     plan = pre._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan  # zero Exchange at any epoch count
     # nearest direction rides the same layout unchanged
-    near = asof_join_presorted_directional(
+    near = asof_join_presorted(
         spark, name, ["event_id", "k", "ts"], ["val"], direction="nearest"
     )
     plan_n = near._jdf.queryExecution().executedPlan().toString()

@@ -901,9 +901,10 @@ def ts_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORWARD as-of join: for each event, the EARLIEST order at-or-after
     it for the same key — the "next quote" lookup (pandas merge_asof
-    direction='forward'). Exact mirror of join_asof: same single
-    shuffle + linear pass, window frame flipped to current->following
-    with a running first(ignorenulls) (operators/asof.py). Orders are
+    direction='forward'). Same single shuffle + sort as join_asof: a
+    running first(ignorenulls) over current->following beside the
+    backward carry, which supplies an equal-time match
+    (operators/asof.py::_carry). Orders are
     collapsed to one row per (key, time) — MIN orderkey wins, matching
     DuckDB's forward ASOF tie choice deterministically."""
     ev = load(spark, sf_dir, "events")
@@ -962,7 +963,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_asof direction='nearest', completing the direction family
     (backward = join_asof, forward = join_asof_forward). One union +
     ONE key shuffle with both running carries computed over the same
-    sort (operators/asof.py::_asof_nearest); the oracle is the
+    sort (operators/asof.py::_carry); the oracle is the
     two-ASOF-joins-plus-CASE formulation of the same choice. Orders
     collapse to one row per (key, time) — max orderkey wins — so both
     engines see a deterministic right side."""
@@ -2904,16 +2905,16 @@ def join_asof_forward_presorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort convention puts an equal-time right row before the left row,
     outside the forward frame; the read recovers the inclusive match
     from the backward carry when its __rts equals the left time
-    (operators/asof.py::asof_join_presorted_directional) — still scan
-    -> Window -> project, ZERO Exchange and ZERO Sort (pinned with the
-    backward read's plan test). Right side collapses per (key, time)
+    (operators/asof.py::_carry) — still scan -> Window -> project, ZERO
+    Exchange and ZERO Sort (pinned with the backward read's plan
+    test). Right side collapses per (key, time)
     with MAX orderkey (the layout's convention; this oracle mirrors
     it, unlike join_asof_forward's MIN-collapse fixture)."""
     t = _asof_staged_table(spark, sf_dir)
-    from tstables_spark.operators.asof import asof_join_presorted_directional
+    from tstables_spark.operators.asof import asof_join_presorted
 
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    return asof_join_presorted_directional(
+    return asof_join_presorted(
         spark,
         t,
         ["event_id", "user_id", "ts"],
@@ -2960,10 +2961,10 @@ def join_asof_nearest_presorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged relation (backward r7, multi + forward + nearest r8). Same
     oracle as join_asof_nearest (backward wins exact ties at gap 0)."""
     t = _asof_staged_table(spark, sf_dir)
-    from tstables_spark.operators.asof import asof_join_presorted_directional
+    from tstables_spark.operators.asof import asof_join_presorted
 
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    return asof_join_presorted_directional(
+    return asof_join_presorted(
         spark,
         t,
         ["event_id", "user_id", "ts"],
@@ -3249,6 +3250,7 @@ def _asof_recovery_table(spark: SparkSession, sf_dir: str) -> str:
     touched an unmarked one, changes the as-of result."""
     from tstables_spark.operators.asof import (
         _EPOCH,
+        _drop_epoch,
         _table_fs_root,
         _write_pending_marker,
         append_asof_epoch_layout,
@@ -3306,18 +3308,14 @@ def _asof_recovery_table(spark: SparkSession, sf_dir: str) -> str:
             .distinct()
             .collect()  # bounded: a week of events spans 1-2 years
         )
-        jvm, fs, _root, loc = _table_fs_root(spark, tag)
+        fsroot = _table_fs_root(spark, tag)
+        jvm, fs, _root, loc = fsroot
         _write_pending_marker(
             jvm, fs, loc,
             {"table": tag, "epochs": touched, "null_partition": False},
         )
         gone = touched[-1]
-        spark.sql(
-            f"ALTER TABLE {tag} DROP IF EXISTS PARTITION ({_EPOCH}='{gone}')"
-        )
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{loc}/{_EPOCH}={gone}")
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
+        _drop_epoch(spark, tag, fsroot, gone)
         # DETECTION: a new append must refuse while the marker stands
         try:
             append_asof_epoch_layout(
@@ -3352,7 +3350,7 @@ def _asof_recovery_table(spark: SparkSession, sf_dir: str) -> str:
         # comparing it to `touched` is vacuous): the dropped epoch's
         # partition must exist again on disk with data files
         del rebuilt
-        if not fs.exists(jpath):
+        if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{loc}/{_EPOCH}={gone}")):
             raise AssertionError(
                 f"recovery did not restore the dropped epoch {gone}"
             )
