@@ -243,6 +243,13 @@ def _group_task_times(spark, groups_of: dict) -> dict:
 # plan change explains (r18 committed an sf0.001 baseline and the next
 # sf0.1 run flagged 23 queries up to x32). These keys must all match.
 BASELINE_KEYS = ("sf", "cpus", "reps")
+# Nor is it between hosts of different speed: two committed sf0.1 runs
+# read era canaries of 1.93 s and 1.22 s (x1.58), and their headlines
+# moved with the canary, not the code. Canaries further apart than this
+# factor (or a missing canary) make the runs unlike. Ten fresh sessions
+# on one 4-core host read 0.84-0.94 s (x1.12) and once 1.20 s: a run
+# that far off is refused too, which errs on the safe side.
+CANARY_RATIO_MAX = 1.2
 # Only a run at this sf replaces the committed BENCH_TASKTIME.json.
 BASELINE_SF = 0.1
 
@@ -263,8 +270,14 @@ def _task_flags(prev: dict, stamp: dict, tasktimes: dict) -> tuple[list, dict, s
     kernel changed; wall alone moving = box. Sub-second noise is exempt
     (|delta| must exceed 0.5 s). Returns (flags, prev task secs, "match"),
     or ([], {}, "mismatch") when ``prev`` differs from ``stamp`` on any
-    of BASELINE_KEYS (or is missing)."""
-    if any(prev.get(k) != stamp[k] for k in BASELINE_KEYS):
+    of BASELINE_KEYS (or is missing), or their ``era_canary_sec`` differ
+    by more than CANARY_RATIO_MAX (or either is missing)."""
+    canaries = (prev.get("era_canary_sec"), stamp.get("era_canary_sec"))
+    if (
+        any(prev.get(k) != stamp[k] for k in BASELINE_KEYS)
+        or not all(canaries)
+        or max(canaries) / min(canaries) > CANARY_RATIO_MAX
+    ):
         return [], {}, "mismatch"
     prev_tasks = {
         n: v.get("task")
@@ -380,7 +393,8 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # Round-over-round task-time diff (r15 verdict #6) against the
     # committed BENCH_TASKTIME.json, only when it was recorded at the
-    # same sf / cores / reps (see BASELINE_KEYS). The flag list rides
+    # same sf / cores / reps on a host of like speed (see BASELINE_KEYS
+    # and CANARY_RATIO_MAX). The flag list rides
     # the one-line metric (compact "name:xR.RR" strings, capped at 8 so
     # the 2000-char tail rule holds); full prev/cur detail lands in the
     # artifact.
@@ -389,6 +403,7 @@ def main() -> None:
         "cpus": spark.sparkContext.defaultParallelism,
         "reps": BENCH_REPS,
         "git_sha": _git_sha(),
+        "era_canary_sec": era_canary,
     }
     try:
         with open(TASKTIME_OUT) as f:
@@ -415,7 +430,6 @@ def main() -> None:
                             "retried": retried,
                             "load_at_loop": loads,
                         },
-                        "era_canary_sec": era_canary,
                         "task_flags": task_flags,
                         "prev_task_sec": {
                             n: prev_tasks.get(n) for n in sorted(tasktimes)

@@ -1,4 +1,5 @@
-"""bench.py's task-time diff compares only like runs (same sf, cores, reps)."""
+"""bench.py's task-time diff compares only like runs (same sf, cores,
+reps and a near era canary)."""
 
 from __future__ import annotations
 
@@ -6,9 +7,9 @@ import bench
 
 
 def test_task_flags_only_against_matching_baseline():
-    stamp = {"sf": 0.1, "cpus": 4, "reps": 3, "git_sha": "b"}
+    stamp = {"sf": 0.1, "cpus": 4, "reps": 3, "git_sha": "b", "era_canary_sec": 1.2}
     prev = {
-        "sf": 0.1, "cpus": 4, "reps": 3, "git_sha": "a",
+        "sf": 0.1, "cpus": 4, "reps": 3, "git_sha": "a", "era_canary_sec": 1.25,
         "queries": {"q_slow": {"task": 2.0}, "q_same": {"task": 2.0}, "q_tiny": {"task": 0.1}},
     }
     cur = {"q_slow": {"task": 4.0}, "q_same": {"task": 2.2}, "q_tiny": {"task": 0.4}}
@@ -21,6 +22,24 @@ def test_task_flags_only_against_matching_baseline():
     legacy = {k: v for k, v in prev.items() if k != "cpus"}
     assert bench._task_flags(legacy, stamp, cur) == ([], {}, "mismatch")
     assert bench._task_flags({}, stamp, cur) == ([], {}, "mismatch")
+
+
+def test_task_flags_refuse_a_far_off_era_canary():
+    """Runs on hosts of different speed are unlike: canaries further
+    apart than CANARY_RATIO_MAX, either way round, or a missing canary
+    on either side, make a mismatch; canaries within it still match."""
+    ratio = bench.CANARY_RATIO_MAX
+    stamp = {"sf": 0.1, "cpus": 4, "reps": 3, "git_sha": "b", "era_canary_sec": 1.0}
+    prev = {**stamp, "git_sha": "a", "queries": {"q": {"task": 4.0}}}
+    cur = {"q": {"task": 2.0}}
+    mismatch = ([], {}, "mismatch")
+    for canary in (1.0 * ratio * 1.01, 1.0 / (ratio * 1.01), 1.93 / 1.22):
+        assert bench._task_flags({**prev, "era_canary_sec": canary}, stamp, cur) == mismatch
+    for canary in (1.0 * ratio * 0.99, 1.0 / (ratio * 0.99)):
+        assert bench._task_flags({**prev, "era_canary_sec": canary}, stamp, cur)[2] == "match"
+    legacy = {k: v for k, v in prev.items() if k != "era_canary_sec"}
+    assert bench._task_flags(legacy, stamp, cur) == mismatch
+    assert bench._task_flags(prev, {**stamp, "era_canary_sec": None}, cur) == mismatch
 
 
 def test_count_code_lines_skips_docstrings_comments_and_blanks():

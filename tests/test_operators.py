@@ -1615,6 +1615,91 @@ def test_asof_directions_match_pandas_merge_asof(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS asof_pandas_ref_test")
 
 
+def test_asof_null_times_never_match(spark, tmp_path):
+    """A NULL time never matches, in any direction, for asof_join and the
+    staged read. Right rows with a NULL time (keys 1 and 2) sort first in
+    their key and were once carried backward to the key's later left
+    rows. The reference is DuckDB's inequality join (``l.ts >= r.rts``,
+    latest right row; ``<=``, earliest), which DuckDB's ``ASOF JOIN``
+    matches on every timed left row. For a NULL-time left row DuckDB
+    1.0's ``ASOF JOIN`` does return a right row, so only the inequality
+    join is the reference there."""
+    import duckdb
+    import pandas as pd
+
+    from tstables_spark.operators.asof import (
+        asof_join, asof_join_presorted, stage_asof_layout,
+    )
+
+    noon = pd.Timestamp("2024-01-01 12:00")
+    lpdf = pd.DataFrame(
+        {"lid": [1, 2, 3], "k": [1, 1, 2], "ts": [noon, pd.NaT, noon]}
+    )
+    rpdf = pd.DataFrame(
+        {
+            "k": [1, 1, 2],
+            "rts": [pd.NaT, noon + pd.Timedelta(hours=1), pd.NaT],
+            "v": [10.0, 20.0, 30.0],
+        }
+    )
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    con.register("l", lpdf)
+    con.register("r", rpdf)
+
+    def duck(sql):
+        return {lid: (None if v is None else float(v)) for lid, v in con.execute(sql).fetchall()}
+
+    def ineq(op, agg):
+        return f"""
+            SELECT l.lid, {agg}(r.v, r.rts) AS v, {agg[4:]}(r.rts) AS rts
+            FROM l LEFT JOIN r ON l.k = r.k AND l.ts {op} r.rts GROUP BY l.lid"""
+
+    back, fwd = ineq(">=", "arg_max"), ineq("<=", "arg_min")
+    want = {
+        "backward": duck(f"SELECT lid, v FROM ({back})"),
+        "forward": duck(f"SELECT lid, v FROM ({fwd})"),
+        "nearest": duck(
+            f"""SELECT l.lid, CASE WHEN b.rts IS NOT NULL AND (f.rts IS NULL
+                   OR l.ts - b.rts <= f.rts - l.ts) THEN b.v ELSE f.v END
+                FROM l JOIN ({back}) b USING (lid) JOIN ({fwd}) f USING (lid)"""
+        ),
+    }
+    for direction, op in (("backward", ">="), ("forward", "<=")):
+        asof = duck(
+            f"SELECT l.lid, r.v FROM l ASOF LEFT JOIN r ON l.k = r.k AND l.ts {op} r.rts"
+        )
+        assert {lid: asof[lid] for lid in (1, 3)} == {lid: want[direction][lid] for lid in (1, 3)}
+    con.close()
+    assert want["backward"] == {1: None, 2: None, 3: None}
+    assert want["forward"] == want["nearest"] == {1: 20.0, 2: None, 3: None}
+
+    left = spark.createDataFrame(lpdf, "lid long, k long, ts timestamp")
+    right = spark.createDataFrame(rpdf, "k long, rts timestamp, v double")
+    stage_asof_layout(
+        left, right, "ts", "rts", "k", "k", ["v"],
+        "asof_null_times_test", str(tmp_path / "t"), num_buckets=2,
+    )
+    try:
+        for direction, expected in want.items():
+            got = {
+                r.lid: r.v
+                for r in asof_join(
+                    left, right, "ts", "rts", "k", "k", ["v"], direction=direction
+                ).collect()
+            }
+            staged = {
+                r.lid: r.v
+                for r in asof_join_presorted(
+                    spark, "asof_null_times_test", ["lid"], ["v"], direction=direction
+                ).collect()
+            }
+            assert got == expected, (direction, got)
+            assert staged == expected, (direction, "staged", staged)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS asof_null_times_test")
+
+
 def test_one_asof_encoder_and_carry_step():
     """Inside operators/asof.py only ``_carry`` calls ``rowsBetween``
     (runs an as-of window) and only ``_encode_asof_sides`` builds the

@@ -1293,8 +1293,8 @@ def test_cc_mid_path_same_fixpoint(spark, monkeypatch):
 
 def test_load_infers_fixture_schema_once(spark, sf_dir, tmp_path):
     """tables.load infers a fixture's schema once: a second load runs no
-    Spark job and returns the same schema; a rewritten file or a changed
-    parquet conf infers again."""
+    Spark job and returns the same schema; a rewritten file or a change
+    to any conf the inference reads infers again."""
     import shutil
 
     import pyarrow as pa
@@ -1316,10 +1316,16 @@ def test_load_infers_fixture_schema_once(spark, sf_dir, tmp_path):
     assert rewritten.columns == ["n_nationkey", "extra"]
     assert rewritten.count() == 2
 
-    key = "spark.sql.parquet.binaryAsString"
-    spark.conf.set(key, "true")
-    try:
-        _, jobs = _jobs_run(spark, lambda: tables.load(spark, str(tmp_path), "nation"))
-    finally:
-        spark.conf.unset(key)
-    assert jobs >= 1
+    # every conf the inference reads is in the key: flipping any one of
+    # them (all are booleans) infers again
+    for key in tables._SCHEMA_CONFS:
+        was = spark.conf.get(key, None)
+        spark.conf.set(key, "false" if spark.conf.get(key).lower() == "true" else "true")
+        try:
+            _, jobs = _jobs_run(spark, lambda: tables.load(spark, str(tmp_path), "nation"))
+        finally:
+            if was is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, was)
+        assert jobs >= 1, key

@@ -154,7 +154,12 @@ def _carry(
     choice: a carried row further than the bound is absent, the match
     nulls out rather than falling back to a further row. Gaps are
     compared on exact microseconds; a DATE right time counts from
-    midnight, as DuckDB casts it."""
+    midnight, as DuckDB casts it. A NULL time never matches, as in the
+    inequality join an as-of join is defined by: a left row with a NULL
+    time gets NULL right values, and a NULL-time right row (it sorts
+    first in its key, so it is carried only where no timed right row
+    precedes) is never chosen. DuckDB 1.0's ``ASOF JOIN`` agrees on
+    NULL right times but does match a NULL-time left row."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
             f"direction must be 'backward', 'forward' or 'nearest', got {direction!r}"
@@ -178,17 +183,20 @@ def _carry(
             ),
         )
         gb = t - F.unix_micros(F.col(f"{c}.__rts").cast("timestamp"))
-        ok_b = F.lit(True) if tol is None else gb <= tol * 1_000_000
+        # a gap is NULL when either time is: no match (docstring)
+        ok_b = gb.isNotNull()
+        if tol is not None:
+            ok_b = ok_b & (gb <= tol * 1_000_000)
         branches = [(ok_b, c)]
         if direction != "backward":
             rows = rows.withColumn(
                 ahead, F.when(gb == 0, F.col(c)).otherwise(F.col(ahead))
             )
             gf = F.unix_micros(F.col(f"{ahead}.__rts").cast("timestamp")) - t
-            ok_f = F.col(ahead).isNotNull()
+            ok_f = gf.isNotNull()
             if tol is not None:
                 ok_f = ok_f & (gf <= tol * 1_000_000)
-            near = F.col(c).isNotNull() & ok_b & (~ok_f | (gb <= gf))
+            near = ok_b & (~ok_f | (gb <= gf))
             branches = (
                 [(ok_f, ahead)] if direction == "forward" else [(near, c), (ok_f, ahead)]
             )

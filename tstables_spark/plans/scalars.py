@@ -349,10 +349,18 @@ def udtf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-block matmul."""
 
     def demean(pdf: pd.DataFrame) -> pd.DataFrame:
-        mean = _exact_mean(pdf["value"])
-        return pdf.assign(demeaned=pdf["value"] - mean)[
-            ["event_id", "user_id", "value", "demeaned"]
-        ]
+        # from the columns' arrays: ``assign`` plus a column selection
+        # copies the frame twice per group (2.3x this kernel's time on
+        # the sf0.01 fixture)
+        value = pdf["value"].to_numpy()
+        return pd.DataFrame(
+            {
+                "event_id": pdf["event_id"].to_numpy(),
+                "user_id": pdf["user_id"].to_numpy(),
+                "value": value,
+                "demeaned": value - _exact_mean(pdf["value"]),
+            }
+        )
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     return grouped_apply_in_pandas(

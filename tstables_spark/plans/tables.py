@@ -40,26 +40,38 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
+# The session confs Spark 4.1's parquet schema inference reads:
+# ``ParquetUtils.inferSchema`` (mergeSchema, respectSummaryFiles) and the
+# ``ParquetToSparkSchemaConverter(SQLConf)`` constructor (the rest).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+)
+
+
 @functools.lru_cache(maxsize=64)
-def _inferred_schema(spark: SparkSession, path: str, stamp, parquet_conf):
+def _inferred_schema(spark: SparkSession, path: str, stamp, schema_conf):
     """The schema ``spark.read.parquet(path)`` infers (one Spark job).
     The key holds what the inference depends on: the session, the
-    file's ``(st_mtime_ns, st_size)`` and the explicitly set parquet
-    confs, so a rewritten file or a changed conf infers again."""
+    file's ``(st_mtime_ns, st_size)`` and the set values of
+    ``_SCHEMA_CONFS``, so a rewritten file or a changed conf infers
+    again."""
     return spark.read.parquet(path).schema
 
 
 def _read(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, with the schema inferred once per
-    (session, file version, parquet confs) instead of on every call."""
+    (session, file version, schema confs) instead of on every call."""
     st = os.stat(path)
-    conf = tuple(
-        sorted(
-            (k, v)
-            for k, v in spark.conf.getAll.items()
-            if k.startswith(("spark.sql.parquet.", "spark.sql.legacy.parquet."))
-        )
-    )
+    conf = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
     schema = _inferred_schema(spark, path, (st.st_mtime_ns, st.st_size), conf)
     return spark.read.schema(schema).parquet(path)
 

@@ -18,18 +18,52 @@ each zip importer on ``sys.path`` then re-reads its whole archive
 (pyspark.zip, py4j, Spark's jar): 150-230 ms per Python-worker task.
 The daemon re-reads an archive only when its mtime or size changed, so
 ``sc.addPyFile`` and rewritten archives behave as before. Results are
-unchanged. With ``SPARK_GRAFT_ON_CLUSTER`` set, neither conf is set:
-there the caller decides what executors can import.
+unchanged.
+
+Unix domain sockets (local mode only): the JVM reaches its Python
+workers, the Arrow collect and serve sockets and the accumulator server
+over Unix domain sockets instead of loopback TCP. On a 4-core box
+(``scripts/measure_python_tasks.py``, medians of 100), a one-task
+identity ``mapInPandas`` took 54.9 ms over TCP and 14.0 ms over Unix
+sockets, against 9-10 ms for the same query with no Python; a
+``pandas_udf`` (58.6 -> 15.7 ms) and a plain Python UDF (56.7 -> 15.9
+ms) moved the same way. A socket path is ``<dir>/.<uuid4>.sock``, the
+dir plus 43 bytes, and must fit AF_UNIX's 107-byte limit, or
+``SparkContext`` init dies with ``OSError: AF_UNIX path too long``. The
+dir is chosen from the path alone: the driver's
+``tempfile.gettempdir()`` when the socket path fits, else ``/tmp`` when
+it is writable, else Unix sockets stay off and workers use TCP. The
+py4j gateway stays on TCP.
+
+With ``SPARK_GRAFT_ON_CLUSTER`` set, none of these confs is set: there
+the caller decides what executors can import and how they connect.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# sockaddr_un.sun_path is 108 bytes with the terminating NUL
+_AF_UNIX_PATH_MAX = 107
+# len("/." + str(uuid.uuid4()) + ".sock"), the name Spark gives a socket
+_SOCKET_NAME_LEN = 43
+
+
+def _unix_socket_dir() -> str | None:
+    """The dir for the Python workers' Unix domain sockets, or None when
+    no candidate leaves room for a socket name (module docstring)."""
+    for d in (tempfile.gettempdir(), "/tmp"):
+        if (
+            len(os.fsencode(d)) + _SOCKET_NAME_LEN <= _AF_UNIX_PATH_MAX
+            and os.access(d, os.W_OK | os.X_OK)
+        ):
+            return d
+    return None
 
 
 def get_spark(
@@ -151,6 +185,11 @@ def get_spark(
             # package whatever the driver's cwd
             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         )
+        sock_dir = _unix_socket_dir()
+        if sock_dir is not None:
+            builder = builder.config(
+                "spark.python.unix.domain.socket.enabled", "true"
+            ).config("spark.python.unix.domain.socket.dir", sock_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
