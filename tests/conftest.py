@@ -19,6 +19,8 @@ def spark():
 
     s = get_spark("tstables_spark_tests", cpus=DEFAULT_CPUS)
     yield s
+    # stopping removes the accumulator server's Unix socket file
+    s.stop()
 
 
 @pytest.fixture(scope="session")

@@ -211,28 +211,18 @@ def test_connected_components_chain_and_clique(spark):
     pair = [(100, 101)]
     edges = spark.createDataFrame(chain + clique + pair, "doc_a long, doc_b long")
     got = {r.node: r.component for r in connected_components(edges).collect()}
-
-    # brute force via union-find
-    parent = {}
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-    for a, b in chain + clique + pair:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
+    assert got == _union_find(chain + clique + pair)
 
 
-def test_connected_components_raises_past_max_iter(spark):
+def test_connected_components_raises_past_max_iter(spark, monkeypatch):
     """A chain deeper than max_iter must RAISE, not silently return
-    non-fixpoint labels (ADVICE r2: the exact-fixpoint contract)."""
+    non-fixpoint labels (ADVICE r2: the exact-fixpoint contract). Only
+    the distributed rounds can stop short, so the one-task bound is
+    forced to 0."""
+    from tstables_spark import _staging
     from tstables_spark.operators.components import connected_components
 
+    monkeypatch.setattr(_staging, "ONE_TASK_ROWS_MAX", 0)
     chain = [(i, i + 1) for i in range(0, 8)]
     edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -240,6 +230,48 @@ def test_connected_components_raises_past_max_iter(spark):
     # ...and a sufficient max_iter still reaches the exact fixpoint
     got = {r.node: r.component for r in connected_components(edges, max_iter=9).collect()}
     assert got == {n: 0 for n in range(9)}
+
+
+def _union_find(pairs):
+    """{node: minimum node id of its component} by union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_connected_components_kernel_matches_union_find(spark):
+    """Under the one-task bound connected_components is one numpy
+    kernel: it matches union-find on seeded random graphs (ids above
+    2^40, repeated and self pairs included), gives no rows and no error
+    on an empty pair list, and reaches the exact fixpoint of a
+    4,096-deep chain whatever ``max_iter``."""
+    import random
+
+    from tstables_spark.operators.components import connected_components
+
+    def run(pairs, **kw):
+        df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+        return {r.node: r.component for r in connected_components(df, **kw).collect()}
+
+    assert run([]) == {}
+    rng = random.Random(11)
+    for _ in range(4):
+        ids = [(1 << 40) + rng.randrange(1 << 60) for _ in range(rng.randrange(2, 80))]
+        pairs = [(rng.choice(ids), rng.choice(ids)) for _ in range(rng.randrange(1, 90))]
+        assert run(pairs) == _union_find(pairs)
+    chain = [(i, i + 1) for i in range(4096)]
+    assert run(chain, max_iter=2) == dict.fromkeys(range(4097), 0)
 
 
 def _brute_kcore(pairs, k):
@@ -403,12 +435,14 @@ def _cc_rounds(pairs):
 
 
 def test_fixpoint_kernels_one_action_per_round(spark, monkeypatch):
-    """connected_components and kcore_peel run exactly one Spark action
-    per round: the convergence probe (the label sum, the survivor
-    count) is observed on the round's pin, never a job of its own.
-    connected_components adds two fixed pins (the symmetric edge list
-    and the identity labels) and one edge count; kcore_peel adds
-    nothing."""
+    """connected_components' distributed rounds and kcore_peel run
+    exactly one Spark action per round: the convergence probe (the
+    label sum, the survivor count) is observed on the round's pin,
+    never a job of its own. connected_components adds two fixed pins
+    (the pair list, its row count observed on that pin's job, and the
+    identity labels); kcore_peel adds nothing. Under the one-task bound
+    connected_components runs one action: the pin of the pairs."""
+    from tstables_spark import _staging
     from tstables_spark.operators.components import connected_components
     from tstables_spark.operators.kcore import kcore_peel
 
@@ -416,6 +450,10 @@ def test_fixpoint_kernels_one_action_per_round(spark, monkeypatch):
     rounds = _cc_rounds(chain)
     assert rounds >= 5  # deep enough that rounds dominate the count
     edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    assert _actions_and_pins(
+        spark, monkeypatch, lambda: connected_components(edges)
+    ) == (1, 1)
+    monkeypatch.setattr(_staging, "ONE_TASK_ROWS_MAX", 0)
     got = {}
     actions, pins = _actions_and_pins(
         spark,
@@ -426,7 +464,7 @@ def test_fixpoint_kernels_one_action_per_round(spark, monkeypatch):
     )
     assert got == dict.fromkeys(range(34), 0)
     # + 1 for the collect above
-    assert (actions, pins) == (rounds + 2 + 1 + 1, rounds + 2)
+    assert (actions, pins) == (rounds + 2 + 1, rounds + 2)
 
     # the clique-plus-tail graph of test_kcore_peel_clique_plus_tail:
     # at k=2 the tail peels one node per round (12, 11, 10), then one

@@ -419,8 +419,9 @@ def test_r12_pagerank_and_doulion(spark, sf_dir, monkeypatch):
     into the edge scan — the edge side must never hash-Exchange (the
     r11 100x OOM was exactly that per-iteration edge shuffle)."""
     import tstables_spark.plans.analytics as A
+    from tstables_spark import _staging
 
-    monkeypatch.setattr(A, "_PR_KERNEL_HALF_EDGES_MAX", 0)
+    monkeypatch.setattr(_staging, "ONE_TASK_ROWS_MAX", 0)
     row = QUERIES["graph_triangles_gate"](spark, sf_dir).collect()[0]
     assert row["n_triangles"] > 0  # non-vacuous at sf0.01
     assert row["within_tol"], row
@@ -448,9 +449,10 @@ def test_r12_big_graph_paths_identical(spark, sf_dir, monkeypatch):
     checkpoints Spark frees, never catalog tables that outlive the
     call."""
     import tstables_spark.plans.analytics as A
+    from tstables_spark import _staging
 
     pr_kernel = {tuple(r) for r in A.graph_pagerank(spark, sf_dir).collect()}
-    monkeypatch.setattr(A, "_PR_KERNEL_HALF_EDGES_MAX", 0)
+    monkeypatch.setattr(_staging, "ONE_TASK_ROWS_MAX", 0)
     pr_small = {tuple(r) for r in A.graph_pagerank(spark, sf_dir).collect()}
     assert pr_small == pr_kernel
     tri_small = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
@@ -538,7 +540,8 @@ def test_pagerank_one_task_edge_cases(spark):
 
     def run(edges):
         df = spark.createDataFrame(edges, "u long, v long")
-        return {r.node: (r.degree, r.pr12) for r in pagerank_one_task(df).collect()}
+        ranks = pagerank_one_task(df, len(edges))
+        return {r.node: (r.degree, r.pr12) for r in ranks.collect()}
 
     assert run([]) == {}
     # round 1 by hand: pr12 = 10^12 div 3 = 333333333333; the ends get
@@ -933,6 +936,27 @@ def test_pin_level_follows_size_estimate(spark):
     assert not _tables_named(spark, "pin_level_big")
 
 
+def test_pin_without_py4j_handles(spark):
+    """A frame without py4j handles (as on Spark Connect, where ``_jdf``
+    raises AttributeError) pins at the serialized MEMORY_AND_DISK level
+    instead of raising, with all its rows."""
+    from tstables_spark._staging import pin
+
+    class NoJvm:
+        def __init__(self, df):
+            self.df = df
+
+        def __getattr__(self, name):
+            if name == "_jdf":
+                raise AttributeError(name)
+            return getattr(self.df, name)
+
+    pinned = pin(NoJvm(spark.range(1000)))
+    lv = pinned._jdf.queryExecution().analyzed().rdd().getStorageLevel()
+    assert (lv.useMemory(), lv.useDisk(), lv.deserialized()) == (True, True, False)
+    assert sorted(r.id for r in pinned.collect()) == list(range(1000))
+
+
 def test_stream_pin_lru_eviction_restages(spark, sf_dir, monkeypatch):
     """The staged-pin registry is LRU-bounded (r14 verdict #5: a
     long-lived session accumulated one catalog table + one JVM
@@ -1163,17 +1187,9 @@ def test_cc_round_join_zero_exchange_zero_sort_on_edges(spark):
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = spark.range(20000).select(
         (F.col("id") % 500).alias("a"), ((F.col("id") + 3) % 499).alias("b")
-    )
+    ).localCheckpoint(eager=True)
     sym = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
+        e.union(e.select("b", "a"))
         .repartition(P, "a")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1197,12 +1213,13 @@ def test_cc_round_join_zero_exchange_zero_sort_on_edges(spark):
 
 
 def test_cc_big_path_same_fixpoint(spark, monkeypatch):
-    """The size-adaptive edge layout (r17) must not change results:
-    forcing the big path (relayout threshold 0) on a chain+clique graph
-    lands on the identical fixpoint as the small path."""
+    """The two paths of connected_components land on one fixpoint:
+    forcing the relayout rounds (one-task bound 0) on a chain+clique
+    graph gives the single-task kernel's labels."""
     from pyspark.sql import functions as F
 
     import tstables_spark.operators.components as C
+    from tstables_spark import _staging
 
     e = spark.range(300).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
@@ -1213,82 +1230,10 @@ def test_cc_big_path_same_fixpoint(spark, monkeypatch):
         )
     ).where(F.col("doc_a") != F.col("doc_b"))
     small = {tuple(r) for r in C.connected_components(e).collect()}
-    monkeypatch.setattr(C, "_SYM_RELAYOUT_ROWS", 0)
+    monkeypatch.setattr(_staging, "ONE_TASK_ROWS_MAX", 0)
     big = {tuple(r) for r in C.connected_components(e).collect()}
     assert small == big
     assert {r[1] for r in small if r[0] < 301} == {0}
-
-def test_cc_small_path_broadcast_rounds_one_exchange(spark):
-    """r17 (opt round): below _ROUND_BCAST_ROWS the small path's
-    per-round label relation is explicitly broadcast into both join
-    legs, so a round's plan carries ONE ENSURE_REQUIREMENTS Exchange
-    (the min aggregate) and two BroadcastHashJoins — not four
-    AQE-coalesced exchanges. Replicates the exact round shape
-    components.py builds in its bcast_rounds branch."""
-    from pyspark.sql import functions as F
-
-    e = spark.range(2000).select(
-        (F.col("id") % 100).alias("a"), ((F.col("id") + 3) % 99).alias("b")
-    )
-    sym = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    nbr = sym.join(F.broadcast(labels), sym.a == labels.node).select(
-        F.col("b").alias("node"), "component"
-    )
-    jump = (
-        labels.alias("l1")
-        .join(
-            F.broadcast(labels.alias("l2")),
-            F.col("l1.component") == F.col("l2.node"),
-        )
-        .select(
-            F.col("l1.node").alias("node"),
-            F.col("l2.component").alias("component"),
-        )
-    )
-    cand = labels.select("node", "component").union(nbr).union(jump)
-    new_labels = cand.groupBy("node").agg(F.min("component").alias("component"))
-    plan = new_labels._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ENSURE_REQUIREMENTS") == 1, plan
-    assert plan.count("BroadcastHashJoin") == 2, plan
-
-
-def test_cc_mid_path_same_fixpoint(spark, monkeypatch):
-    """The broadcast-round small path (r17 opt round) must not change
-    results: forcing the plain AQE rounds (broadcast threshold 0) on a
-    chain+clique graph lands on the identical fixpoint."""
-    from pyspark.sql import functions as F
-
-    import tstables_spark.operators.components as C
-
-    e = spark.range(300).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-    ).union(
-        spark.range(50).select(
-            (F.col("id") % 7 + 1000).alias("doc_a"),
-            ((F.col("id") + 3) % 7 + 1000).alias("doc_b"),
-        )
-    ).where(F.col("doc_a") != F.col("doc_b"))
-    bcast = {tuple(r) for r in C.connected_components(e).collect()}
-    monkeypatch.setattr(C, "_ROUND_BCAST_ROWS", 0)
-    plain = {tuple(r) for r in C.connected_components(e).collect()}
-    assert bcast == plain
 
 
 def test_load_infers_fixture_schema_once(spark, sf_dir, tmp_path):

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tstables_spark._exact import exact_sum, sql_sum
-from tstables_spark._staging import pin
+from tstables_spark._staging import one_task, pin
 from tstables_spark.plans.registry import query
 from tstables_spark.plans._portable_sql import epoch_floor_div
 from tstables_spark.plans.tables import load
@@ -1093,15 +1093,6 @@ def _graph_scale_stats(b0: DataFrame, cap: int) -> tuple[int, int]:
     return n, int(pairs or 0)
 
 
-# Half-edge bound of the single-task PageRank kernel: above it the
-# distributed iteration runs. Sized by the kernel's Python worker,
-# whose peak RSS (VmHWM) was 557 MiB at 4M synthetic half edges over
-# 150k nodes and 231 MiB at 1M (numpy 1.26, Spark 4.1.2, 4-core x86
-# VM) — about 100 B per half edge over a 130 MiB base, which stays a
-# small fraction of a 15 GB host next to the engine's 8g JVM heap.
-_PR_KERNEL_HALF_EDGES_MAX = 4_000_000
-
-
 def _half_edge_bound(ev: DataFrame, cap: int) -> int | None:
     """Upper bound on the capped co-occurrence graph's half edges from
     the events files' footers (no Spark job): every edge joins two ids
@@ -1117,30 +1108,22 @@ def _half_edge_bound(ev: DataFrame, cap: int) -> int | None:
     return min(span * (span - 1) // 2, st.rows * (cap - 1) // 2)
 
 
-def pagerank_one_task(edges: DataFrame) -> DataFrame:
+def pagerank_one_task(edges: DataFrame, half_edges: int) -> DataFrame | None:
     """``graph_pagerank``'s integer rounds over the half-edge list
-    ``edges(u, v)`` (distinct, u < v) in ONE task: the list is
-    repartitioned to a single partition and a numpy kernel runs every
-    round on it. Returns ``(node, degree, pr12)``, no rows for an empty
-    list. Node ids are mapped to dense indices with ``np.unique``, so
-    any int64 id works; the scatter-add is an int64 ``np.add.at``, so
-    every sum is exact and order-independent."""
+    ``edges(u, v)`` (distinct, u < v) as one ``_staging.one_task``
+    kernel, or None when ``half_edges`` (a bound on the list's rows) is
+    above the primitive's bound. Returns ``(node, degree, pr12)``, no
+    rows for an empty list. Node ids are mapped to dense indices with
+    ``np.unique``, so any int64 id works; the scatter-add is an int64
+    ``np.add.at``, so every sum is exact and order-independent."""
 
-    def kernel(batches):
+    def kernel(u, v):
         import numpy as np
-        import pandas as pd
 
-        us, vs = [], []
-        for b in batches:
-            us.append(b["u"].to_numpy(np.int64))
-            vs.append(b["v"].to_numpy(np.int64))
-        m = sum(len(u) for u in us)
-        if m == 0:
-            return
+        m = len(u)
         nodes, idx, degree = np.unique(
-            np.concatenate(us + vs), return_inverse=True, return_counts=True
+            np.concatenate([u, v]), return_inverse=True, return_counts=True
         )
-        del us, vs
         u, v = idx[:m], idx[m:]
         n = len(nodes)
         degree = degree.astype(np.int64)
@@ -1151,11 +1134,9 @@ def pagerank_one_task(edges: DataFrame) -> DataFrame:
             np.add.at(s18, v, c18[u])
             np.add.at(s18, u, c18[v])
             pr12 = 150_000_000_000 // n + 85 * (s18 // 1_000_000) // 100
-        yield pd.DataFrame({"node": nodes, "degree": degree, "pr12": pr12})
+        return {"node": nodes, "degree": degree, "pr12": pr12}
 
-    return edges.select("u", "v").repartition(1).mapInPandas(
-        kernel, "node long, degree long, pr12 long"
-    )
+    return one_task(edges, half_edges, kernel, "node long, degree long, pr12 long")
 
 
 @query("graph_pagerank", oracle=_pagerank_oracle())
@@ -1177,9 +1158,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry user_id statistics:
 
     - single task, when the footer bound on half edges
-      ``min(C(user_id max − min + 1, 2), rows·(cap−1)/2)`` is at most
-      _PR_KERNEL_HALF_EDGES_MAX (4M; the kernel's Python worker peaked
-      at 557 MiB RSS there): the raw memberships feed
+      ``min(C(user_id max − min + 1, 2), rows·(cap−1)/2)`` is within
+      ``_staging.one_task``'s row bound: the raw memberships feed
       ``cooccurrence_edges`` and ``pagerank_one_task`` runs all rounds
       in one numpy kernel. The query stays lazy (no construction job
       beyond the parquet schema read) and executes as one scan, three
@@ -1212,9 +1192,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     if half_edges is None:
         stats = _graph_scale_stats(b0, cap=256)
         half_edges = stats[1]
-    if half_edges <= _PR_KERNEL_HALF_EDGES_MAX:
-        ranks = pagerank_one_task(cooccurrence_edges(mem, cap=256))
-    else:
+    ranks = pagerank_one_task(cooccurrence_edges(mem, cap=256), half_edges)
+    if ranks is None:
         stats = stats or _graph_scale_stats(b0, cap=256)
         ranks = _pagerank_distributed(spark, sf_dir, b0, *stats)
     return ranks.select(

@@ -252,14 +252,15 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_embed_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic duplicate CLUSTERS: connected components over the
-    embedding-cosine near-dup graph (dedup_embed's blocked pairs) by
-    iterative min-label propagation — the same pairs -> components ->
-    canonical-survivor step dedup_clusters applies to the lexical
-    Jaccard graph, here over SEMANTIC duplicates (paraphrases,
-    translations, re-renders that share no n-grams). Pair generation
-    never leaves the per-block Arrow kernel; label propagation ships
-    (node, label) rows only. The oracle is the recursive-CTE closure —
-    exact, but quadratic in cluster size; propagation is what scales."""
+    embedding-cosine near-dup graph (dedup_embed's blocked pairs) — the
+    same pairs -> components -> canonical-survivor step dedup_clusters
+    applies to the lexical Jaccard graph, here over SEMANTIC duplicates
+    (paraphrases, translations, re-renders that share no n-grams). Pair
+    generation never leaves the per-block Arrow kernel; components come
+    from operators/components.py (one numpy kernel task within
+    ``_staging.one_task``'s bound, min-label rounds above it). The
+    oracle is the recursive-CTE closure — exact, but quadratic in
+    cluster size."""
     from tstables_spark.operators.components import connected_components
     from tstables_spark.operators.similarity import embedding_near_dup_pairs
 

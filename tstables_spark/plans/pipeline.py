@@ -285,10 +285,9 @@ def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS from near-dup pairs: connected components over
-    the Jaccard>=0.6 pair graph by iterative min-label propagation
-    (operators/components.py) — each round one keyed join + one min
-    aggregate, converging in diameter rounds (near-dup clusters are
-    near-cliques, so 2-3). The component id (minimum member) is the
+    the Jaccard>=0.6 pair graph (operators/components.py: one numpy
+    kernel task within ``_staging.one_task``'s bound, min-label rounds
+    above it). The component id (minimum member) is the
     canonical survivor each duplicate maps to — the last step of the
     dedup pipeline. The oracle computes the same unique fixpoint with a
     recursive-CTE transitive closure, which is exact but quadratic in
