@@ -599,34 +599,65 @@ def test_pagerank_footer_gate_and_measured_fallback(spark, sf_dir, tmp_path, mon
     assert {tuple(r) for r in df.collect()} == want
 
 
-def test_r17_census_big_path_broadcast_gate(spark, sf_dir, monkeypatch):
-    """r17: on the big path the census gates an explicit broadcast of
-    both join build sides on the pinned edge relation's MEASURED count
-    (the 100x probe put 95% of the doulion census in the wedge
-    shuffle+SMJ that broadcast removes). Under the bound the optimized
-    plan must carry the broadcast strategy hints and the answer must
-    equal the small path's; with the bound forced to 0 the hints must
-    NOT appear and the sort-merge fallback (for a sample that outgrows
-    a broadcast) must give the same answer, with both census joins on
-    the explicit partition count sized from the measured edge count."""
+def _census_stream_counts(df):
+    """Partition counts of the executed plan's explicit ``src``-keyed
+    exchanges."""
+    p = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"hashpartitioning\(src#\d+L?, (\d+)\), REPARTITION_BY_NUM", p)
+
+
+def test_census_wedge_stream_sized_from_edge_count(spark, sf_dir, monkeypatch):
+    """The census's wedge stream takes its width from the measured edge
+    count, not from the partition count AQE left the pin with: on the
+    default (broadcast) path of graph_triangles_approx the stream side
+    is one ``hashpartitioning(src, n), REPARTITION_BY_NUM`` exchange
+    with n the shuffle floor, and with ``_CENSUS_EDGES_PER_PARTITION``
+    cut so the sampled edges need more partitions than the floor, n
+    grows past it. Both runs give the default answer."""
+    import math
+
     import tstables_spark.plans.analytics as A
 
-    small = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = A.graph_triangles_approx(spark, sf_dir)
+    assert _census_stream_counts(df) == [str(floor)]
+    want = {tuple(r) for r in df.collect()}
+    (m,) = {r[1] for r in want}  # n_edges_sampled == oriented edges
+    per = max(1, m // (floor + 3))
+    n = math.ceil(m / per)
+    assert n > floor
+    monkeypatch.setattr(A, "_CENSUS_EDGES_PER_PARTITION", per)
+    df = A.graph_triangles_approx(spark, sf_dir)
+    assert _census_stream_counts(df) == [str(n)]
+    assert {tuple(r) for r in df.collect()} == want
+
+
+def test_r17_census_big_path_broadcast_gate(spark, sf_dir, monkeypatch):
+    """Under its broadcast bound the census hints a broadcast of both
+    join build sides (wedge build and closure build), on the pinned
+    and on the streamed (big) path alike, and the streamed path gives
+    the pinned path's answer; past the bound (forced to 0) no hint
+    appears and the sort-merge joins give the same answer."""
+    import tstables_spark.plans.analytics as A
+
+    df = A.graph_triangles_approx(spark, sf_dir)
+    lp = df._jdf.queryExecution().optimizedPlan().toString()
+    assert lp.count("strategy=broadcast") == 2, lp
+    small = {tuple(r) for r in df.collect()}
     monkeypatch.setattr(A, "_EDGE_PIN_PAIRS_MAX", 1)
     df = A.graph_triangles_approx(spark, sf_dir)
     lp = df._jdf.queryExecution().optimizedPlan().toString()
-    # the query's 1-row ns crossJoin carries its own broadcast hint;
-    # the census gate adds TWO more (wedge build + closure build)
-    assert lp.count("strategy=broadcast") >= 3, lp
+    assert lp.count("strategy=broadcast") == 2, lp
     assert {tuple(r) for r in df.collect()} == small
+    monkeypatch.undo()
 
     _census_sort_merge_leg(spark, sf_dir, monkeypatch, small)
 
 
 def _census_sort_merge_leg(spark, sf_dir, monkeypatch, small):
-    """Force the big-path census past its broadcast bound: no census
-    broadcast hint, the small path's answer, and every census exchange
-    on the explicit count sized from the measured edge count."""
+    """Force the census past its broadcast bound: no census broadcast
+    hint, the default answer, and every census exchange on the
+    explicit count sized from the measured edge count."""
     import math
 
     import tstables_spark.plans.analytics as A
@@ -641,7 +672,7 @@ def _census_sort_merge_leg(spark, sf_dir, monkeypatch, small):
     assert n > floor
     df0 = A.graph_triangles_approx(spark, sf_dir)
     lp0 = df0._jdf.queryExecution().optimizedPlan().toString()
-    assert lp0.count("strategy=broadcast") == 1, lp0
+    assert "strategy=broadcast" not in lp0, lp0
     assert {tuple(r) for r in df0.collect()} == small
     ep0 = df0._jdf.queryExecution().executedPlan().toString()
     counts = re.findall(r"hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM", ep0)
@@ -676,35 +707,6 @@ def test_r13_doulion_cut_validation_and_pin_cache(spark, sf_dir, monkeypatch):
     assert {
         k: v for k, v in _STREAM_PINNED.items() if k[2][0] == (sf_dir, "c0")
     } == staged_after_first  # reused, not re-staged
-
-
-def test_r18_census_key_pack_gate(spark, sf_dir, monkeypatch):
-    """r18: on the big path the oriented pin packs (ddeg, dst) into one
-    long and the closure join keys on pk = src<<32 | dst WHEN the
-    measured id range fits [0, 2^31); out-of-range ids keep the
-    lexicographic three-column layout (the snowflake-id guard from
-    graph_triangles' docstring, now a measured branch). Both layouts
-    must produce the identical estimate — the packing is injective.
-    (Runs AFTER test_r13_doulion_cut_validation_and_pin_cache: the
-    forced fallback stages a third scratch pin for this cut, which
-    that test's ==2 staged-entries assertion must not see.)"""
-    import tstables_spark.plans.analytics as A
-
-    small = {tuple(r) for r in A.graph_triangles_approx(spark, sf_dir).collect()}
-    monkeypatch.setattr(A, "_EDGE_PIN_PAIRS_MAX", 1)
-    df = A.graph_triangles_approx(spark, sf_dir)
-    lp = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "shiftleft" in lp, lp  # packed: fixture ids fit 31 bits
-    assert {tuple(r) for r in df.collect()} == small
-
-    # forced fallback: the pack gate rejects, the lexicographic
-    # (src, dst, ddeg) layout stands, answer unchanged
-    monkeypatch.setattr(A, "_CENSUS_PACK_ID_MAX", 0)
-    df0 = A.graph_triangles_approx(spark, sf_dir)
-    lp0 = df0._jdf.queryExecution().optimizedPlan().toString()
-    assert "shiftleft" not in lp0, lp0
-    assert {tuple(r) for r in df0.collect()} == small
-    _census_sort_merge_leg(spark, sf_dir, monkeypatch, small)
 
 
 def test_r13_minhash_big_path_identical(spark, sf_dir, monkeypatch):

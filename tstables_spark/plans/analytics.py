@@ -16,7 +16,7 @@ row-scale data to the driver, and every aggregate is partial-agg
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tstables_spark._exact import exact_sum, sql_sum
@@ -1022,39 +1022,28 @@ _PR_BROADCAST_NODES_MAX = 2_000_000
 # relation.
 _EDGE_PIN_PAIRS_MAX = 50_000_000
 
-# Census-join broadcast bound (r17): below this MEASURED oriented-edge
-# count the big-path census broadcasts both build sides so the wedge
-# stream (the only corpus-scale relation in the census) is generated
-# and consumed in one pipelined stage — no exchange, no sort, no
-# shuffle files (the 100x probe put 95% of the census's 27k
-# task-seconds in exactly that wedge shuffle+SMJ). Sizing: the edge
-# relation is built into TWO hashed relations (src-keyed for the wedge
-# probe, (src,dst)-keyed for the closure), ~55 B/row each with map
-# overhead -> 20M rows ≈ 2.2 GB total, comfortable inside the default
-# 8g executor envelope and an order under the 512M-row/8 GB broadcast
-# hard cap. Above it the sort-merge path stands (a billion-edge sample
-# at true scale outgrows any broadcast).
+# Census broadcast bound: at most this many MEASURED oriented edges,
+# the census broadcasts both join build sides, so the wedge stream is
+# generated and closed in one pipelined stage with no exchange, sort
+# or shuffle file of its own (on the 100x fixture the wedge shuffle and
+# sort-merge join were 95% of the census's 27k task-seconds, SCALE.md
+# "r17 census decomposition"). The edge relation is built into two
+# hashed relations (src-keyed and (src, dst)-keyed) of ~55 B/row each:
+# 20M rows ~ 2.2 GB, inside a default 8g executor and an order under
+# Spark's 512M-row / 8 GB broadcast cap. Above it both joins
+# sort-merge.
 _CENSUS_BROADCAST_EDGES_MAX = 20_000_000
 
-# Census key-pack id bound (r18): on the big path the oriented pin is
-# stored as (src, ddeg<<32 | dst) — two longs instead of three — and
-# the closure join keys on one packed long, WHEN the measured id range
-# fits [0, 2^31) (the gate also guarantees ddeg <= n_nodes - 1 < 2^31,
-# so neither pack can overflow int64). Snowflake-scale ids fall back
-# to the lexicographic layout, exactly as graph_triangles' docstring
-# documents. Module constant so tests can force the fallback.
-_CENSUS_PACK_ID_MAX = 1 << 31
-
-# Census sort-merge partition sizing: above the broadcast bound both
-# census joins run on an explicit partition count, one per this many
-# measured oriented edges (never under the session's shuffle
-# partitions), so the per-task slice of the wedge stream, and with it
-# each task's sort and spill, stays bounded as the sample grows. AQE
-# does not coalesce an explicit count. At both measured points it
-# matches the x8 initial partition count the census used to take
-# from a session conf: 2.46M edges (10x events fixture, cut 40) on 4
-# cores -> 33 vs 32; 18.8M (100x fixture, p=1/16) on 32 cores -> 251
-# vs 256.
+# Census partition sizing, on both sides of the broadcast bound: the
+# wedge stream (and above the bound every census exchange) takes one
+# partition per this many measured oriented edges, never fewer than
+# the session's shuffle partitions, so each task's slice of the wedge
+# stream, and with it its time, sort and spill, stays bounded as the
+# graph grows. AQE does not coalesce an explicit count. At both
+# measured points it matches the x8 initial partition count the
+# census once took from a session conf: 2.46M edges (10x events
+# fixture, cut 40) on 4 cores -> 33 vs 32; 18.8M (100x fixture,
+# p=1/16) on 32 cores -> 251 vs 256.
 _CENSUS_EDGES_PER_PARTITION = 75_000
 
 # ECONOMICS bound, distinct from the OOM bound above: for a
@@ -1073,13 +1062,21 @@ _EDGE_STAGE_PAIRS_MIN = 1_000_000
 
 
 def _graph_scale_stats(b0: DataFrame, cap: int) -> tuple[int, int]:
-    """(distinct users, capped pair-mass upper bound) of the
-    co-occurrence graph over memberships ``b0`` — the two 1-row
-    statistics the graph queries pick physical strategies with (node
-    count → broadcast vs shuffled ranks; pair mass → pinned vs
-    streamed edge relations). Two aggregate-only jobs, nothing
-    edge-sized exists before either decision."""
+    """(distinct users, ``_pair_mass``) of the co-occurrence graph over
+    memberships ``b0`` — the two 1-row statistics the graph queries
+    pick physical strategies with (node count → broadcast vs shuffled
+    ranks; pair mass → pinned vs streamed edge relations). Two
+    aggregate-only jobs, nothing edge-sized exists before either
+    decision."""
     n = b0.agg(F.countDistinct("user_id").alias("n")).collect()[0]["n"]
+    return n, _pair_mass(b0, cap)
+
+
+def _pair_mass(b0: DataFrame, cap: int) -> int:
+    """Capped pair mass Σ min(occ, cap)·(min(occ, cap) − 1)/2 over the
+    buckets of distinct memberships ``b0``: an upper bound on the
+    co-occurrence graph's half edges, measured by one aggregate-only
+    job."""
     pairs = (
         b0.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1090,7 +1087,7 @@ def _graph_scale_stats(b0: DataFrame, cap: int) -> tuple[int, int]:
         )
         .collect()[0]["p"]
     )
-    return n, int(pairs or 0)
+    return int(pairs or 0)
 
 
 def _half_edge_bound(ev: DataFrame, cap: int) -> int | None:
@@ -1501,59 +1498,35 @@ def ts_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = None):
     """Degree-ordered oriented triangle census over a PINNED half-edge
-    list ``e(u, v)`` (u < v). Returns ``(tri, deg)``: ``tri`` is a
-    1-row DataFrame with the exact triangle count ``t``; ``deg`` the
-    (node, degree) relation. Every edge is oriented from its lower
-    (degree, id) endpoint, so each triangle is counted exactly once and
-    the wedge expansion is O(m^1.5) by the arboricity bound (see
-    graph_triangles). Shared by the exact census and the DOULION
-    estimator, which runs it on a sampled edge subset. ``big`` routes
-    the internal oriented-edge pin through ``_staging.pin``'s streamed
-    scratch table instead of a checkpoint.
+    list ``e(u, v)`` (u < v). Returns ``(tri, deg, m)``: ``tri`` has
+    one row ``(x, y, z)`` per triangle, oriented x→y, x→z, y→z,
+    ``deg`` the (node, degree) relation and ``m`` the number of edges
+    of ``e``. Every edge is oriented from its lower (degree, id)
+    endpoint, so each triangle appears exactly once and the wedge
+    expansion is O(m^1.5) by the arboricity bound (see
+    graph_triangles). Shared by the exact census, the DOULION
+    estimator, which runs it on a sampled edge subset, and their gate,
+    which counts the sampled triangles among the exact ones.
 
-    r17 big-path join strategy (guide §3.1/§8 — use what we know that
-    the 10 MB auto-broadcast estimate does not): the WEDGE STREAM is
-    the only thing here that is ever corpus-scale (Σ outdeg² rows; the
-    100x doulion probe measured the wedge shuffle+SMJ at 12.5 GB
-    written + 12.7 GB read = 95% of the query's 27k task-seconds,
-    SCALE.md "r17 census decomposition"), while the ORIENTED EDGE
-    relation it joins against is p·|E| rows — 18.8M at the 100x p=1/16
-    row, a few hundred MB hashed. So on the big path the pinned edge
-    relation's exact count (one parquet count-star over the staged
-    table, aggregate-pushdown fast) gates an explicit broadcast of
-    both census build sides: under the bound the wedge stream is
-    GENERATED AND CONSUMED IN ONE PIPELINED STAGE (scan -> probe ->
-    probe -> partial count) and never touches an exchange, sort, or
-    shuffle file. Above the bound the sort-merge path stands (at true
-    100 TB scale a billion-edge sample outgrows any broadcast), with
-    both joins on an explicit partition count sized from that same
-    measured edge count (``_census_partitions``).
-    The small path is untouched: sub-threshold relations already
-    auto-broadcast (the committed sf0.1 plan), and adding hints there
-    would only churn plans the bench pins.
+    Contract, the same at every size:
 
-    r18 big-path key packing (guide §2.3 "narrower types" / §3.1;
-    r17 verdict #1): graph_triangles' docstring rejects a composite
-    degree*K + id ORDER scalar because snowflake-scale ids overflow
-    int64 — but that is a data property, not a law, so the big path
-    MEASURES it (min/max over both id columns of the pinned half-edge
-    relation, one aggregate-pushdown job over the staged parquet) and,
-    when every id fits 31 bits, stores the oriented pin as TWO longs
-    instead of three: (src, ord = ddeg<<32 | dst). Effects, all on the
-    census's hot loop: the wedge tie-break becomes ONE long compare
-    (was a 2-level lexicographic (ddeg, dst) compare per probed row —
-    Σ outdeg² of them); the closure join keys on ONE packed long
-    pk = src<<32 | dst instead of a two-column key, which on the
-    broadcast path builds a LongHashedRelation (Spark's dense
-    long-keyed map — no UnsafeRow key allocation per probe) and above
-    the broadcast bound halves the wedge stream's shuffle/sort bytes
-    (one long per wedge, was two). Degrees cannot overflow the pack:
-    ddeg <= n_nodes - 1 < 2^31 whenever max id < 2^31. Ids out of
-    [0, 2^31) keep the lexicographic layout (correct at snowflake
-    scale, exactly as documented). The small path and the returned
-    ``deg`` relation are untouched either way, and the packing is
-    injective, so the census count — and the DOULION estimate — are
-    bit-identical by construction."""
+    - one layout: the oriented relation ``(src, dst, ddeg)``, compared
+      lexicographically, so any int64 id works. It is pinned once;
+      ``big`` routes that pin through ``_staging.pin``'s streamed
+      scratch table (``cache_key``) instead of a memory checkpoint.
+    - one count: ``m`` is counted once on the pin (on the big path a
+      parquet count-star on the staged table), before any join is
+      planned.
+    - one partition rule: the wedge stream, the only relation here
+      that grows past the edge count (Σ outdeg² rows), is the pinned
+      relation repartitioned by ``src`` to ``_census_partitions(m)``
+      partitions, whatever count the pin was left with.
+    - one join rule: when ``m <= _CENSUS_BROADCAST_EDGES_MAX`` both
+      build sides (src-keyed for the wedge probe, (src, dst)-keyed for
+      the closure) are broadcast, and the wedges are generated and
+      closed in one stage of that many tasks with no further
+      exchange. Above it both joins sort-merge on the same explicit
+      count."""
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -1568,79 +1541,22 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
     src = F.when(fwd, F.col("u")).otherwise(F.col("v"))
     dst = F.when(fwd, F.col("v")).otherwise(F.col("u"))
     ddeg = F.when(fwd, F.col("degv")).otherwise(F.col("degu"))
-    packed = False
-    if big:
-        # measured pack gate: one min/max aggregate over the staged
-        # half-edge parquet (footer pushdown; sub-second) — a MEASURED
-        # branch, not an estimate, per the r12 collected-statistics rule
-        r = e.agg(
-            F.min("u"), F.max("u"), F.min("v"), F.max("v")
-        ).collect()[0]  # 1-row contract-bounded collect
-        packed = (
-            r[0] is not None
-            and min(r[0], r[2]) >= 0
-            and max(r[1], r[3]) < _CENSUS_PACK_ID_MAX
-        )
-    if packed:
-        lo32 = F.lit(0xFFFFFFFF)  # LongType literal (> int32 max)
-        oe = (
-            e.join(du, "u")
-            .join(dv, "v")
-            .select(
-                src.cast("long").alias("src"),
-                F.shiftleft(ddeg.cast("long"), 32)
-                .bitwiseOR(dst.cast("long"))
-                .alias("ord"),
-            )
-        )
-        oe = pin(oe, big, "census_oe_pk", cache_key=cache_key)
-        a, b = oe.alias("a"), oe.alias("b")
-        c = oe.select(
-            F.shiftleft(F.col("src"), 32)
-            .bitwiseOR(F.col("ord").bitwiseAND(lo32))
-            .alias("pk")
-        )
-        m = oe.count()
-        n = None if m <= _CENSUS_BROADCAST_EDGES_MAX else _census_partitions(oe, m)
-        if n is None:
-            b, c = F.broadcast(b), F.broadcast(c)
-        else:
-            a = oe.repartition(n, "src").alias("a")
-            b = oe.repartition(n, "src").alias("b")
-            c = c.repartition(n, "pk")
-        wed = a.join(
-            b,
-            (F.col("a.src") == F.col("b.src"))
-            & (F.col("a.ord") < F.col("b.ord")),
-        ).select(
-            F.shiftleft(F.col("a.ord").bitwiseAND(lo32), 32)
-            .bitwiseOR(F.col("b.ord").bitwiseAND(lo32))
-            .alias("pk")
-        )
-        if n is not None:
-            wed = wed.repartition(n, "pk")
-        tri = wed.join(c, "pk").agg(F.count(F.lit(1)).alias("t"))
-        return tri, deg
     oe = (
         e.join(du, "u")
         .join(dv, "v")
         .select(src.alias("src"), dst.alias("dst"), ddeg.alias("ddeg"))
     )
     oe = pin(oe, big, "census_oe", cache_key=cache_key)
-    a, b, c = oe.alias("a"), oe.alias("b"), oe.alias("c")
-    n = None
-    if big:
-        # the count is a parquet count-star over the staged pin
-        # (aggregate pushdown; one sub-second job) — a MEASURED gate,
-        # not an estimate, per the r12 two-collected-statistics rule
-        m = oe.count()
-        if m <= _CENSUS_BROADCAST_EDGES_MAX:
-            b, c = F.broadcast(b), F.broadcast(c)
-        else:
-            n = _census_partitions(oe, m)
-            a = oe.repartition(n, "src").alias("a")
-            b = oe.repartition(n, "src").alias("b")
-            c = oe.repartition(n, "src", "dst").alias("c")
+    # one job: a global count over one coalesced partition has no exchange
+    m = oe.coalesce(1).count()
+    n = _census_partitions(oe, m)
+    a = oe.repartition(n, "src").alias("a")
+    bcast = m <= _CENSUS_BROADCAST_EDGES_MAX
+    if bcast:
+        b, c = F.broadcast(oe.alias("b")), F.broadcast(oe.alias("c"))
+    else:
+        b = oe.repartition(n, "src").alias("b")
+        c = oe.repartition(n, "src", "dst").alias("c")
     wed = a.join(
         b,
         (F.col("a.src") == F.col("b.src"))
@@ -1648,18 +1564,20 @@ def _oriented_census(e: DataFrame, big: bool = False, cache_key: tuple | None = 
             (F.col("a.ddeg") < F.col("b.ddeg"))
             | ((F.col("a.ddeg") == F.col("b.ddeg")) & (F.col("a.dst") < F.col("b.dst")))
         ),
-    ).select(F.col("a.dst").alias("y"), F.col("b.dst").alias("z"))
-    if n is not None:
+    ).select(
+        F.col("a.src").alias("x"), F.col("a.dst").alias("y"), F.col("b.dst").alias("z")
+    )
+    if not bcast:
         wed = wed.repartition(n, "y", "z")
     tri = wed.join(
         c, (F.col("c.src") == F.col("y")) & (F.col("c.dst") == F.col("z"))
-    ).agg(F.count(F.lit(1)).alias("t"))
-    return tri, deg
+    ).select("x", "y", "z")
+    return tri, deg, m
 
 
 def _census_partitions(oe: DataFrame, m: int) -> int:
-    """Partition count of the census's sort-merge joins over ``m``
-    measured oriented edges (see ``_CENSUS_EDGES_PER_PARTITION``)."""
+    """Partition count of the census's wedge stream over ``m`` measured
+    oriented edges (see ``_CENSUS_EDGES_PER_PARTITION``)."""
     floor = int(oe.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return max(floor, -(-m // _CENSUS_EDGES_PER_PARTITION))
 
@@ -1695,12 +1613,11 @@ def _validate_cut(cut: str) -> int:
     return keep
 
 
-def _doulion_sample(e: DataFrame, cut: str = _DOULION_CUT) -> DataFrame:
-    _validate_cut(cut)
-    key = F.concat(
-        F.col("u").cast("string"), F.lit("_"), F.col("v").cast("string")
-    )
-    return e.where(F.substring(F.md5(key), 1, 2) < cut)
+def _doulion_kept(u: Column, v: Column, cut: str = _DOULION_CUT) -> Column:
+    """Whether edge ``(u, v)``, u < v, is in the DOULION sample at a
+    validated ``cut``."""
+    key = F.concat(u.cast("string"), F.lit("_"), v.cast("string"))
+    return F.substring(F.md5(key), 1, 2) < cut
 
 
 _DOULION_EDGES_SQL = """
@@ -1775,11 +1692,10 @@ def graph_triangles_approx(
     # and the census's internal oriented-edge pin become streamed
     # scratch tables — no edge-sized checkpoint blocks on the heap
     # (see _staging.pin).
-    # Validate the knob BEFORE the scale-stats job — a malformed cut
+    # Validate the knob BEFORE the pair-mass job — a malformed cut
     # must fail free, not after a corpus aggregate.
     keep = _validate_cut(cut)  # md5-prefix cut 'xx' keeps keep/256 of edges
-    _, pair_est = _graph_scale_stats(b0, cap=256)
-    big = pair_est > _EDGE_PIN_PAIRS_MAX
+    big = _pair_mass(b0, cap=256) > _EDGE_PIN_PAIRS_MAX
     # Streamed scratch pins cached per (app, sf_dir, cut) — the sampled
     # edge list and the census's oriented-edge relation are pure
     # functions of (input, cut), so best-of-N bench repetition at 100x
@@ -1787,16 +1703,15 @@ def graph_triangles_approx(
     # (_staging.staged entries).
     ck = (sf_dir, cut)
     se = pin(
-        _doulion_sample(cooccurrence_edges(b0, cap=256), cut),
+        cooccurrence_edges(b0, cap=256).where(_doulion_kept(F.col("u"), F.col("v"), cut)),
         big,
         "doulion_se",
         cache_key=ck,
     )
-    tri, _ = _oriented_census(se, big=big, cache_key=ck)
-    ns = se.agg(F.count(F.lit(1)).alias("n_edges_sampled"))
-    return tri.crossJoin(F.broadcast(ns)).select(
+    tri, _, m = _oriented_census(se, big=big, cache_key=ck)
+    return tri.agg(F.count(F.lit(1)).alias("t")).select(
         F.col("t").alias("n_triangles_sampled"),
-        "n_edges_sampled",
+        F.lit(m).cast("long").alias("n_edges_sampled"),
         F.expr(f"t * {256 ** 3}L div {keep ** 3}L").alias("est_triangles"),
     )
 
@@ -1819,29 +1734,34 @@ def graph_triangles_approx(
 )
 def graph_triangles_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tolerance gate for graph_triangles_approx — the sim_recall /
-    agg_approx_* pattern: run the exact oriented census AND the DOULION
-    estimate on the same pinned edge list and emit the relative error
-    plus a checked ``within_tol`` (<= 15%) boolean. Hash-checked in
-    both engines (the estimate is deterministic, the error one exact
-    IEEE division of BIGINTs, the tolerance test pure integer
-    comparison — 0.15 * t is exact for t < 2^50). Observed: rel_err
-    0.0696 at sf0.01 (574 exact triangles), 0.0059-scale at sf0.1
-    (613k) — the 1/sqrt(t p^3) concentration in action. Runs at
-    fixture scale where the exact census is cheap; at 100x only the
-    estimator runs (the point of having it). Runs on the caller's
-    session (see graph_triangles)."""
+    agg_approx_* pattern: count the exact triangles AND the DOULION
+    estimate's sampled ones in one oriented census of the pinned edge
+    list (a triangle is in the sampled graph iff its three edges are
+    kept), and emit the relative error plus a checked ``within_tol``
+    (<= 15%) boolean. Hash-checked in both engines (the estimate is
+    deterministic, the error one exact IEEE division of BIGINTs, the
+    tolerance test pure integer comparison — 0.15 * t is exact for
+    t < 2^50). Observed: rel_err 0.0696 at sf0.01 (574 exact
+    triangles), 0.0059-scale at sf0.1 (613k) — the 1/sqrt(t p^3)
+    concentration in action. Runs at fixture scale where the exact
+    census is cheap; at 100x only the estimator runs (the point of
+    having it). Runs on the caller's session (see graph_triangles)."""
     ev = load(spark, sf_dir, "events")
     b0 = ev.select(
         "user_id", F.expr(epoch_floor_div("unix_micros(ts)", 60000000)).alias("bucket")
     )  # raw memberships: the edge aggregate dedups (r17)
     e = pin(cooccurrence_edges(b0, cap=256))
-    # the sampled subset filters the SAME pin — no second edge derivation
-    se = pin(_doulion_sample(e))
-    tri_e, _ = _oriented_census(e)
-    tri_s, _ = _oriented_census(se)
+    tri, _, _ = _oriented_census(e)
+
+    def kept(p: str, q: str) -> Column:
+        return _doulion_kept(F.least(p, q), F.greatest(p, q))
+
+    sampled = kept("x", "y") & kept("x", "z") & kept("y", "z")
     est = F.expr(f"ts * {_DOULION_NUM}L div {_DOULION_DEN}L")
     return (
-        tri_e.crossJoin(F.broadcast(tri_s.select(F.col("t").alias("ts"))))
+        tri.agg(
+            F.count(F.lit(1)).alias("t"), F.count(F.when(sampled, 1)).alias("ts")
+        )
         .select(
             F.col("t").alias("n_triangles"),
             est.alias("est_triangles"),
@@ -1932,25 +1852,26 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in both engines.
 
     Like every query, the census family runs on the caller's session
-    and its confs; the wedge shuffle's width is the session's shuffle
-    partition count, coalesced by AQE."""
+    and its confs. The wedge stream's width is sized from the measured
+    edge count, one partition per ``_CENSUS_EDGES_PER_PARTITION``
+    edges and never under the session's shuffle partition count; AQE
+    does not coalesce it (see ``_oriented_census``)."""
     ev = load(spark, sf_dir, "events")
     b0 = ev.select(
         "user_id", F.expr(epoch_floor_div("unix_micros(ts)", 60000000)).alias("bucket")
     )  # raw memberships: the edge aggregate dedups (r17)
     e = pin(cooccurrence_edges(b0, cap=256))
-    tri, deg = _oriented_census(e)
+    tri, deg, m = _oriented_census(e)
+    tri = tri.agg(F.count(F.lit(1)).alias("t"))
     w = deg.agg(
         F.sum(F.expr("degree * (degree - 1) div 2")).alias("wedges"),
         F.count(F.lit(1)).alias("n_nodes"),
     )
-    ne = e.agg(F.count(F.lit(1)).alias("n_edges"))
     return (
         tri.crossJoin(F.broadcast(w))
-        .crossJoin(F.broadcast(ne))
         .select(
             F.col("t").alias("n_triangles"),
-            "n_edges",
+            F.lit(m).cast("long").alias("n_edges"),
             "n_nodes",
             "wedges",
             F.when(
